@@ -94,12 +94,8 @@ def bench_cdc(spark, sf: float, cpus: int, n_events: int | None = None) -> dict:
             os.path.join(work, "ckpt"),
             max_files_per_trigger=int(os.environ.get("SPARK_GRAFT_MFTP", "64")),
         )
-        if os.environ.get("SPARK_GRAFT_TIMING") == "1":
-            print(f"TIMING stream_done t={time.time() % 100000:.1f}", flush=True)
         table = LakeTable.load(table_path)
         table.compact(spark)
-        if os.environ.get("SPARK_GRAFT_TIMING") == "1":
-            print(f"TIMING compact_done t={time.time() % 100000:.1f}", flush=True)
         elapsed = time.time() - t0
         n_in = sum(r.rows_in for r in res.lineage)
         # per-batch rates: every micro-batch is identical deterministic

@@ -208,11 +208,13 @@ def test_ingest_stats_cols_enable_col_range_pruning(spark, tmp_path, change_dir)
     assert len(planned) <= len(table.manifest["files"])
 
 
-def test_static_dim_enrichment_broadcast_join(spark, tmp_path, change_dir):
+@pytest.mark.parametrize("merge_mode", ["mor", "cow"])
+def test_static_dim_enrichment_broadcast_join(spark, tmp_path, change_dir, merge_mode):
     """Stream-static join: a small dimension broadcast-joined onto the
-    LWW winners; declared dim columns persist, and the fused plan keeps
-    its single-exchange shape (broadcast adds no shuffle)."""
-    from tiger_etl_spark.cdc.pipeline import _fused_dedup_extract
+    LWW winners; declared dim columns persist under both merge modes,
+    and the fused plan keeps its single-exchange shape (broadcast adds
+    no shuffle)."""
+    from tiger_etl_spark.cdc.pipeline import _shape_batch
     from tiger_etl_spark.cdc.schema_evolution import map_to_live_schema
 
     table = create_pages_table(
@@ -229,7 +231,7 @@ def test_static_dim_enrichment_broadcast_join(spark, tmp_path, change_dir):
         events = spark.read.schema(EVENTS_READ_SCHEMA).parquet(path)
         apply_changes(
             spark, table, events, batch_id=i,
-            enrichers=enrichers, static_dim=(dim, "lang"),
+            merge_mode=merge_mode, enrichers=enrichers, static_dim=(dim, "lang"),
         )
     assert_final_state_matches_oracle(spark, table, change_dir)
     rows = table.scan(spark).collect()
@@ -247,7 +249,7 @@ def test_static_dim_enrichment_broadcast_join(spark, tmp_path, change_dir):
     events = spark.read.schema(EVENTS_READ_SCHEMA).parquet(
         sorted(glob.glob(os.path.join(change_dir, "*.parquet")))[0]
     )
-    plan_df = _fused_dedup_extract(
+    plan_df = _shape_batch(
         table, map_to_live_schema(events.where(F.col("url").isNotNull())),
         enrichers, (dim, "lang"),
     )
@@ -262,7 +264,7 @@ def test_static_dim_guards(spark, tmp_path, change_dir):
     value wins; Column-expression join keys are refused."""
     import pytest as _pytest
 
-    from tiger_etl_spark.cdc.pipeline import _fused_dedup_extract
+    from tiger_etl_spark.cdc.pipeline import _shape_batch
     from tiger_etl_spark.cdc.schema_evolution import map_to_live_schema
 
     table = create_pages_table(
@@ -285,13 +287,13 @@ def test_static_dim_guards(spark, tmp_path, change_dir):
         [("en", "germanic", 999)],
         "lang string, lang_family string, content_len long",
     )
-    out = _fused_dedup_extract(table, mapped, None, (shadow_dim, "lang"))
+    out = _shape_batch(table, mapped, None, (shadow_dim, "lang"))
     row = out.where(F.col("lang") == "en").limit(1).collect()
     if row:  # stream's content_len wins over the dim's 999
         assert row[0]["content_len"] != 999
 
     with _pytest.raises(ValueError, match="column name"):
-        _fused_dedup_extract(
+        _shape_batch(
             table, mapped, None, (shadow_dim, F.col("lang") == shadow_dim["lang"])
         )
 

@@ -16,7 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from tiger_etl_spark.cdc.pipeline import _fused_dedup_extract, create_pages_table
+from tiger_etl_spark.cdc.pipeline import _shape_batch, create_pages_table
 from tiger_etl_spark.cdc.schema_evolution import map_to_live_schema
 from tiger_etl_spark.cdc.schemas import EVENTS_READ_SCHEMA
 from tiger_etl_spark.cdc.validate import with_validation
@@ -85,7 +85,7 @@ def test_fused_cdc_path_single_exchange(spark, tmp_path):
         .where(F.size("_invalid_reasons") == 0)
         .drop("_invalid_reasons")
     )
-    df = _fused_dedup_extract(table, mapped)
+    df = _shape_batch(table, mapped)
     plan = df._jdf.queryExecution().explainString(
         df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )

@@ -250,3 +250,90 @@ def test_clean_stream_with_audit_matches_oracle(spark, tmp_path):
         got = rows[url]["html"]
         assert (bytes(got) if got is not None else None) == e["html"]
         assert rows[url]["text"] == e["text"]
+
+
+def test_replay_audit_rejects_partial_table_enriches_like_live_ingest(
+    spark, tmp_path
+):
+    """A merge_policy='partial' table that declares an enrich column and
+    a static-dim column: the rows an audit-reject replay publishes must
+    carry both columns exactly as live ingest of the same (repaired)
+    change log does — the replay takes the same shaping path, enrichers
+    and static_dim included."""
+    from tiger_etl_spark.cdc.pipeline import replay_audit_rejects
+    from tiger_etl_spark.cdc.schemas import PAGES_SCHEMA
+
+    ddl = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in PAGES_SCHEMA.fields
+    )
+
+    def mk_table(name):
+        path = str(tmp_path / name)
+        LakeTable.create(
+            path,
+            f"{ddl}, lang_family string, lang_rank long",
+            key_col="url",
+            num_buckets=4,
+            merge_policy="partial",
+        )
+        return path
+
+    dim = spark.createDataFrame(
+        [("en", "germanic", 1), ("de", "germanic", 2), ("fr", "romance", 3)],
+        "lang string, lang_family string, dim_rank long",
+    )
+    enrichers = {"lang_rank": F.col("dim_rank") * 10}
+    kw = dict(enrichers=enrichers, static_dim=(dim, "lang"))
+
+    tp = mk_table("pages")
+    res = run_stream(
+        spark,
+        _mk_changes(tmp_path, poison=True),
+        tp,
+        str(tmp_path / "ckpt"),
+        max_files_per_trigger=1,
+        audit=_audit(),
+        audit_policy="quarantine",
+        **kw,
+    )
+    assert res.batches_rejected == 1
+    bad_id = res.audit_failures[0][0]
+    rdir = os.path.join(tp, "_audit_rejects", f"batch_id={bad_id}")
+    replayed_urls = {r["url"] for r in spark.read.parquet(rdir).collect()}
+
+    def fix(df):
+        return df.withColumn("content_len", F.length("html").cast("long"))
+
+    out = replay_audit_rejects(
+        spark, LakeTable.load(tp), fixer=fix, audit=_audit(), **kw
+    )
+    assert out["published"] == 1 and out["rows_applied"] > 0
+
+    live = mk_table("live")
+    run_stream(
+        spark,
+        _mk_changes(tmp_path, poison=False),
+        live,
+        str(tmp_path / "ckpt_live"),
+        max_files_per_trigger=1,
+        **kw,
+    )
+
+    cols = ["lang", "lang_family", "lang_rank", "content_len", "text"]
+
+    def state(path):
+        return {
+            r["url"]: tuple(r[c] for c in cols)
+            for r in LakeTable.load(path).scan(spark).collect()
+        }
+
+    got, want = state(tp), state(live)
+    assert got == want
+    rank = {"en": 10, "de": 20, "fr": 30}
+    family = {"en": "germanic", "de": "germanic", "fr": "romance"}
+    enriched = [
+        got[u] for u in replayed_urls if u in got and got[u][0] in rank
+    ]
+    assert enriched
+    for lang, fam, lrank, _, _ in enriched:
+        assert (fam, lrank) == (family[lang], rank[lang])

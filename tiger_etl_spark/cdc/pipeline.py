@@ -18,16 +18,19 @@ no-op under the LWW guard).
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import threading
 import time
+import uuid
 from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from tiger_etl_spark.cdc.schema_evolution import map_to_live_schema
-from tiger_etl_spark.cdc.schemas import PAGES_SCHEMA
+from tiger_etl_spark.cdc.schemas import EVENTS_READ_SCHEMA, PAGES_SCHEMA
 from tiger_etl_spark.cdc.validate import with_validation
 from tiger_etl_spark.functions.text import extract_text_udf
 from tiger_etl_spark.lake import LakeTable
@@ -236,13 +239,18 @@ def _checked_dim(static_dim: tuple, stream_cols: list[str]) -> DataFrame:
     return dim_df.drop(*shadowed) if shadowed else dim_df
 
 
-def _fused_dedup_extract(
+def _shape_batch(
     table: LakeTable,
     mapped: DataFrame,
     enrichers: dict | None = None,
     static_dim: tuple[DataFrame, object] | None = None,
 ) -> DataFrame:
-    """The hot path, one shuffle total (SURVEY.md §3 steps 3–5 fused):
+    """The one batch-shaping path of every ingest entry point (live
+    apply, quarantine replay, audit-reject replay), chosen only by the
+    table's merge policy.
+
+    merge_policy='lww' — the hot path, one shuffle total (SURVEY.md §3
+    steps 3–5 fused), merged as a PREPARED batch under mor and cow:
 
       repartition(num_buckets, url)        — the ONLY exchange; partition
                                              id == bucket (bucket_expr)
@@ -256,59 +264,72 @@ def _fused_dedup_extract(
                                              SortAggregate over a
                                              partition-local sort —
                                              pinned in test_plans.py)
-      → extract_text_udf(html)             — winners only, scalar Arrow/
+      → extract_text_udf on html           — winners only, scalar Arrow/
                                              pandas UDF: just the html
                                              column crosses the JVM↔
                                              Python boundary, not the row
 
-    The result is still laid out one-partition-per-bucket, so the merge
-    writes file-per-bucket with zero further shuffles. Losing events
-    never pay the extraction UDF; no per-row Python anywhere.
+    The result is still laid out one-partition-per-bucket, so a mor
+    merge writes file-per-bucket with zero further shuffles. Losing
+    events never pay the extraction UDF; no per-row Python anywhere.
+
+    merge_policy='partial' — raw events (op preserved, no batch
+    collapse; see LakeTable.merge): every event pays extraction.
+
+    Both then take the same static-dim join, enrichers and projection,
+    so a replay enriches exactly like live ingest.
     """
-    normalized = mapped.select(
-        "url",
-        "warc_ts",
-        "html",
-        "lang",
-        "content_len",
-        F.col("op_seq").cast("long").alias("_op_seq"),
-        (F.col("op") == "D").alias("_deleted"),
-    )
-    parts = normalized.repartition(table.num_buckets, F.col(table.key_col))
-    payload = [c for c in normalized.columns if c != "url"]
-    order = F.struct("warc_ts", "_op_seq")
-    winners = (
-        parts.groupBy("url")
-        .agg(F.max_by(F.struct(*payload), order).alias("_w"))
-        .select("url", "_w.*")
-    )
-    out = winners.select(
+    cols = [
         "url",
         "warc_ts",
         "html",
         extract_text_udf(F.col("html")).alias("text"),
         "lang",
         "content_len",
-        "_op_seq",
-        "_deleted",
-        table.bucket_expr().alias("_bucket"),
-    )
+    ]
+    if table.merge_policy == "lww":
+        normalized = mapped.select(
+            "url",
+            "warc_ts",
+            "html",
+            "lang",
+            "content_len",
+            F.col("op_seq").cast("long").alias("_op_seq"),
+            (F.col("op") == "D").alias("_deleted"),
+        )
+        parts = normalized.repartition(table.num_buckets, F.col(table.key_col))
+        payload = [c for c in normalized.columns if c != "url"]
+        order = F.struct("warc_ts", "_op_seq")
+        winners = (
+            parts.groupBy("url")
+            .agg(F.max_by(F.struct(*payload), order).alias("_w"))
+            .select("url", "_w.*")
+        )
+        lead, tail = [], ["_op_seq", "_deleted", "_bucket"]
+        out = winners.select(
+            *cols, "_op_seq", "_deleted", table.bucket_expr().alias("_bucket")
+        )
+    else:
+        lead, tail = ["op", "op_seq"], []
+        out = mapped.select(*lead, *cols)
     if static_dim is not None:
         # stream-static dimension enrichment: a BROADCAST left join with
         # a small dim table (host metadata, language families, domain
-        # reputation) on the winners-only, bucket-aligned stage — the
-        # broadcast preserves the partitioning, so the prepared merge
-        # still writes with zero further shuffles and losers never pay
-        # the join. Dim columns persist only if declared in the table
-        # schema (enrich_ddl); others feed `enrichers` expressions and
-        # are projected away below.
+        # reputation) — on the lww path it lands on the winners-only,
+        # bucket-aligned stage, the broadcast preserves the
+        # partitioning, so the prepared merge still writes with zero
+        # further shuffles and losers never pay the join. Dim columns
+        # persist only if declared in the table schema (enrich_ddl);
+        # others feed `enrichers` expressions and are projected away
+        # below.
         out = out.join(F.broadcast(_checked_dim(static_dim, out.columns)), static_dim[1], "left")
     if enrichers:
         # derived columns materialized at ingest (quality scores, token
-        # counts, fingerprints): computed on WINNERS only, inside the
-        # same bucket-aligned stage — no extra shuffle, losers never
-        # pay, and scans filter on the stored column instead of
-        # recomputing (the CCNet/RefinedWeb "score at ingest" pattern)
+        # counts, fingerprints): on the lww path computed on WINNERS
+        # only, inside the same bucket-aligned stage — no extra shuffle,
+        # losers never pay, and scans filter on the stored column
+        # instead of recomputing (the CCNet/RefinedWeb "score at ingest"
+        # pattern)
         out = out.withColumns(dict(enrichers))
     if static_dim is not None:
         # project to the table's physical columns: un-declared dim
@@ -320,10 +341,51 @@ def _fused_dedup_extract(
             ).schema.fields
         ]
         have = set(out.columns)
-        out = out.select(
-            *[f for f in fields if f in have], "_op_seq", "_deleted", "_bucket"
-        )
+        out = out.select(*lead, *[f for f in fields if f in have], *tail)
     return out
+
+
+def _merge_events(
+    spark: SparkSession,
+    table: LakeTable,
+    mapped: DataFrame,
+    enrichers: dict | None,
+    static_dim: tuple[DataFrame, object] | None,
+    mode: str = "mor",
+    props_updates_fn=None,
+):
+    """Shape `mapped` (validated events in the live schema) and merge it."""
+    return table.merge(
+        spark,
+        _shape_batch(table, mapped, enrichers, static_dim),
+        mode=mode,
+        prepared=table.merge_policy == "lww",
+        props_updates_fn=props_updates_fn,
+    )
+
+
+def _revalidate(spark: SparkSession, path: str, fixer) -> tuple:
+    """The replay preamble: read the dead-lettered wire rows under
+    `path`, apply the optional `fixer(df) -> df` repair, re-validate.
+    Returns (now-valid rows in the live schema, still-invalid rows in
+    dead-letter layout, n_ok, n_bad); the counts are one job."""
+    df = spark.read.schema(EVENTS_READ_SCHEMA).parquet(path)
+    if fixer is not None:
+        df = fixer(df)
+    checked = with_validation(df)
+    is_valid = F.size("_invalid_reasons") == 0
+    counts = checked.select(
+        F.sum(is_valid.cast("long")).alias("ok"),
+        F.sum((~is_valid).cast("long")).alias("bad"),
+    ).first()
+    return (
+        map_to_live_schema(checked.where(is_valid).drop("_invalid_reasons")),
+        checked.where(~is_valid).withColumn(
+            "_invalid_reasons", F.array_join("_invalid_reasons", ",")
+        ),
+        counts["ok"] or 0,
+        counts["bad"] or 0,
+    )
 
 
 # Applied-batch bookkeeping is BOUNDED: Structured Streaming delivers
@@ -387,20 +449,12 @@ def apply_changes(
             snapshot_id=table.manifest["snapshot_id"],
         )
 
-    timing = os.environ.get("SPARK_GRAFT_TIMING") == "1"
-    marks: list[tuple[str, float]] = [("start", time.time())]
-
-    def mark(name: str) -> None:
-        if timing:
-            marks.append((name, time.time()))
-
+    t0 = time.time()
     # ONE Spark job per micro-batch: every lineage counter rides the
     # write job as an Observation (CollectMetrics on the scan side of the
     # shuffle) instead of its own aggregation pass — per-batch driver
     # jobs are the fixed cost that bounds streaming throughput and
     # scaling efficiency.
-    from pyspark.sql import Observation
-
     checked = with_validation(events)
     is_valid = F.size("_invalid_reasons") == 0
 
@@ -451,9 +505,6 @@ def apply_changes(
     # joined before apply_changes returns or raises; an all-valid batch
     # leaves no (empty) dir behind; a failed merge removes the batch's
     # dead-letter dir so nothing stray outlives an uncommitted batch.
-    import shutil
-    import threading
-
     qdir = os.path.join(table.path, "_quarantine", f"batch_id={batch_id}")
     q_err: list[Exception] = []
 
@@ -488,7 +539,6 @@ def apply_changes(
             # empty scan, so the extra pass is paid only in this rare
             # degenerate case.
             m = unobserved.agg(*metric_cols()).first().asDict()
-        mark("observe")
         record.offset_start = m["offset_start"] or ""
         record.offset_end = m["offset_end"] or ""
         record.rows_in = m["rows_in"]
@@ -500,7 +550,6 @@ def apply_changes(
             raise q_err[0]
         if not record.rows_quarantined:
             shutil.rmtree(qdir, ignore_errors=True)
-        mark("quarantine")
         high_wm = m["max_ts"]
         if prev_wm is not None and (high_wm is None or str(high_wm) < prev_wm):
             high_wm = prev_wm  # watermark never regresses
@@ -511,47 +560,10 @@ def apply_changes(
         }
 
     try:
-        if merge_mode == "mor" and table.merge_policy == "lww":
-            batch = _fused_dedup_extract(table, mapped, enrichers, static_dim)
-            stats = table.merge(
-                spark, batch, mode="mor", prepared=True, props_updates_fn=commit_props
-            )
-            mark("merge")
-        else:
-            # partial-policy tables store raw events (no batch collapse;
-            # see LakeTable.merge) — the fused winners-only path does
-            # not apply, so every event pays extraction
-            from tiger_etl_spark.functions.text import extract_text_udf
-
-            batch = mapped.withColumn(
-                "text", extract_text_udf(F.col("html"))
-            ).select(
-                "op", "op_seq", "url", "warc_ts", "html", "text", "lang", "content_len"
-            )
-            if static_dim is not None:
-                # same stream-static enrichment as the fused path —
-                # silently dropping the flag on cow/partial tables would
-                # null declared dim columns (or crash enrichers that
-                # reference dim fields) with no signal to the operator
-                batch = batch.join(
-                    F.broadcast(_checked_dim(static_dim, batch.columns)),
-                    static_dim[1],
-                    "left",
-                )
-            if enrichers:
-                batch = batch.withColumns(dict(enrichers))
-            if static_dim is not None:
-                fields = [
-                    f.name
-                    for f in spark.createDataFrame([], table.schema_ddl).schema.fields
-                ]
-                have = set(batch.columns)
-                batch = batch.select(
-                    "op", "op_seq", *[f for f in fields if f in have]
-                )
-            stats = table.merge(
-                spark, batch, mode=merge_mode, props_updates_fn=commit_props
-            )
+        stats = _merge_events(
+            spark, table, mapped, enrichers, static_dim,
+            mode=merge_mode, props_updates_fn=commit_props,
+        )
     except BaseException:
         # failed (uncommitted) batch: no thread outlives this call, no
         # dead-letter rows remain for a batch that never committed
@@ -562,18 +574,8 @@ def apply_changes(
     record.snapshot_id = stats.snapshot_id
     record.rows_applied = stats.rows_upserted
     record.partition_counts = stats.partition_counts
-    record.batch_seconds = round(time.time() - marks[0][1], 3)
+    record.batch_seconds = round(time.time() - t0, 3)
     _write_lineage(table, record)
-    mark("lineage")
-    if timing:
-        deltas = {
-            marks[i][0]: round(marks[i][1] - marks[i - 1][1], 3)
-            for i in range(1, len(marks))
-        }
-        print(
-            f"TIMING batch={batch_id} t={time.time() % 100000:.1f} {deltas}",
-            flush=True,
-        )
     return record
 
 
@@ -620,8 +622,6 @@ def read_quarantine(spark: SparkSession, table: LakeTable) -> DataFrame:
     quarantine dir at all (the common case), so absence = empty."""
     qdir = os.path.join(table.path, "_quarantine")
     if not os.path.isdir(qdir):
-        from tiger_etl_spark.cdc.schemas import EVENTS_READ_SCHEMA
-
         return spark.createDataFrame([], EVENTS_READ_SCHEMA).withColumns(
             {
                 "_invalid_reasons": F.lit(None).cast("string"),
@@ -644,7 +644,7 @@ def replay_quarantine(
 
     Per quarantined batch dir: read the original wire-schema rows, apply
     the optional `fixer(df) -> df` repair transform, re-validate, run
-    now-valid rows through the same fused dedup→extract→MERGE hot path
+    now-valid rows through the same batch-shaping path (`_shape_batch`)
     as live ingest, and rewrite the dir with only the rows that are
     STILL invalid (removing it when none are). Deliberately does NOT
     touch the applied-batch ledger — those ids belong to the stream's
@@ -654,16 +654,7 @@ def replay_quarantine(
     the next call. An administrative operation (one merge commit per
     dead-letter batch), not a hot-path one.
     """
-    import glob
-    import shutil
-
-    from tiger_etl_spark.cdc.schemas import EVENTS_READ_SCHEMA
-
     qroot = os.path.join(table.path, "_quarantine")
-    read_schema = T.StructType(
-        list(EVENTS_READ_SCHEMA.fields)
-        + [T.StructField("_invalid_reasons", T.StringType(), True)]
-    )
     out = {"batches": 0, "rows_applied": 0, "rows_still_invalid": 0}
     # crash recovery for the rewrite swap below: an aside dir whose
     # batch dir is missing means we died between the two renames —
@@ -677,62 +668,17 @@ def replay_quarantine(
         else:
             os.rename(aside, target)
     for qdir in sorted(glob.glob(os.path.join(qroot, "batch_id=*"))):
-        df = spark.read.schema(read_schema).parquet(qdir).drop("_invalid_reasons")
-        if fixer is not None:
-            df = fixer(df)
-        checked = with_validation(df)
-        is_valid = F.size("_invalid_reasons") == 0
-        counts = checked.select(
-            F.sum(is_valid.cast("long")).alias("ok"),
-            F.sum((~is_valid).cast("long")).alias("bad"),
-        ).first()
-        n_ok, n_bad = counts["ok"] or 0, counts["bad"] or 0
+        mapped, still, n_ok, n_bad = _revalidate(spark, qdir, fixer)
         if n_ok:
-            mapped = map_to_live_schema(checked.where(is_valid).drop("_invalid_reasons"))
-            if table.merge_policy == "lww":
-                # pass static_dim exactly as live ingest did — a replay
-                # that enriched differently would null dim columns
-                batch = _fused_dedup_extract(table, mapped, enrichers, static_dim)
-                table.merge(spark, batch, mode="mor", prepared=True)
-            else:
-                # partial-policy tables store raw events (see apply_changes)
-                batch = mapped.withColumn(
-                    "text", extract_text_udf(F.col("html"))
-                ).select(
-                    "op", "op_seq", "url", "warc_ts",
-                    "html", "text", "lang", "content_len",
-                )
-                if static_dim is not None:
-                    batch = batch.join(
-                        F.broadcast(_checked_dim(static_dim, batch.columns)),
-                        static_dim[1],
-                        "left",
-                    )
-                if enrichers:
-                    batch = batch.withColumns(dict(enrichers))
-                if static_dim is not None:
-                    fields = [
-                        f.name
-                        for f in spark.createDataFrame(
-                            [], table.schema_ddl
-                        ).schema.fields
-                    ]
-                    have = set(batch.columns)
-                    batch = batch.select(
-                        "op", "op_seq", *[f for f in fields if f in have]
-                    )
-                table.merge(spark, batch, mode="mor")
+            # pass static_dim exactly as live ingest did — a replay
+            # that enriched differently would null dim columns
+            _merge_events(spark, table, mapped, enrichers, static_dim)
         if n_bad:
-            still = checked.where(~is_valid).withColumn(
-                "_invalid_reasons", F.array_join("_invalid_reasons", ",")
-            )
             # tmp name must sit OUTSIDE the `batch_id=*` glob namespace
             # (and be dot-hidden from partition discovery): a crash
             # between write and rename must never leave a phantom dir a
             # later replay or read_quarantine would treat as a batch
-            import uuid as _uuid
-
-            tmp = os.path.join(qroot, f".replay-tmp-{_uuid.uuid4().hex}")
+            tmp = os.path.join(qroot, f".replay-tmp-{uuid.uuid4().hex}")
             still.write.mode("overwrite").parquet(tmp)
             # swap via aside-rename, not rmtree-then-rename: a crash
             # between an rmtree and the rename would leave the
@@ -742,7 +688,7 @@ def replay_quarantine(
             # rows visible under either the old or the new dir.
             aside = os.path.join(
                 qroot,
-                f".replaced-{os.path.basename(qdir)}-{_uuid.uuid4().hex}",
+                f".replaced-{os.path.basename(qdir)}-{uuid.uuid4().hex}",
             )
             os.rename(qdir, aside)
             os.rename(tmp, qdir)
@@ -757,12 +703,8 @@ def replay_quarantine(
 
 def read_audit_rejects(spark: SparkSession, table: LakeTable) -> DataFrame:
     """All audit-rejected batches' raw wire rows, with their batch id."""
-    import glob as _glob
-
-    from tiger_etl_spark.cdc.schemas import EVENTS_READ_SCHEMA
-
     root = os.path.join(table.path, "_audit_rejects")
-    dirs = sorted(_glob.glob(os.path.join(root, "batch_id=*")))
+    dirs = sorted(glob.glob(os.path.join(root, "batch_id=*")))
     if not dirs:
         return spark.createDataFrame([], EVENTS_READ_SCHEMA).withColumn(
             "_reject_batch_id", F.lit(None).cast("long")
@@ -797,9 +739,9 @@ def replay_audit_rejects(
     `fixer(df) -> df` repair, re-validate (rows the fixer could not
     save are routed into the normal per-row quarantine dead-letter for
     this batch when the repair publishes — `replay_quarantine` is their
-    recovery loop), then merge through the SAME fused hot path — STAGED,
-    and re-judged
-    by `audit` (an AuditSpec, typically the same spec the stream ran):
+    recovery loop), then merge through the SAME batch-shaping path as
+    live ingest (enrichers and static_dim included) — STAGED, and
+    re-judged by `audit` (an AuditSpec, typically the same spec the stream ran):
     a repair that still fails the gate aborts trace-free and keeps the
     reject dir for another round. On publish the dir is removed and the
     batch's `audit_rejected` prop entry cleared (it stays in the
@@ -809,10 +751,6 @@ def replay_audit_rejects(
     re-replays a merge whose rows are LWW no-ops, the audit passes on
     the already-repaired state, and the dir is removed then.
     """
-    import glob as _glob
-    import shutil as _shutil
-
-    from tiger_etl_spark.cdc.schemas import EVENTS_READ_SCHEMA
     from tiger_etl_spark.lake.wap import abort_staged, manifest_rows
 
     root = os.path.join(table.path, "_audit_rejects")
@@ -823,42 +761,18 @@ def replay_audit_rejects(
         "rows_applied": 0,
         "rows_dropped_invalid": 0,
     }
-    for rdir in sorted(_glob.glob(os.path.join(root, "batch_id=*"))):
+    for rdir in sorted(glob.glob(os.path.join(root, "batch_id=*"))):
         bid = int(os.path.basename(rdir).split("=", 1)[1])
-        df = spark.read.schema(EVENTS_READ_SCHEMA).parquet(rdir)
-        if fixer is not None:
-            df = fixer(df)
-        checked = with_validation(df)
-        is_valid = F.size("_invalid_reasons") == 0
-        counts = checked.select(
-            F.sum(is_valid.cast("long")).alias("ok"),
-            F.sum((~is_valid).cast("long")).alias("bad"),
-        ).first()
-        n_ok, n_bad = counts["ok"] or 0, counts["bad"] or 0
+        mapped, still, n_ok, n_bad = _revalidate(spark, rdir, fixer)
         out["batches"] += 1
         out["rows_dropped_invalid"] += n_bad
         if not n_ok:
             continue
-        mapped = map_to_live_schema(
-            checked.where(is_valid).drop("_invalid_reasons")
-        )
         base_rows = manifest_rows(table)
         pre_paths = {f["path"] for f in table.manifest["files"]}
         table._defer_pointer = True
         try:
-            if table.merge_policy == "lww":
-                batch = _fused_dedup_extract(table, mapped, enrichers, static_dim)
-                table.merge(spark, batch, mode="mor", prepared=True)
-            else:
-                from tiger_etl_spark.functions.text import extract_text_udf
-
-                batch = mapped.withColumn(
-                    "text", extract_text_udf(F.col("html"))
-                ).select(
-                    "op", "op_seq", "url", "warc_ts", "html", "text",
-                    "lang", "content_len",
-                )
-                table.merge(spark, batch, mode="mor")
+            _merge_events(spark, table, mapped, enrichers, static_dim)
             res = None
             if audit is not None:
                 # same delta scope as the streaming gate: judge only the
@@ -890,12 +804,10 @@ def replay_audit_rejects(
             # preserve the rows the fixer could not save: they re-enter
             # the per-row dead-letter (their original stream-time copy
             # was subsumed into this reject dir when the batch bounced)
-            checked.where(~is_valid).withColumn(
-                "_invalid_reasons", F.array_join("_invalid_reasons", ",")
-            ).write.mode("overwrite").parquet(
+            still.write.mode("overwrite").parquet(
                 os.path.join(table.path, "_quarantine", f"batch_id={bid}")
             )
-        _shutil.rmtree(rdir, ignore_errors=True)
+        shutil.rmtree(rdir, ignore_errors=True)
         rejected = dict(table.props.get("audit_rejected", {}))
         if rejected.pop(str(bid), None) is not None:
             table.update_props({"audit_rejected": rejected})

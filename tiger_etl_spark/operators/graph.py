@@ -368,16 +368,15 @@ def components(
     """
     fwd = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     if small_graph_threshold:
-        # regime probe: limit(k+1).count() ships ONE scalar to the
-        # driver (CollectLimit stops early on big graphs) — a large
-        # graph never materializes rows driver-side. Only when the
-        # probe says "small" is the edge list collected, so the driver
-        # bound is threshold × key width BY CHOICE of regime: ~16 MB
-        # for (long,long) edges at the 1M default, proportionally more
-        # for string keys (hosts/urls) — size the threshold down if
-        # driver memory is tight with wide keys.
-        if fwd.limit(small_graph_threshold + 1).count() <= small_graph_threshold:
-            probe = fwd.collect()
+        # one bounded collect decides the regime AND feeds the small
+        # path: the plan's CollectLimit stops at k+1 rows, so a large
+        # graph never ships more than k+1 edges to the driver. The
+        # driver bound is threshold × key width: ~16 MB for (long,long)
+        # edges at the 1M default, proportionally more for string keys
+        # (hosts/urls) — size the threshold down if driver memory is
+        # tight with wide keys.
+        probe = fwd.limit(small_graph_threshold + 1).collect()
+        if len(probe) <= small_graph_threshold:
             parent: dict = {}
 
             def find(x):

@@ -14,7 +14,18 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 1)))
+
+
+def driver_memory() -> str:
+    """The driver heap: SPARK_GRAFT_DRIVER_MEM when set, else ~60% of
+    host RAM (MemTotal, via sysconf) capped at 48g — a fixed 48g default
+    cannot start the JVM on a smaller host."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override is not None:
+        return override
+    mem = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(int(mem * 0.6) >> 20, 48 << 10)}m"
 
 
 def _local_dir() -> str | None:
@@ -46,6 +57,7 @@ def get_spark(
     """
     cores = cores or default_parallelism()
     shuffle_partitions = shuffle_partitions or cores
+    driver_mem = driver_memory()
     # Executor Python workers must import this package (mapInPandas /
     # pandas UDF closures reference it). Local mode inherits the driver
     # env — prepend the package root to PYTHONPATH before JVM start; on
@@ -87,7 +99,7 @@ def get_spark(
         # full-Unicode case edge cases can flip it back via extra_conf.
         .config("spark.sql.icu.caseMappings.enabled", "false")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         # Throughput GC with a fixed heap: no concurrent-cycle overhead,
         # no heap resize/uncommit churn mid-stream (measured ~7% on the
         # CDC bench; see BENCH/BASELINE.md protocol)
@@ -95,7 +107,7 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             os.environ.get(
                 "SPARK_GRAFT_JAVA_OPTS",
-                f"-XX:+UseParallelGC -Xms{os.environ.get('SPARK_GRAFT_DRIVER_MEM', '48g')}",
+                f"-XX:+UseParallelGC -Xms{driver_mem}",
             ),
         )
     )
