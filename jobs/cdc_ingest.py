@@ -34,6 +34,7 @@ import os
 import sys
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import DataType
 
 # local runs: repo root on sys.path (cluster runs get the package via
 # --py-files, which spark-submit adds to the path itself)
@@ -223,15 +224,8 @@ def main() -> None:
             # compare PARSED schemas, not string-split DDL: types that
             # contain ', ' (decimal(10, 2), structs) would shred into
             # garbage tokens and mis-detect missing columns
-            have = {
-                f.name
-                for f in spark.createDataFrame([], tbl.schema_ddl).schema.fields
-            }
-            missing = [
-                f
-                for f in spark.createDataFrame([], ddl).schema.fields
-                if f.name not in have
-            ]
+            have = set(DataType.fromDDL(tbl.schema_ddl).names)
+            missing = [f for f in DataType.fromDDL(ddl).fields if f.name not in have]
             if missing:
                 add = ", ".join(
                     f"{f.name} {f.dataType.simpleString()}" for f in missing
@@ -272,7 +266,7 @@ def main() -> None:
         pages = LakeTable.load(args.table)
         types = {
             f.name: f.dataType.simpleString()
-            for f in spark.createDataFrame([], pages.schema_ddl).schema.fields
+            for f in DataType.fromDDL(pages.schema_ddl).fields
         }
         attrs = [c.strip() for c in args.history_attrs.split(",") if c.strip()]
         unknown = [c for c in attrs if c not in types]

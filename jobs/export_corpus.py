@@ -34,6 +34,7 @@ import os
 import sys
 
 from pyspark.sql import SparkSession
+from pyspark.sql.types import DataType
 
 # local runs: repo root on sys.path (cluster runs get the package via
 # --py-files, which spark-submit adds to the path itself)
@@ -118,10 +119,7 @@ def main() -> None:
     table = LakeTable.load(args.table)
     row_filter = None
     if args.exclude_noindex:
-        have = {
-            f.name
-            for f in spark.createDataFrame([], table.schema_ddl).schema.fields
-        }
+        have = set(DataType.fromDDL(table.schema_ddl).names)
         if "noindex" not in have:
             raise SystemExit(
                 "--exclude-noindex needs a stored `noindex` column — "
@@ -129,10 +127,7 @@ def main() -> None:
             )
         row_filter = ~F.coalesce(F.col("noindex"), F.lit(False))
     if args.exclude_url_flagged:
-        have = {
-            f.name
-            for f in spark.createDataFrame([], table.schema_ddl).schema.fields
-        }
+        have = set(DataType.fromDDL(table.schema_ddl).names)
         if "url_ok" not in have:
             raise SystemExit(
                 "--exclude-url-flagged needs a stored `url_ok` column — "

@@ -119,6 +119,39 @@ def test_compact_collapses_deltas_and_gcs_tombstones(spark, table):
     assert internal.where(F.col("_deleted")).count() == 0
 
 
+@pytest.mark.parametrize("layout", ["empty", "clean", "dirty", "mixed"])
+def test_scan_same_rows_and_schema_for_every_bucket_layout(spark, table, layout):
+    """Whichever legs a snapshot has — none, only base (clean) buckets,
+    only delta (dirty) buckets, or both — scan() returns the live schema
+    and the LWW state."""
+    rows = [("I", i, f"k{i}", i, f"v{i}") for i in range(12)]
+    later = [("U", 20, "k1", 50, "w1"), ("D", 21, "k2", 51, None)]
+    want = {}
+    if layout != "empty":
+        table.merge(spark, batch_df(spark, rows), mode="mor" if layout == "dirty" else "cow")
+        table.merge(spark, batch_df(spark, later), mode="cow" if layout == "clean" else "mor")
+        want = {f"k{i}": (ts(i), f"v{i}") for i in range(12) if i != 2}
+        want["k1"] = (ts(50), "w1")
+    dirty = {f["bucket"] for f in table.manifest["files"] if f["kind"] == "delta"}
+    clean = {f["bucket"] for f in table.manifest["files"]} - dirty
+    assert (bool(clean), bool(dirty)) == {
+        "empty": (False, False),
+        "clean": (True, False),
+        "dirty": (False, True),
+        "mixed": (True, True),
+    }[layout]
+    got = {
+        r["url"]: (r["warc_ts"].astimezone(UTC), r["text"])
+        for r in table.scan(spark).collect()
+    }
+    assert got == want
+    assert table.scan(spark).schema == spark.createDataFrame([], DDL).schema
+    assert (
+        table.scan(spark, include_internal=True, include_tombstones=True).schema
+        == spark.createDataFrame([], table._physical_ddl()).schema
+    )
+
+
 def test_snapshot_isolation_reader_sees_old_version(spark, table):
     table.merge(spark, batch_df(spark, [("I", 1, "a", 1, "a1")]))
     old = LakeTable.load(table.path)

@@ -1257,6 +1257,23 @@ def test_probe_media_meta_real_headers(spark):
     m = multimodal.probe_media_meta(mp3)
     assert (m["media_type"], m["codec"]) == ("audio/mpeg", "mp3")
     assert m["duration_ms"] == (16004 * 8 * 1000) // 128000
+    # a sync-like prefix is not enough: a JPEG APP1 (Exif) fragment and
+    # frame headers with a reserved layer / samplerate / bad bitrate
+    # stay all-null, while a valid MPEG2 Layer III header is audio/mpeg
+    app1 = b"\xff\xe1\x00\x16Exif\x00\x00" + b"\x00" * 20
+    for fake in (
+        app1,
+        bytes([0xFF, 0xF9, 0x90, 0x00]) + b"\x00" * 40,  # layer reserved
+        bytes([0xFF, 0xFB, 0x9C, 0x00]) + b"\x00" * 40,  # samplerate reserved
+        bytes([0xFF, 0xFB, 0xF0, 0x00]) + b"\x00" * 40,  # bitrate index 15
+        bytes([0xFF, 0xEB, 0x90, 0x00]) + b"\x00" * 40,  # version reserved
+    ):
+        m = multimodal.probe_media_meta(fake)
+        assert (m["media_type"], m["codec"], m["duration_ms"]) == (
+            None, None, None,
+        ), fake[:4]
+    m = multimodal.probe_media_meta(bytes([0xFF, 0xF3, 0x90, 0x00]) + b"\x00" * 40)
+    assert (m["media_type"], m["codec"]) == ("audio/mpeg", "mpeg-audio")
     # junk / truncated never raise
     for junk in (None, b"", b"\x00" * 40, base[:5], wav[:13], b"ID3" + b"\x00" * 20):
         out = multimodal.probe_media_meta(junk)

@@ -97,6 +97,90 @@ def test_fused_cdc_path_single_exchange(spark, tmp_path):
     assert "REPARTITION_BY_NUM" in plan, plan
 
 
+def _values_batch(spark, rows):
+    """A CDC batch as a JVM-local relation (SQL VALUES), so a plan
+    check on what is built from it sees only the engine's own nodes."""
+    vals = ", ".join(
+        f"('{op}', {sq}L, '{u}', TIMESTAMP'2025-01-01 00:00:00' + "
+        f"INTERVAL {t} SECONDS, '{x}')"
+        for op, sq, u, t, x in rows
+    )
+    return spark.sql(
+        f"SELECT * FROM VALUES {vals} AS t(op, op_seq, url, warc_ts, text)"
+    )
+
+
+@pytest.fixture()
+def mor_table(spark, tmp_path):
+    """An uncompacted merge-on-read table: two delta commits, no base
+    file — every planned file is in a dirty bucket. Returns the table
+    and the versions before and after its commits."""
+    from tiger_etl_spark.lake import LakeTable
+
+    table = LakeTable.create(
+        str(tmp_path / "mor"), "url string, warc_ts timestamp, text string",
+        key_col="url", num_buckets=4,
+    )
+    v0 = table.manifest["version"]
+    rows = [("I", i, f"k{i}", i, f"v{i}") for i in range(8)]
+    table.merge(spark, _values_batch(spark, rows))
+    table.merge(spark, _values_batch(spark, [("U", 9, "k1", 20, "w1")]))
+    assert {f["kind"] for f in table.manifest["files"]} == {"delta"}
+    return table, v0, table.manifest["version"]
+
+
+def test_lake_reads_launch_no_python_relation(spark, mor_table):
+    """Lake read plans call no UDF, so they must not cross into Python:
+    no `Scan ExistingRDD` (a Python-backed relation, one worker task per
+    core) in a lookup, a window scan or a change feed over an
+    uncompacted merge-on-read table, whose clean leg is always empty."""
+    import datetime as dt
+
+    table, v0, v1 = mor_table
+    lo = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+    for df in (
+        table.lookup(spark, "k1"),
+        table.scan(spark, ts_range=(lo, lo + dt.timedelta(seconds=30))),
+        table.changes_between(spark, v0, v1),
+    ):
+        plan = plan_of(df)
+        assert "ExistingRDD" not in plan, plan
+    assert table.lookup(spark, "k1").collect()[0]["text"] == "w1"
+    assert table.changes_between(spark, v0, v1).count() == 8
+
+
+def test_read_files_empty_is_zero_partitions_live_schema(spark, mor_table):
+    table, _, _ = mor_table
+    empty = table._read_files(spark, [])
+    assert empty.rdd.getNumPartitions() == 0
+    assert empty.schema == spark.createDataFrame([], table._physical_ddl()).schema
+
+
+def test_cow_merge_into_fresh_table_no_python_relation(spark, tmp_path, monkeypatch):
+    """A copy-on-write merge into buckets with no files yet unions the
+    batch with an empty current state: that state must not be a Python
+    relation either."""
+    from tiger_etl_spark.lake import LakeTable
+
+    table = LakeTable.create(
+        str(tmp_path / "cow"), "url string, warc_ts timestamp, text string",
+        key_col="url", num_buckets=4,
+    )
+    plans = []
+    write_data = LakeTable._write_data
+
+    def spy(self, spark_, df, *args, **kwargs):
+        plans.append(plan_of(df))
+        return write_data(self, spark_, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_write_data", spy)
+    rows = [("I", 1, "a", 1, "a1"), ("I", 2, "b", 2, "b1")]
+    table.merge(spark, _values_batch(spark, rows), mode="cow")
+    assert len(plans) == 1
+    assert "ExistingRDD" not in plans[0], plans[0]
+    assert sorted(r["url"] for r in table.scan(spark).collect()) == ["a", "b"]
+
+
 def test_pagination_no_global_window(spark):
     """OFFSET/LIMIT pagination must plan TakeOrderedAndProject
     (per-partition heaps), never a row_number over an unpartitioned

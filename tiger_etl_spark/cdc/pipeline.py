@@ -28,12 +28,14 @@ from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from tiger_etl_spark.cdc.schema_evolution import map_to_live_schema
 from tiger_etl_spark.cdc.schemas import EVENTS_READ_SCHEMA, PAGES_SCHEMA
 from tiger_etl_spark.cdc.validate import with_validation
 from tiger_etl_spark.functions.text import extract_text_udf
 from tiger_etl_spark.lake import LakeTable
+from tiger_etl_spark.session import empty_frame
 
 WATERMARK_HOURS_DEFAULT = 24
 
@@ -334,12 +336,7 @@ def _shape_batch(
     if static_dim is not None:
         # project to the table's physical columns: un-declared dim
         # columns must not leak into data files
-        fields = [
-            f.name
-            for f in mapped.sparkSession.createDataFrame(
-                [], table.schema_ddl
-            ).schema.fields
-        ]
+        fields = DataType.fromDDL(table.schema_ddl).names
         have = set(out.columns)
         out = out.select(*lead, *[f for f in fields if f in have], *tail)
     return out
@@ -622,7 +619,7 @@ def read_quarantine(spark: SparkSession, table: LakeTable) -> DataFrame:
     quarantine dir at all (the common case), so absence = empty."""
     qdir = os.path.join(table.path, "_quarantine")
     if not os.path.isdir(qdir):
-        return spark.createDataFrame([], EVENTS_READ_SCHEMA).withColumns(
+        return empty_frame(spark, EVENTS_READ_SCHEMA).withColumns(
             {
                 "_invalid_reasons": F.lit(None).cast("string"),
                 "batch_id": F.lit(None).cast("long"),
@@ -706,7 +703,7 @@ def read_audit_rejects(spark: SparkSession, table: LakeTable) -> DataFrame:
     root = os.path.join(table.path, "_audit_rejects")
     dirs = sorted(glob.glob(os.path.join(root, "batch_id=*")))
     if not dirs:
-        return spark.createDataFrame([], EVENTS_READ_SCHEMA).withColumn(
+        return empty_frame(spark, EVENTS_READ_SCHEMA).withColumn(
             "_reject_batch_id", F.lit(None).cast("long")
         )
     parts = []

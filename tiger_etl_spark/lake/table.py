@@ -51,6 +51,9 @@ from dataclasses import dataclass, field
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
+
+from tiger_etl_spark.session import empty_frame
 
 _BUCKET_COL = "_bucket"
 _TSWIN_COL = "_ts_win"
@@ -367,9 +370,9 @@ class LakeTable:
         renamed column in an old file would silently read as NULL
         (parquet matches by name)."""
         cur_sid = int(self.manifest["current_schema_id"])
-        live = spark.createDataFrame([], self._physical_ddl()).schema
+        live = DataType.fromDDL(self._physical_ddl())
         if not files:
-            return spark.createDataFrame([], live)
+            return empty_frame(spark, live)
         groups: dict[int, list[dict]] = {}
         for f in files:
             groups.setdefault(int(f.get("schema_id", cur_sid)), []).append(f)
@@ -676,10 +679,7 @@ class LakeTable:
                 .withColumn(_DELETED_COL, F.col("op") == "D")
                 .withColumn(_BUCKET_COL, self.bucket_expr())
             )
-            fields = [
-                f.name
-                for f in spark.createDataFrame([], self.schema_ddl).schema.fields
-            ]
+            fields = DataType.fromDDL(self.schema_ddl).names
             if self.merge_policy == "partial":
                 # $set semantics: events are written RAW (op preserved).
                 # A batch-local collapse to one full row would stamp the

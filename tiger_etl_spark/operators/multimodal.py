@@ -151,19 +151,23 @@ def probe_media_meta(blob: bytes | None) -> dict:
                 sz = (sz << 7) | (b & 0x7F)
             pos = 10 + sz
         if pos + 4 <= len(blob) and blob[pos] == 0xFF and (blob[pos + 1] & 0xE0) == 0xE0:
+            hdr = blob[pos:pos + 4]
+            version = (hdr[1] >> 3) & 3   # 3 = MPEG1, 1 = reserved
+            layer = (hdr[1] >> 1) & 3     # 1 = Layer III, 0 = reserved
+            bi = (hdr[2] >> 4) & 15       # 0 = free format, 15 = bad
+            si = (hdr[2] >> 2) & 3        # 3 = reserved
+            # the 11-bit sync alone also matches e.g. a JPEG APP1
+            # fragment (FF E1): tag only a header whose every field
+            # decodes to a non-reserved value
+            if version == 1 or layer == 0 or bi == 15 or si == 3:
+                return out
             out["media_type"] = "audio/mpeg"
             out["codec"] = "mpeg-audio"
-            hdr = blob[pos:pos + 4]
-            version = (hdr[1] >> 3) & 3   # 3 = MPEG1
-            layer = (hdr[1] >> 1) & 3     # 1 = Layer III
             if version == 3 and layer == 1:
                 out["codec"] = "mp3"
-                bi = (hdr[2] >> 4) & 15
-                si = (hdr[2] >> 2) & 3
                 bitrates = (0, 32, 40, 48, 56, 64, 80, 96, 112,
-                            128, 160, 192, 224, 256, 320, 0)
-                rates = (44100, 48000, 32000, 0)
-                if bitrates[bi] and rates[si]:
+                            128, 160, 192, 224, 256, 320)
+                if bitrates[bi]:
                     payload = len(blob) - pos
                     out["duration_ms"] = int(
                         payload * 8 * 1000 // (bitrates[bi] * 1000)

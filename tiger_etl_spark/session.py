@@ -10,7 +10,27 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+
+def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
+    """A zero-row DataFrame of `schema` that the optimizer plans as an
+    empty local relation: no partitions, no tasks, no Python worker.
+    (``createDataFrame`` over an empty list is a Python RDD that starts
+    one worker task per core.) Top-level fields come out nullable, as
+    every DDL-parsed field is."""
+    return (
+        spark.range(1)
+        .select(
+            *[
+                F.lit(None).cast(f.dataType).alias(f.name, metadata=f.metadata)
+                for f in schema.fields
+            ]
+        )
+        .where(F.lit(False))
+    )
 
 
 def default_parallelism() -> int:
