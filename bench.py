@@ -92,7 +92,7 @@ def bench_cdc(spark, sf: float, cpus: int, n_events: int | None = None) -> dict:
             changes,
             table_path,
             os.path.join(work, "ckpt"),
-            max_files_per_trigger=int(os.environ.get("SPARK_GRAFT_MFTP", "64")),
+            max_files_per_trigger=64,
         )
         table = LakeTable.load(table_path)
         table.compact(spark)
@@ -144,8 +144,8 @@ def bench_soak(spark, n_batches: int | None = None) -> dict:
     from tiger_etl_spark.cdc import oracle as cdc_oracle
     from tiger_etl_spark.cdc.streaming import APPLIED_WINDOW
 
-    n_batches = n_batches or int(os.environ.get("SPARK_GRAFT_SOAK_BATCHES", "512"))
-    per_batch = int(os.environ.get("SPARK_GRAFT_SOAK_EVENTS_PER_BATCH", "500"))
+    n_batches = n_batches or 512
+    per_batch = 500
     # SPARK_GRAFT_SOAK_MAINTAIN_EVERY > 0 interleaves full maintenance
     # (threshold-gated compaction + snapshot expiry) mid-stream every N
     # applied batches — the operational mode of a real long-lived tail;
@@ -214,11 +214,10 @@ def bench_soak(spark, n_batches: int | None = None) -> dict:
 def bench_queries(spark, sf_dir: str) -> dict[str, float]:
     """Each query timed over 2 attempts, min reported — one attempt can
     land on one of this sandbox's kernel-interference episodes."""
-    attempts = int(os.environ.get("SPARK_GRAFT_QUERY_ATTEMPTS", "2"))
     out = {}
     for name, fn in entrymod.queries().items():
         best = None
-        for _ in range(attempts):
+        for _ in range(2):
             t0 = time.time()
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
@@ -294,7 +293,7 @@ def main() -> None:
         # interference episodes — see BENCH/BASELINE.md — and a single
         # attempt can land inside one). Generating the stream once outside
         # the attempts keeps each attempt cheap, so attempts can be many.
-        attempts = int(os.environ.get("SPARK_GRAFT_CDC_ATTEMPTS", "3"))
+        attempts = 3
         gen_dir = None
         if not os.environ.get("SPARK_GRAFT_CHANGES_DIR"):
             n = int(os.environ.get("SPARK_GRAFT_CDC_EVENTS", "0")) or max(
@@ -319,15 +318,12 @@ def main() -> None:
             # (BENCH/BASELINE.md), so a sub-300k best on this commit means
             # the attempts landed degraded — keep retrying within budget
             floor_evs = float(os.environ.get("SPARK_GRAFT_CDC_FLOOR_EVS", "300000"))
-            extend_budget_s = float(os.environ.get("SPARK_GRAFT_CDC_EXTEND_S", "600"))
-            max_attempts = int(os.environ.get("SPARK_GRAFT_CDC_MAX_ATTEMPTS", "8"))
+            extend_budget_s, max_attempts = 600.0, 8
             # an attempt BRACKETED by warm probes below this is a
             # host-collapse phase (measured collapses run 100-300 MB/s vs
             # 2-3 GB/s healthy) — its timing is discarded for the headline
             # and the loop retries, bounded by max_attempts + the budget
-            degraded_mb_s = float(
-                os.environ.get("SPARK_GRAFT_CDC_DEGRADED_MB_S", "500")
-            )
+            degraded_mb_s = 500.0
             runs = []
             bench_t0 = time.time()
             for i in range(max_attempts):

@@ -7,10 +7,11 @@ import datetime as dt
 import glob
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from tiger_etl_spark.lake import LakeTable, LakeTransaction
-from tiger_etl_spark.lake.wap import WapCommit
+from tiger_etl_spark.lake.wap import WapCommit, audit_staged, parse_audit_spec
 
 TS = dt.datetime(2024, 1, 1)
 SCHEMA = "op string, op_seq long, url string, warc_ts timestamp, v long"
@@ -177,3 +178,28 @@ def test_audit_is_single_job(spark, tmp_path):
     assert res.passed
     assert len(res.metrics) == 3
     wap.abort()
+
+
+def test_error_inside_staged_section_aborts(spark, tmp_path):
+    """An exception inside ``audit_staged`` (here: a check on a missing
+    column, raised while evaluating) aborts the staged commit: the
+    published version is unchanged, no staged manifest is left on disk,
+    and the handle is back at the published snapshot — the next commit
+    takes the freed version slot."""
+    t = _table(spark, tmp_path, [("a", 1), ("b", 2)])
+    v = t.manifest["version"]
+    with pytest.raises(Exception, match="no_such_col"):
+        audit_staged(
+            spark,
+            t,
+            parse_audit_spec("null(no_such_col)<=0"),
+            lambda: t.merge(spark, _batch(spark, [("a", 10)], seq=5)),
+        )
+    published = LakeTable.load(t.path)
+    assert published.manifest["version"] == v
+    assert not os.path.exists(os.path.join(t.path, "meta", f"v{v + 1}.json"))
+    assert t.manifest == published.manifest
+    assert _state(spark, t.path) == {"a": 1, "b": 2}
+    t.merge(spark, _batch(spark, [("c", 3)], seq=9))
+    assert LakeTable.load(t.path).manifest["version"] == v + 1
+    assert _state(spark, t.path) == {"a": 1, "b": 2, "c": 3}

@@ -8,6 +8,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import re
 import shutil
 
 import pyarrow as pa
@@ -17,10 +18,10 @@ from pyspark.sql import functions as F
 
 from tiger_etl_spark.cdc import oracle
 from tiger_etl_spark.cdc.datagen import gen_change_events, write_change_files
-from tiger_etl_spark.cdc.pipeline import create_pages_table
+from tiger_etl_spark.cdc.pipeline import create_pages_table, read_lineage
 from tiger_etl_spark.cdc.streaming import AuditRejected, run_stream
 from tiger_etl_spark.lake import LakeTable
-from tiger_etl_spark.lake.wap import AuditSpec
+from tiger_etl_spark.lake.wap import AuditSpec, parse_audit_spec
 
 N_EVENTS = 900
 N_FILES = 6
@@ -60,6 +61,14 @@ def _final(spark, tp):
     }
 
 
+def _lineage_snapshots(spark, tp) -> dict[int, int]:
+    """batch_id -> snapshot_id, as the `_lineage` rows record them."""
+    return {
+        r["batch_id"]: r["snapshot_id"]
+        for r in read_lineage(spark, LakeTable.load(tp)).collect()
+    }
+
+
 def test_audit_halt_stops_before_publish(spark, tmp_path):
     """halt: the poisoned batch aborts the stream; everything published
     so far is exactly the clean prefix, and the poisoned rows are
@@ -90,6 +99,13 @@ def test_audit_halt_stops_before_publish(spark, tmp_path):
             spark, cdir, tp, ckpt, max_files_per_trigger=1, audit=_audit()
         )
     assert _final(spark, tp) == state
+    # the rejected batch left no lineage row; every remaining row names
+    # the snapshot its batch published (the applied-batch ledger)
+    bad_id = int(re.search(r"batch (\d+) failed audit", str(ei.value))[1])
+    lineage = _lineage_snapshots(spark, tp)
+    assert bad_id not in lineage
+    ledger = LakeTable.load(tp).props["applied_batches"]
+    assert lineage == {int(k): v for k, v in ledger.items()}
 
 
 def test_audit_quarantine_continues_and_deadletters(spark, tmp_path):
@@ -131,6 +147,39 @@ def test_audit_quarantine_continues_and_deadletters(spark, tmp_path):
     with open(os.path.join(rdir, "_reasons.json")) as fh:
         reasons = json.load(fh)
     assert reasons["failures"] == failures
+    # no lineage row for the rejected batch (its staged snapshot was
+    # never published); the rest match what the stream reported
+    lineage = _lineage_snapshots(spark, tp)
+    assert bad_id not in lineage
+    assert lineage == {r.batch_id: r.snapshot_id for r in res.lineage}
+    assert not os.path.isdir(
+        os.path.join(tp, "_quarantine", f"batch_id={bad_id}")
+    )
+
+
+def test_audit_error_inside_staged_batch_leaves_nothing_behind(
+    spark, tmp_path
+):
+    """An audit that raises (its check names a missing column) aborts
+    the staged batch like a failing one: nothing is published, no staged
+    manifest stays on disk, and the batch leaves no lineage row or
+    dead-letter dir."""
+    cdir = _mk_changes(tmp_path, poison=False)
+    tp = str(tmp_path / "pages")
+    create_pages_table(tp, num_buckets=4)
+    with pytest.raises(Exception, match="no_such_col"):
+        run_stream(
+            spark,
+            cdir,
+            tp,
+            str(tmp_path / "ckpt"),
+            max_files_per_trigger=N_FILES,
+            audit=parse_audit_spec("null(no_such_col)<=0"),
+        )
+    assert LakeTable.load(tp).manifest["version"] == 0
+    assert not os.path.exists(os.path.join(tp, "meta", "v1.json"))
+    assert not os.path.isdir(os.path.join(tp, "_lineage", "batch_id=0"))
+    assert not os.path.isdir(os.path.join(tp, "_quarantine", "batch_id=0"))
 
 
 def test_audit_quarantine_exactly_once_on_restart(spark, tmp_path):

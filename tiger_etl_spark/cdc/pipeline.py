@@ -35,6 +35,7 @@ from tiger_etl_spark.cdc.schemas import EVENTS_READ_SCHEMA, PAGES_SCHEMA
 from tiger_etl_spark.cdc.validate import with_validation
 from tiger_etl_spark.functions.text import extract_text_udf
 from tiger_etl_spark.lake import LakeTable
+from tiger_etl_spark.lake.wap import audit_staged
 from tiger_etl_spark.session import empty_frame
 
 WATERMARK_HOURS_DEFAULT = 24
@@ -256,7 +257,8 @@ def _shape_batch(
 
       repartition(num_buckets, url)        — the ONLY exchange; partition
                                              id == bucket (bucket_expr)
-      → groupBy(url).agg(max_by(...))      — LWW winner per url,
+      → LakeTable._resolve_lww             — LWW winner per url
+                                             (groupBy + max_by),
                                              partition-local: hash(url,
                                              B) already satisfies the
                                              clustered distribution, so
@@ -299,13 +301,8 @@ def _shape_batch(
             F.col("op_seq").cast("long").alias("_op_seq"),
             (F.col("op") == "D").alias("_deleted"),
         )
-        parts = normalized.repartition(table.num_buckets, F.col(table.key_col))
-        payload = [c for c in normalized.columns if c != "url"]
-        order = F.struct("warc_ts", "_op_seq")
-        winners = (
-            parts.groupBy("url")
-            .agg(F.max_by(F.struct(*payload), order).alias("_w"))
-            .select("url", "_w.*")
+        winners = table._resolve_lww(
+            normalized.repartition(table.num_buckets, F.col(table.key_col))
         )
         lead, tail = [], ["_op_seq", "_deleted", "_bucket"]
         out = winners.select(
@@ -737,8 +734,9 @@ def replay_audit_rejects(
     save are routed into the normal per-row quarantine dead-letter for
     this batch when the repair publishes — `replay_quarantine` is their
     recovery loop), then merge through the SAME batch-shaping path as
-    live ingest (enrichers and static_dim included) — STAGED, and
-    re-judged by `audit` (an AuditSpec, typically the same spec the stream ran):
+    live ingest (enrichers and static_dim included) — STAGED through
+    ``lake.wap.audit_staged``, the same gate the stream ran, and
+    re-judged by `audit` (an AuditSpec, typically the stream's spec):
     a repair that still fails the gate aborts trace-free and keeps the
     reject dir for another round. On publish the dir is removed and the
     batch's `audit_rejected` prop entry cleared (it stays in the
@@ -748,8 +746,6 @@ def replay_audit_rejects(
     re-replays a merge whose rows are LWW no-ops, the audit passes on
     the already-repaired state, and the dir is removed then.
     """
-    from tiger_etl_spark.lake.wap import abort_staged, manifest_rows
-
     root = os.path.join(table.path, "_audit_rejects")
     out = {
         "batches": 0,
@@ -765,36 +761,15 @@ def replay_audit_rejects(
         out["rows_dropped_invalid"] += n_bad
         if not n_ok:
             continue
-        base_rows = manifest_rows(table)
-        pre_paths = {f["path"] for f in table.manifest["files"]}
-        table._defer_pointer = True
-        try:
-            _merge_events(spark, table, mapped, enrichers, static_dim)
-            res = None
-            if audit is not None:
-                # same delta scope as the streaming gate: judge only the
-                # files this replay staged — O(batch), tombstones out
-                new_files = [
-                    f
-                    for f in table.manifest["files"]
-                    if f["path"] not in pre_paths
-                ]
-                delta = table._read_files(spark, new_files).where(
-                    ~F.col("_deleted")
-                )
-                res = audit.evaluate(
-                    spark,
-                    delta,
-                    base_rows=base_rows,
-                    staged_rows=manifest_rows(table),
-                )
-        finally:
-            table._defer_pointer = False
+        _, res = audit_staged(
+            spark,
+            table,
+            audit,
+            lambda: _merge_events(spark, table, mapped, enrichers, static_dim),
+        )
         if res is not None and not res.passed:
-            abort_staged(table)
             out["still_failing"] += 1
             continue
-        LakeTable._write_pointer(table.path, table.manifest["version"])
         out["published"] += 1
         out["rows_applied"] += n_ok
         if n_bad:

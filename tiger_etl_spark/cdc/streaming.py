@@ -14,6 +14,9 @@ harmless. Restart-from-checkpoint tests in tests/test_streaming.py.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -28,6 +31,7 @@ from tiger_etl_spark.cdc.pipeline import (
 )
 from tiger_etl_spark.cdc.sources import read_change_stream
 from tiger_etl_spark.lake import LakeTable
+from tiger_etl_spark.lake.wap import audit_staged
 
 
 @dataclass
@@ -54,6 +58,17 @@ class AuditRejected(RuntimeError):
 
 def _audit_rejected(props: dict, batch_id: int) -> bool:
     return str(batch_id) in props.get("audit_rejected", {})
+
+
+def _drop_batch_outputs(table: LakeTable, batch_id: int) -> None:
+    """Remove what `apply_changes` wrote beside the table for a batch
+    whose staged commit was aborted: its dead-letter rows and its
+    lineage row."""
+    for side in ("_quarantine", "_lineage"):
+        shutil.rmtree(
+            os.path.join(table.path, side, f"batch_id={batch_id}"),
+            ignore_errors=True,
+        )
 
 
 def run_stream(
@@ -100,13 +115,15 @@ def run_stream(
     replays into a per-table no-op/apply pair and both converge.
 
     `audit`: a ``lake.wap.AuditSpec`` — the Write-Audit-Publish gate per
-    micro-batch: the merge lands on a STAGED snapshot (pointer not
-    flipped), the check set runs in one aggregation pass over the
-    batch's STAGED DELTA FILES (the manifest diff — O(batch) per
-    micro-batch, never a table scan; under cow, the touched buckets'
-    post-image; tombstones excluded), and only a passing batch is
-    published. A failing batch is
-    aborted trace-free, then per `audit_policy`:
+    micro-batch: each batch's `apply_changes` runs as the stage of
+    ``lake.wap.audit_staged``, so the merge lands on a STAGED snapshot
+    (pointer not flipped), the check set runs in one aggregation pass
+    over the batch's STAGED DELTA FILES (the manifest diff — O(batch)
+    per micro-batch, never a table scan; tombstones excluded), and only
+    a passing batch is published. A batch that fails the audit, or
+    raises inside the staged section, is aborted trace-free: no
+    manifest, lineage row or per-row dead-letter dir of it survives. A
+    failing batch is then handled per `audit_policy`:
     - 'halt' (default, fail-closed): raise AuditRejected; the checkpoint
       did not advance, so a restart re-delivers the batch — an operator
       must fix or drop it.
@@ -157,114 +174,61 @@ def run_stream(
             cache["table"] = table
             return
 
-        if audit is not None:
-            from pyspark.sql import functions as F
-
-            from tiger_etl_spark.lake.wap import abort_staged, manifest_rows
-
-            base_rows = manifest_rows(table)
-            pre_paths = {f["path"] for f in table.manifest["files"]}
-            table._defer_pointer = True
-            try:
-                rec = apply_changes(
-                    spark,
-                    table,
-                    batch_df,
-                    batch_id,
-                    watermark_hours=watermark_hours,
-                    merge_mode=merge_mode,
-                    enrichers=enrichers,
-                    static_dim=static_dim,
-                )
-                # DELTA-scoped audit: judge only the files THIS batch
-                # staged (manifest diff — known without any listing), so
-                # the gate costs O(batch) per micro-batch, never a full
-                # table scan. Tombstones carry null payloads by design
-                # and are excluded from the fraction checks.
-                new_files = [
-                    f
-                    for f in table.manifest["files"]
-                    if f["path"] not in pre_paths
-                ]
-                delta = table._read_files(spark, new_files).where(
-                    ~F.col("_deleted")
-                )
-                res = audit.evaluate(
-                    spark,
-                    delta,
-                    base_rows=base_rows,
-                    staged_rows=manifest_rows(table),
-                )
-            finally:
-                table._defer_pointer = False
-            if not res.passed:
-                import json as _json
-                import os as _os
-                import shutil as _shutil
-
-                abort_staged(table)
-                # the staged commit's per-row dead-letter split is
-                # subsumed by the whole-batch reject copy below
-                _shutil.rmtree(
-                    _os.path.join(
-                        table.path, "_quarantine", f"batch_id={batch_id}"
-                    ),
-                    ignore_errors=True,
-                )
-                result.batches_rejected += 1
-                result.audit_failures.append((batch_id, res.failures))
-                if audit_policy == "halt":
-                    raise AuditRejected(batch_id, res.failures)
-                # quarantine policy: dead-letter the raw batch, then mark
-                # it applied (props-only commit) so replay and later
-                # maintenance skip it — the stream keeps going
-                rdir = _os.path.join(
-                    table.path, "_audit_rejects", f"batch_id={batch_id}"
-                )
-                batch_df.write.mode("overwrite").parquet(rdir)
-                with open(_os.path.join(rdir, "_reasons.json"), "w") as fh:
-                    fh.write(
-                        _json.dumps(
-                            {"failures": res.failures, "metrics": res.metrics}
-                        )
-                    )
-                hwm = int(table.props.get("applied_batch_hwm", -1))
-                rejected = {
-                    k: v
-                    for k, v in {
-                        **table.props.get("audit_rejected", {}),
-                        str(batch_id): ",".join(res.failures),
-                    }.items()
-                    if int(k) > max(hwm, batch_id) - APPLIED_WINDOW
-                }
-                table.update_props(
-                    {
-                        **applied_batches_update(
-                            table.props,
-                            table.props.get("applied_batches", {}),
-                            batch_id,
-                            table.manifest["snapshot_id"],
-                        ),
-                        "audit_rejected": rejected,
-                    }
-                )
-                cache["table"] = table
-                return
-            # audit passed: publish = the atomic pointer flip. A crash
-            # BEFORE this line leaves the staged manifest inert and the
-            # checkpoint unadvanced — the replay simply re-stages.
-            LakeTable._write_pointer(table.path, table.manifest["version"])
-        else:
-            rec = apply_changes(
+        try:
+            rec, res = audit_staged(
                 spark,
                 table,
-                batch_df,
-                batch_id,
-                watermark_hours=watermark_hours,
-                merge_mode=merge_mode,
-                enrichers=enrichers,
-                static_dim=static_dim,
+                audit,
+                lambda: apply_changes(
+                    spark, table, batch_df, batch_id,
+                    watermark_hours=watermark_hours, merge_mode=merge_mode,
+                    enrichers=enrichers, static_dim=static_dim,
+                ),
             )
+        except BaseException:
+            if audit is not None:  # the staged batch was aborted
+                _drop_batch_outputs(table, batch_id)
+            raise
+        if res is not None and not res.passed:
+            # the staged batch was aborted; its per-row dead-letter split
+            # is subsumed by the whole-batch reject copy below, and its
+            # lineage row names a snapshot that was never published
+            _drop_batch_outputs(table, batch_id)
+            result.batches_rejected += 1
+            result.audit_failures.append((batch_id, res.failures))
+            if audit_policy == "halt":
+                raise AuditRejected(batch_id, res.failures)
+            # quarantine policy: dead-letter the raw batch, then mark
+            # it applied (props-only commit) so replay and later
+            # maintenance skip it — the stream keeps going
+            rdir = os.path.join(
+                table.path, "_audit_rejects", f"batch_id={batch_id}"
+            )
+            batch_df.write.mode("overwrite").parquet(rdir)
+            with open(os.path.join(rdir, "_reasons.json"), "w") as fh:
+                json.dump({"failures": res.failures, "metrics": res.metrics}, fh)
+            hwm = int(table.props.get("applied_batch_hwm", -1))
+            rejected = {
+                k: v
+                for k, v in {
+                    **table.props.get("audit_rejected", {}),
+                    str(batch_id): ",".join(res.failures),
+                }.items()
+                if int(k) > max(hwm, batch_id) - APPLIED_WINDOW
+            }
+            table.update_props(
+                {
+                    **applied_batches_update(
+                        table.props,
+                        table.props.get("applied_batches", {}),
+                        batch_id,
+                        table.manifest["snapshot_id"],
+                    ),
+                    "audit_rejected": rejected,
+                }
+            )
+            cache["table"] = table
+            return
         result.lineage.append(rec)
         result.batches_applied += 1
         if compact_every and (result.batches_applied % compact_every == 0):

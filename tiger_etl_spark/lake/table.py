@@ -112,6 +112,9 @@ class LakeTable:
         # so entries never invalidate; the cache is what lets _commit
         # carry untouched segments by reference with zero re-reads.
         self._seg_cache: dict[str, list[dict]] = {}
+        # set while a staged commit is open (lake/txn.py): _commit then
+        # writes the manifest but withholds the pointer flip
+        self._defer_pointer = False
         self._hydrate()
 
     # ------------------------------------------------------------- create
@@ -1067,11 +1070,11 @@ class LakeTable:
         pointer atomically replaced. Optimistic single-writer check —
         a concurrent commit (version moved) raises and the batch retries.
 
-        Inside a LakeTransaction (``_defer_pointer`` set by lake/txn.py)
-        the pointer flip is withheld: the manifest is staged on disk but
-        readers keep seeing the old snapshot until the transaction's
-        commit point publishes every staged table's pointer together."""
-        deferred = getattr(self, "_defer_pointer", False)
+        Inside a staged commit (``_defer_pointer``, see lake/txn.py) the
+        pointer flip is withheld: the manifest is staged on disk but
+        readers keep seeing the old snapshot until the commit point
+        publishes the pointer (or ``abort_staged`` discards it)."""
+        deferred = self._defer_pointer
         cur_path = os.path.join(self.path, "meta", "_current")
         with open(cur_path) as f:
             on_disk = int(f.read().strip())

@@ -36,6 +36,25 @@ import uuid
 from tiger_etl_spark.lake.table import LakeTable, _atomic_write
 
 
+def abort_staged(table: LakeTable) -> int:
+    """Discard `table`'s staged (written but unpublished) snapshots:
+    end the pointer deferral, delete the manifests above the published
+    pointer and reload the handle at the published state. Readers never
+    saw the staged state. Its data files become unreferenced orphans —
+    harmless: the next commit reuses the version slots and ``vacuum``
+    removes the files. Returns the published version."""
+    table._defer_pointer = False
+    with open(os.path.join(table.path, "meta", "_current")) as f:
+        published = int(f.read().strip())
+    for v in range(published + 1, table.manifest["version"] + 1):
+        mp = os.path.join(table.path, "meta", f"v{v}.json")
+        if os.path.exists(mp):
+            os.remove(mp)
+    fresh = LakeTable.load(table.path)
+    table.manifest, table._seg_cache = fresh.manifest, fresh._seg_cache
+    return published
+
+
 class LakeTransaction:
     def __init__(self, txn_dir: str):
         self.txn_dir = txn_dir
@@ -87,21 +106,11 @@ class LakeTransaction:
 
     def abort(self) -> None:
         """Discard staged state: pointers were never flipped, so readers
-        saw nothing. Staged manifests are deleted; in-memory handles are
-        re-loaded from the published pointer. (Data files staged by the
-        aborted ops become unreferenced orphans — harmless, and the next
-        successful commit reuses their version slots.)"""
+        saw nothing (see ``abort_staged``)."""
         if self._done:
             return
         for t in self._tables:
-            t._defer_pointer = False
-            with open(os.path.join(t.path, "meta", "_current")) as f:
-                published = int(f.read().strip())
-            for v in range(published + 1, t.manifest["version"] + 1):
-                mp = os.path.join(t.path, "meta", f"v{v}.json")
-                if os.path.exists(mp):
-                    os.remove(mp)
-            t.manifest = LakeTable.load(t.path).manifest
+            abort_staged(t)
         self._done = True
 
     def __enter__(self) -> "LakeTransaction":

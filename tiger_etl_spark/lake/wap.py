@@ -16,13 +16,14 @@ TABLE STATE before readers can see it, which is the only form that can
 catch whole-batch pathologies (a truncating replay, a null-flood from an
 upstream schema break, a fan-out bug doubling the row count).
 
-Two consumption shapes:
+Three pieces:
+- ``AuditSpec`` — the declarative check set.
+- ``audit_staged`` — the one staged-commit gate of the ingest paths
+  (``run_stream(audit=...)`` per micro-batch, ``replay_audit_rejects``
+  per repaired batch): stage with the pointer held back, audit only the
+  files the stage added, then publish or abort.
 - ``WapCommit`` — explicit stage → audit → publish | abort on one table
-  (the interactive / job-script form).
-- ``AuditSpec`` — the check set alone, handed to
-  ``cdc.streaming.run_stream(audit=...)`` which stages EVERY micro-batch
-  and publishes only the ones that pass (policy: halt the stream, or
-  dead-letter the batch and continue).
+  with a whole-table audit (the interactive / job-script form).
 
 Scale notes: every declarative check is folded into ONE narrow
 aggregation pass over the staged scan (a single job, partial-aggregated,
@@ -34,14 +35,14 @@ checks are registered.
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from tiger_etl_spark.lake.table import LakeTable, MergeStats
-from tiger_etl_spark.lake.txn import LakeTransaction
+from tiger_etl_spark.lake.txn import LakeTransaction, abort_staged
 
 
 @dataclass
@@ -174,22 +175,46 @@ def manifest_rows(table: LakeTable) -> int:
     return sum(f["rows"] for f in table.manifest["files"])
 
 
-def abort_staged(table: LakeTable) -> int:
-    """Discard any staged (committed-but-unpublished) snapshots on
-    `table`: delete manifests above the published pointer and reload the
-    in-memory handle to the published state. Staged data files become
-    unreferenced orphans (harmless; reused version slots / vacuumable),
-    exactly as in ``LakeTransaction.abort``. Returns the published
-    version."""
-    with open(os.path.join(table.path, "meta", "_current")) as f:
-        published = int(f.read().strip())
-    for v in range(published + 1, table.manifest["version"] + 1):
-        mp = os.path.join(table.path, "meta", f"v{v}.json")
-        if os.path.exists(mp):
-            os.remove(mp)
-    table.manifest = LakeTable.load(table.path).manifest
-    table._seg_cache = {}
-    return published
+def audit_staged(
+    spark: SparkSession,
+    table: LakeTable,
+    audit: AuditSpec | None,
+    stage: Callable[[], object],
+) -> tuple[object, AuditResult | None]:
+    """Run ``stage()`` (merges on `table`) as one staged commit gated by
+    `audit`: the pointer is held back, the checks judge only the files
+    the stage added (the manifest diff: O(batch), never a table scan;
+    tombstones excluded), then a passing stage is published by the
+    pointer flip and a failing one aborted. An exception inside the
+    staged section aborts too. ``audit=None`` is a plain commit.
+    Returns (stage's result, AuditResult or None)."""
+    if audit is None:
+        return stage(), None
+    base_rows = manifest_rows(table)
+    pre_paths = {f["path"] for f in table.manifest["files"]}
+    table._defer_pointer = True
+    try:
+        out = stage()
+        new_files = [
+            f for f in table.manifest["files"] if f["path"] not in pre_paths
+        ]
+        res = audit.evaluate(
+            spark,
+            table._read_files(spark, new_files).where(~F.col("_deleted")),
+            base_rows=base_rows,
+            staged_rows=manifest_rows(table),
+        )
+    except BaseException:
+        abort_staged(table)
+        raise
+    if not res.passed:
+        abort_staged(table)
+        return out, res
+    # publish = the atomic pointer flip. A crash before it leaves the
+    # staged manifest inert; the next commit overwrites it.
+    table._defer_pointer = False
+    LakeTable._write_pointer(table.path, table.manifest["version"])
+    return out, res
 
 
 class WapCommit:
