@@ -6,6 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+import jpeg_encode
 from tiger_etl_spark.functions import scalar
 from tiger_etl_spark.functions.text import detect_lang, quality_score_cols
 from tiger_etl_spark.operators import dedup, multimodal, similarity
@@ -874,20 +875,20 @@ def test_jpeg_codec_spec_roundtrips():
     import numpy as np
 
     flat = np.full((64, 64), 130, dtype=np.uint8)
-    w, h, out = multimodal.decode_jpeg_gray(multimodal.encode_jpeg_gray(flat))
+    w, h, out = multimodal.decode_jpeg_gray(jpeg_encode.encode_jpeg_gray(flat))
     assert (w, h) == (64, 64)
     assert int(np.abs(out.astype(int) - 130).max()) == 0
 
     yy, xx = np.mgrid[0:40, 0:48]
     grad = (yy * 2 + xx).clip(0, 255).astype(np.uint8)
-    w, h, out = multimodal.decode_jpeg_gray(multimodal.encode_jpeg_gray(grad))
+    w, h, out = multimodal.decode_jpeg_gray(jpeg_encode.encode_jpeg_gray(grad))
     assert (w, h) == (48, 40)
     err = np.abs(out.astype(int) - grad.astype(int))
     assert err.max() <= 4 and err.mean() <= 2.0
 
     rng = np.random.default_rng(7)
     noise = rng.integers(0, 256, (56, 72), dtype=np.uint8)
-    blob = multimodal.encode_jpeg_gray(noise, quant=np.ones(64, dtype=np.int64))
+    blob = jpeg_encode.encode_jpeg_gray(noise, quant=np.ones(64, dtype=np.int64))
     assert b"\xff\x00" in blob  # byte stuffing actually exercised
     w, h, out = multimodal.decode_jpeg_gray(blob)
     assert (w, h) == (72, 56)
@@ -901,7 +902,7 @@ def test_jpeg_codec_spec_roundtrips():
     px = np.clip(
         np.round(multimodal._DCT_A.T @ coef @ multimodal._DCT_A + 128.0), 0, 255
     ).astype(np.uint8)
-    blob = multimodal.encode_jpeg_gray(px, quant=np.ones(64, dtype=np.int64))
+    blob = jpeg_encode.encode_jpeg_gray(px, quant=np.ones(64, dtype=np.int64))
     w, h, out = multimodal.decode_jpeg_gray(blob)
     assert int(np.abs(out.astype(int) - px.astype(int)).max()) <= 1
 
@@ -917,7 +918,7 @@ def test_jpeg_decoder_rejects_out_of_scope():
     # SOS has Se=63, illegal for a progressive DC scan) — never
     # silently misdecode
     blob = bytearray(
-        multimodal.encode_jpeg_gray(np.zeros((8, 8), dtype=np.uint8))
+        jpeg_encode.encode_jpeg_gray(np.zeros((8, 8), dtype=np.uint8))
     )
     i = blob.index(b"\xff\xc0")
     blob[i + 1] = 0xC2
@@ -936,7 +937,7 @@ def test_jpeg_feature_hook_end_to_end(spark):
 
     yy, xx = np.mgrid[0:16, 0:16]
     img = (yy * 8 + xx).clip(0, 255).astype(np.uint8)
-    blob = multimodal.encode_jpeg_gray(img)
+    blob = jpeg_encode.encode_jpeg_gray(img)
     df = spark.createDataFrame(
         [(1, blob), (2, None)], "media_id long, blob binary"
     )
@@ -971,20 +972,20 @@ def test_jpeg_color_roundtrips():
         axis=-1,
     ).astype(np.uint8)
     for sub, tol_max, tol_mean in (("444", 10, 3.0), ("420", 16, 4.0)):
-        blob = multimodal.encode_jpeg(rgb, sub)
+        blob = jpeg_encode.encode_jpeg(rgb, sub)
         w, h, ch, out = multimodal.decode_jpeg(blob)
         assert (w, h, ch) == (48, 40, 3)
         err = np.abs(out.astype(int) - rgb.astype(int))
         assert err.max() <= tol_max and err.mean() <= tol_mean, (sub, err.max())
     # 4:2:0 must actually subsample (smaller stream than 4:4:4)
-    assert len(multimodal.encode_jpeg(rgb, "420")) < len(
-        multimodal.encode_jpeg(rgb, "444")
+    assert len(jpeg_encode.encode_jpeg(rgb, "420")) < len(
+        jpeg_encode.encode_jpeg(rgb, "444")
     )
 
     rng = np.random.default_rng(3)
     noise = rng.integers(0, 256, (24, 40, 3), dtype=np.uint8)
     ones = np.ones(64, dtype=np.int64)
-    blob = multimodal.encode_jpeg(noise, "444", quant_luma=ones, quant_chroma=ones)
+    blob = jpeg_encode.encode_jpeg(noise, "444", quant_luma=ones, quant_chroma=ones)
     _, _, _, out = multimodal.decode_jpeg(blob)
     assert int(np.abs(out.astype(int) - noise.astype(int)).max()) <= 3
     # color stream through the featurize hook + dispatch
@@ -1008,14 +1009,14 @@ def test_jpeg_codec_fuzz_roundtrip():
         w = int(rng.integers(1, 40))
         if trial % 3 == 0:
             img = rng.integers(0, 256, (h, w), dtype=np.uint8)
-            blob = multimodal.encode_jpeg_gray(img, quant=ones)
+            blob = jpeg_encode.encode_jpeg_gray(img, quant=ones)
             dw, dh, out = multimodal.decode_jpeg_gray(blob)
             assert (dw, dh) == (w, h)
             assert int(np.abs(out.astype(int) - img.astype(int)).max()) <= 1
         else:
             sub = "420" if trial % 3 == 1 else "444"
             img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-            blob = multimodal.encode_jpeg(
+            blob = jpeg_encode.encode_jpeg(
                 img, sub, quant_luma=ones, quant_chroma=ones
             )
             dw, dh, ch, out = multimodal.decode_jpeg(blob)
@@ -1026,7 +1027,7 @@ def test_jpeg_codec_fuzz_roundtrip():
     # ValueError (clean, catchable) or still decodes to the right shape
     # (cut fell after the last needed entropy byte)
     img = rng.integers(0, 256, (17, 23), dtype=np.uint8)
-    blob = multimodal.encode_jpeg_gray(img)
+    blob = jpeg_encode.encode_jpeg_gray(img)
     for cut in range(3, len(blob), 7):
         try:
             dw, dh, ch, out = multimodal.decode_jpeg(blob[:cut])
@@ -1045,7 +1046,7 @@ def test_jpeg_fill_bytes_and_standalone_markers():
 
     rng = np.random.default_rng(11)
     img = rng.integers(0, 256, (16, 16), dtype=np.uint8)
-    blob = multimodal.encode_jpeg_gray(img)
+    blob = jpeg_encode.encode_jpeg_gray(img)
     want = multimodal.decode_jpeg(blob)
     for inject in (b"\xff", b"\xff\xff\xff", b"\xff\x01", b"\xff\xd3",
                    b"\xff\xff\x01\xff"):
@@ -1068,14 +1069,14 @@ def test_jpeg_progressive_pixel_identical_to_baseline():
     rng = np.random.default_rng(31)
     rgb = rng.integers(0, 256, (19, 26, 3), dtype=np.uint8)
     cases = [
-        (multimodal.encode_jpeg(grey), multimodal.encode_jpeg_progressive(grey)),
+        (jpeg_encode.encode_jpeg(grey), jpeg_encode.encode_jpeg_progressive(grey)),
         (
-            multimodal.encode_jpeg(rgb, "444"),
-            multimodal.encode_jpeg_progressive(rgb, "444"),
+            jpeg_encode.encode_jpeg(rgb, "444"),
+            jpeg_encode.encode_jpeg_progressive(rgb, "444"),
         ),
         (
-            multimodal.encode_jpeg(rgb, "420"),
-            multimodal.encode_jpeg_progressive(rgb, "420"),
+            jpeg_encode.encode_jpeg(rgb, "420"),
+            jpeg_encode.encode_jpeg_progressive(rgb, "420"),
         ),
     ]
     for base, prog in cases:
@@ -1087,14 +1088,14 @@ def test_jpeg_progressive_pixel_identical_to_baseline():
     # refinement, and every correction-bit placement
     ones = np.ones(64, dtype=np.int64)
     noise = rng.integers(0, 256, (16, 24), dtype=np.uint8)
-    rb = multimodal.decode_jpeg(multimodal.encode_jpeg(noise, quant_luma=ones))
+    rb = multimodal.decode_jpeg(jpeg_encode.encode_jpeg(noise, quant_luma=ones))
     rp = multimodal.decode_jpeg(
-        multimodal.encode_jpeg_progressive(noise, quant_luma=ones)
+        jpeg_encode.encode_jpeg_progressive(noise, quant_luma=ones)
     )
     assert np.array_equal(rb[3], rp[3])
     # the progressive entry point requires SOF2
     with pytest.raises(ValueError, match="SOF2"):
-        multimodal.decode_jpeg_progressive(multimodal.encode_jpeg(grey))
+        multimodal.decode_jpeg_progressive(jpeg_encode.encode_jpeg(grey))
 
 
 def test_jpeg_progressive_fuzz_and_truncation():
@@ -1105,18 +1106,18 @@ def test_jpeg_progressive_fuzz_and_truncation():
         w, h = int(rng.integers(8, 34)), int(rng.integers(8, 34))
         if trial % 3 == 0:
             img = rng.integers(0, 256, (h, w), dtype=np.uint8)
-            base = multimodal.encode_jpeg(img)
-            prog = multimodal.encode_jpeg_progressive(img)
+            base = jpeg_encode.encode_jpeg(img)
+            prog = jpeg_encode.encode_jpeg_progressive(img)
         else:
             img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
             sub = "444" if trial % 3 == 1 else "420"
-            base = multimodal.encode_jpeg(img, sub)
-            prog = multimodal.encode_jpeg_progressive(img, sub)
+            base = jpeg_encode.encode_jpeg(img, sub)
+            prog = jpeg_encode.encode_jpeg_progressive(img, sub)
         rb, rp = multimodal.decode_jpeg(base), multimodal.decode_jpeg(prog)
         assert rb[:3] == rp[:3] and np.array_equal(rb[3], rp[3]), trial
     # truncation never yields silent garbage (same contract as baseline)
     img = rng.integers(0, 256, (17, 23), dtype=np.uint8)
-    prog = multimodal.encode_jpeg_progressive(img)
+    prog = jpeg_encode.encode_jpeg_progressive(img)
     for cut in range(3, len(prog), 11):
         try:
             dw, dh, ch, out = multimodal.decode_jpeg(prog[:cut])
@@ -1184,9 +1185,9 @@ def test_jpeg_restart_interval_roundtrips():
 
     rng = np.random.default_rng(83)
     grey = rng.integers(0, 256, (24, 40), dtype=np.uint8)  # 15 MCUs
-    plain = multimodal.decode_jpeg(multimodal.encode_jpeg(grey))
+    plain = multimodal.decode_jpeg(jpeg_encode.encode_jpeg(grey))
     for ri in (1, 2, 7):
-        blob = multimodal.encode_jpeg(grey, restart_interval=ri)
+        blob = jpeg_encode.encode_jpeg(grey, restart_interval=ri)
         assert b"\xff\xdd" in blob and b"\xff\xd0" in blob
         got = multimodal.decode_jpeg(blob)
         assert got[:3] == plain[:3]
@@ -1196,7 +1197,7 @@ def test_jpeg_restart_interval_roundtrips():
     # extract the marker sequence from the entropy segment (FF followed
     # by D0-D7; FF00 is a stuffed data byte, not a marker) and pin the
     # 0,1,...,7,0,... cycle. 15 MCUs at ri=1 -> 14 restarts.
-    blob = multimodal.encode_jpeg(grey, restart_interval=1)
+    blob = jpeg_encode.encode_jpeg(grey, restart_interval=1)
     sos = blob.index(b"\xff\xda")
     sos_len = (blob[sos + 2] << 8) | blob[sos + 3]
     entropy = blob[sos + 2 + sos_len:]  # marker + whole SOS segment
@@ -1211,14 +1212,14 @@ def test_jpeg_restart_interval_roundtrips():
     assert seq == [k % 8 for k in range(14)], seq
     rgb = rng.integers(0, 256, (20, 35, 3), dtype=np.uint8)
     for sub in ("444", "420"):
-        plain = multimodal.decode_jpeg(multimodal.encode_jpeg(rgb, sub))
-        blob = multimodal.encode_jpeg(rgb, sub, restart_interval=3)
+        plain = multimodal.decode_jpeg(jpeg_encode.encode_jpeg(rgb, sub))
+        blob = jpeg_encode.encode_jpeg(rgb, sub, restart_interval=3)
         got = multimodal.decode_jpeg(blob)
         assert np.array_equal(got[3], plain[3]), sub
     # bad intervals rejected upfront, before any DCT work
     for bad in (-1, 70000):
         with pytest.raises(ValueError, match="restart_interval"):
-            multimodal.encode_jpeg(grey, restart_interval=bad)
+            jpeg_encode.encode_jpeg(grey, restart_interval=bad)
 
 
 def test_probe_media_meta_real_headers(spark):
@@ -1233,8 +1234,8 @@ def test_probe_media_meta_real_headers(spark):
     rng = np.random.default_rng(19)
     img = rng.integers(0, 256, (17, 29), dtype=np.uint8)
     rgb = rng.integers(0, 256, (11, 13, 3), dtype=np.uint8)
-    base = multimodal.encode_jpeg(img)
-    prog = multimodal.encode_jpeg_progressive(rgb, "420")
+    base = jpeg_encode.encode_jpeg(img)
+    prog = jpeg_encode.encode_jpeg_progressive(rgb, "420")
     wav = multimodal.encode_wav(
         rng.integers(-100, 100, (8000, 2), dtype=np.int64), 16000, 16
     )

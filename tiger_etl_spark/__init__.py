@@ -16,6 +16,13 @@ re-expressed Spark-first per SURVEY.md:
                     web-scale dedup (MinHash/SimHash) and ANN similarity.
 - ``functions/``  — scalar/text function library (SURVEY.md §2.8) with
                     vectorized Arrow/pandas UDFs only (no per-row Python).
+
+Importing the package installs ``_zipimport``: Spark's Python workers
+then stop re-reading every zip archive on ``sys.path`` at each task.
 """
+
+from tiger_etl_spark import _zipimport
+
+_zipimport.install()
 
 __version__ = "0.1.0"
