@@ -167,6 +167,7 @@ def main() -> None:
     )
     from tiger_etl_spark.cdc.streaming import run_stream
     from tiger_etl_spark.lake import LakeTable
+    from tiger_etl_spark.lake.table import prop_list
 
     enrichers, enrich_ddl = resolve_enrich_spec(args.enrich)
     has_standard = bool(args.enrich) and "standard" in args.enrich.split("+")
@@ -238,16 +239,8 @@ def main() -> None:
                 )
         stats_val = args.stats_cols
         if defaulted_stats and tbl.props.get("stats_cols"):
-            cur = [
-                c.strip()
-                for c in tbl.props["stats_cols"].split(",")
-                if c.strip()
-            ]
-            std = [
-                c.strip()
-                for c in STANDARD_STATS_COLS.split(",")
-                if c.strip()
-            ]
+            cur = prop_list(tbl.props["stats_cols"])
+            std = prop_list(STANDARD_STATS_COLS)
             stats_val = ",".join(cur + [c for c in std if c not in cur])
         updates = {}
         for prop, val in (

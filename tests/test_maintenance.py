@@ -180,6 +180,23 @@ def test_rebucket_lost_race_cleans_up(spark, tmp_path):
     assert len(_state(spark, fresh)) == 7
 
 
+def test_compact_lost_race_cleans_up(spark, tmp_path):
+    path = str(tmp_path / "t")
+    t1 = LakeTable.create(path, DDL, key_col="url", num_buckets=2)
+    t1.merge(spark, batch_df(spark, [("I", i, f"k{i}", i, "v") for i in range(6)]))
+    t2 = LakeTable.load(path)
+    t1.merge(spark, batch_df(spark, [("I", 10, "extra", 10, "v")]))
+    import os as _os
+    n_before = len(_os.listdir(_os.path.join(path, "data")))
+    with pytest.raises(RuntimeError, match="concurrent commit"):
+        t2.compact(spark)  # stale handle loses the race
+    # the losing rewrite of the dirty buckets is not left behind
+    assert len(_os.listdir(_os.path.join(path, "data"))) == n_before
+    fresh = LakeTable.load(path)
+    assert {f["kind"] for f in fresh.manifest["files"]} == {"delta"}
+    assert len(_state(spark, fresh)) == 7
+
+
 def test_vacuum_removes_only_old_orphans(spark, tmp_path):
     import os as _os
     import time as _time

@@ -209,14 +209,24 @@ def test_ingest_stats_cols_enable_col_range_pruning(spark, tmp_path, change_dir)
 
 
 @pytest.mark.parametrize("merge_mode", ["mor", "cow"])
-def test_static_dim_enrichment_broadcast_join(spark, tmp_path, change_dir, merge_mode):
+def test_static_dim_enrichment_broadcast_join(
+    spark, tmp_path, change_dir, merge_mode, monkeypatch
+):
     """Stream-static join: a small dimension broadcast-joined onto the
     LWW winners; declared dim columns persist under both merge modes,
-    and the fused plan keeps its single-exchange shape (broadcast adds
-    no shuffle)."""
-    from tiger_etl_spark.cdc.pipeline import _shape_batch
-    from tiger_etl_spark.cdc.schema_evolution import map_to_live_schema
+    and every ingest write plan keeps its exchange count (broadcast adds
+    no shuffle): the one bucket exchange under mor, plus the one that
+    merges the winners with bucket state under cow."""
+    from tiger_etl_spark.lake import LakeTable
 
+    plans = []
+    write_data = LakeTable._write_data
+
+    def spy(self, spark_, df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write_data(self, spark_, df, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_write_data", spy)
     table = create_pages_table(
         str(tmp_path / "pages_dim"),
         num_buckets=4,
@@ -244,18 +254,14 @@ def test_static_dim_enrichment_broadcast_join(spark, tmp_path, change_dir, merge
             assert r["lang_rank"] in (10, 20, 30)
     # un-declared dim column never leaks into the table
     assert "dim_rank" not in table.scan(spark).columns
-    # plan shape: broadcast join, still exactly one hash-partition
-    # exchange (the bucket repartition)
-    events = spark.read.schema(EVENTS_READ_SCHEMA).parquet(
-        sorted(glob.glob(os.path.join(change_dir, "*.parquet")))[0]
-    )
-    plan_df = _shape_batch(
-        table, map_to_live_schema(events.where(F.col("url").isNotNull())),
-        enrichers, (dim, "lang"),
-    )
-    plan = plan_df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    # plan shape of every ingest write: broadcast join, and exactly the
+    # hash-partition exchanges named above
+    assert len(plans) == N_FILES
+    for plan in plans:
+        assert "BroadcastHashJoin" in plan
+        assert plan.count("Exchange hashpartitioning") == (
+            1 if merge_mode == "mor" else 2
+        ), plan
 
 
 def test_static_dim_guards(spark, tmp_path, change_dir):
@@ -264,17 +270,12 @@ def test_static_dim_guards(spark, tmp_path, change_dir):
     value wins; Column-expression join keys are refused."""
     import pytest as _pytest
 
-    from tiger_etl_spark.cdc.pipeline import _shape_batch
-    from tiger_etl_spark.cdc.schema_evolution import map_to_live_schema
-
     table = create_pages_table(
         str(tmp_path / "pages_g"), num_buckets=4, enrich_ddl="lang_family string"
     )
     events = spark.read.schema(EVENTS_READ_SCHEMA).parquet(
         sorted(glob.glob(os.path.join(change_dir, "*.parquet")))[0]
     )
-    mapped = map_to_live_schema(events.where(F.col("url").isNotNull()))
-
     dup_dim = spark.createDataFrame(
         [("en", "germanic"), ("en", "other")], "lang string, lang_family string"
     )
@@ -287,14 +288,15 @@ def test_static_dim_guards(spark, tmp_path, change_dir):
         [("en", "germanic", 999)],
         "lang string, lang_family string, content_len long",
     )
-    out = _shape_batch(table, mapped, None, (shadow_dim, "lang"))
-    row = out.where(F.col("lang") == "en").limit(1).collect()
+    apply_changes(spark, table, events, batch_id=0, static_dim=(shadow_dim, "lang"))
+    row = table.scan(spark).where(F.col("lang") == "en").limit(1).collect()
     if row:  # stream's content_len wins over the dim's 999
         assert row[0]["content_len"] != 999
 
     with _pytest.raises(ValueError, match="column name"):
-        _shape_batch(
-            table, mapped, None, (shadow_dim, F.col("lang") == shadow_dim["lang"])
+        apply_changes(
+            spark, table, events, batch_id=1,
+            static_dim=(shadow_dim, F.col("lang") == shadow_dim["lang"]),
         )
 
 

@@ -16,10 +16,8 @@ import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as entrymod
-from tiger_etl_spark.cdc.pipeline import _shape_batch, create_pages_table
-from tiger_etl_spark.cdc.schema_evolution import map_to_live_schema
+from tiger_etl_spark.cdc.pipeline import apply_changes, create_pages_table
 from tiger_etl_spark.cdc.schemas import EVENTS_READ_SCHEMA
-from tiger_etl_spark.cdc.validate import with_validation
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -67,34 +65,80 @@ def test_agg_has_partial_combine(spark):
     assert "Exchange" in plan
 
 
-def test_fused_cdc_path_single_exchange(spark, tmp_path):
-    """The CDC hot path: exactly ONE shuffle (the bucket-aligned
-    repartition); the LWW groupBy must not add a second exchange. Uses
-    a real parquet source — empty LocalRelation plans are replanned by
-    AQE and don't reflect the streaming batch plan."""
+def simple_plan(df) -> str:
+    return df._jdf.queryExecution().explainString(
+        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    )
+
+
+@pytest.fixture()
+def write_plans(monkeypatch):
+    """Simple-mode plans of the lake's data writes: the frames handed to
+    `LakeTable._write_data`, and the frames its writer writes. The two
+    differ only when `_write_data` shuffles, which only salting may do."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from tiger_etl_spark.lake import LakeTable
+
+    handed, written = [], []
+    write_data = LakeTable._write_data
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, spark_, df, *args, **kwargs):
+        handed.append(simple_plan(df))
+        return write_data(self, spark_, df, *args, **kwargs)
+
+    def writer_spy(self, *args, **kwargs):
+        if "_bucket" in self._df.columns:  # not the quarantine writer
+            written.append(simple_plan(self._df))
+        return parquet(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "_write_data", spy)
+    monkeypatch.setattr(DataFrameWriter, "parquet", writer_spy)
+    return handed, written
+
+
+def assert_one_write_with_exchanges(write_plans, n: int) -> str:
+    handed, written = write_plans
+    assert len(handed) == len(written) == 1
+    for plan in handed + written:
+        assert plan.count("Exchange hashpartitioning") == n, plan
+    return handed[0]
+
+
+def ingest_changes(spark, tmp_path, merge_mode: str) -> None:
+    """One CDC batch from real parquet change files into a fresh
+    8-bucket pages table."""
     from tiger_etl_spark.cdc.datagen import gen_change_events, write_change_files
 
     changes = str(tmp_path / "changes")
     write_change_files(gen_change_events(seed=3, n=500, n_hosts=10), changes, n_files=2)
     table = create_pages_table(str(tmp_path / "pages"), num_buckets=8)
-    src = spark.read.schema(EVENTS_READ_SCHEMA).parquet(changes).withColumn(
-        "batch_file", F.lit("x")
-    )
-    mapped = map_to_live_schema(
-        with_validation(src)
-        .where(F.size("_invalid_reasons") == 0)
-        .drop("_invalid_reasons")
-    )
-    df = _shape_batch(table, mapped)
-    plan = df._jdf.queryExecution().explainString(
-        df._sc._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
-    )
-    assert plan.count("Exchange hashpartitioning") == 1, plan
+    src = spark.read.schema(EVENTS_READ_SCHEMA).parquet(changes)
+    apply_changes(spark, table, src, batch_id=0, merge_mode=merge_mode)
+
+
+def test_fused_cdc_path_single_exchange(spark, tmp_path, write_plans):
+    """The CDC hot path: exactly ONE shuffle (the bucket-aligned
+    repartition); the LWW groupBy must not add a second exchange, nor
+    the write a third. Uses a real parquet source — empty LocalRelation
+    plans are replanned by AQE and don't reflect the streaming batch
+    plan."""
+    ingest_changes(spark, tmp_path, "mor")
+    plan = assert_one_write_with_exchanges(write_plans, 1)
     # LWW dedup aggregates in place after the aligned repartition —
     # partial+final max_by with NO exchange between them
     assert "partial_max_by" in plan and "max_by" in plan, plan
     # and the one exchange is the bucket-aligned REPARTITION_BY_NUM
     assert "REPARTITION_BY_NUM" in plan, plan
+
+
+def test_cow_cdc_path_two_exchanges(spark, tmp_path, write_plans):
+    """A copy-on-write ingest: the batch's bucket exchange, then one
+    more to merge its winners with the touched buckets' state."""
+    ingest_changes(spark, tmp_path, "cow")
+    plan = assert_one_write_with_exchanges(write_plans, 2)
+    assert plan.count("REPARTITION_BY_NUM") == 2, plan
 
 
 def _values_batch(spark, rows):
@@ -179,6 +223,32 @@ def test_cow_merge_into_fresh_table_no_python_relation(spark, tmp_path, monkeypa
     assert len(plans) == 1
     assert "ExistingRDD" not in plans[0], plans[0]
     assert sorted(r["url"] for r in table.scan(spark).collect()) == ["a", "b"]
+
+
+def test_raw_event_merge_single_exchange(spark, tmp_path, write_plans):
+    """A merge of raw change events resolves them inside the one bucket
+    exchange, and the write adds none."""
+    from tiger_etl_spark.lake import LakeTable
+
+    table = LakeTable.create(
+        str(tmp_path / "raw"), "url string, warc_ts timestamp, text string",
+        key_col="url", num_buckets=4,
+    )
+    rows = [("I", i, f"k{i % 5}", i, f"v{i}") for i in range(1, 12)]
+    table.merge(spark, _values_batch(spark, rows))
+    assert_one_write_with_exchanges(write_plans, 1)
+    got = sorted((r["url"], r["text"]) for r in table.scan(spark).collect())
+    assert got == sorted((f"k{i % 5}", f"v{i}") for i in range(7, 12))
+
+
+def test_compact_single_exchange(spark, mor_table, write_plans):
+    table, _, _ = mor_table
+    before = sorted(tuple(r) for r in table.scan(spark).collect())
+    write_plans[0].clear()
+    write_plans[1].clear()
+    table.compact(spark)
+    assert_one_write_with_exchanges(write_plans, 1)
+    assert sorted(tuple(r) for r in table.scan(spark).collect()) == before
 
 
 def test_pagination_no_global_window(spark):

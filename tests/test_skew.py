@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tiger_etl_spark.cdc.pipeline import apply_changes, create_pages_table
 from tiger_etl_spark.cdc.skew import (
     detect_heavy_hitters,
     salted_repartition,
@@ -82,12 +83,26 @@ def test_salted_lake_write_splits_hot_bucket(spark, tmp_path):
     )
     salted.merge(spark, df.select(cols))
 
+    # the same events through CDC ingest into a salted pages table: the
+    # ingest write must honour write_salts too
+    pages = create_pages_table(str(tmp_path / "pages"), num_buckets=4, write_salts=4)
+    apply_changes(
+        spark, pages,
+        _skewed_events(spark).withColumns({
+            "body": F.lit(None).cast("binary"),
+            "schema_id": F.lit(2),
+            "batch_file": F.lit("f"),
+        }),
+        batch_id=0,
+    )
+
     # same final state either way
     a = plain.scan(spark).select(cols[2:]).sort("url")
-    b = salted.scan(spark).select(cols[2:]).sort("url")
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+    for t in (salted, pages):
+        b = t.scan(spark).select(cols[2:]).sort("url")
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
 
-    # the hot urls all hash to few buckets; the salted table must spread
+    # the hot urls all hash to few buckets; the salted tables must spread
     # the densest bucket over more files than the unsalted one
     def max_files_per_bucket(t):
         counts = {}
@@ -95,7 +110,8 @@ def test_salted_lake_write_splits_hot_bucket(spark, tmp_path):
             counts[f["bucket"]] = counts.get(f["bucket"], 0) + 1
         return max(counts.values())
 
-    assert max_files_per_bucket(salted) > max_files_per_bucket(plain)
-    # and compaction re-collapses to one file per bucket
-    salted.compact(spark)
-    assert max_files_per_bucket(salted) == 1
+    for t in (salted, pages):
+        assert max_files_per_bucket(t) > max_files_per_bucket(plain)
+        # and compaction re-collapses to one file per bucket
+        t.compact(spark)
+        assert max_files_per_bucket(t) == 1

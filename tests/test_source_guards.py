@@ -19,6 +19,13 @@ PY_EMPTY_RELATION = re.compile(r"createDataFrame\(\s*\[\s*\]")
 # LakeTransaction, never by setting the flag or flipping the pointer.
 STAGED_COMMIT_INTERNALS = re.compile(r"_defer_pointer|_write_pointer\(")
 
+# How a write picks LWW winners and lays rows out by bucket lives in one
+# place, LakeTable._winners: no caller resolves or repartitions by a
+# table's bucket count on its own.
+WRITE_SHAPE_INTERNALS = re.compile(
+    r"\b_resolve\w*\(|\.repartition\(\s*[\w.]*num_buckets"
+)
+
 
 def _engine_hits(pattern: re.Pattern, skip: str | None = None) -> list[str]:
     return [
@@ -39,4 +46,10 @@ def test_no_python_backed_empty_relation_in_engine_code():
 def test_staged_commit_internals_stay_in_lake():
     assert _engine_hits(STAGED_COMMIT_INTERNALS)  # the pattern is live
     hits = _engine_hits(STAGED_COMMIT_INTERNALS, skip="tiger_etl_spark/lake")
+    assert not hits, hits
+
+
+def test_write_shape_stays_in_lake():
+    assert _engine_hits(WRITE_SHAPE_INTERNALS)  # the pattern is live
+    hits = _engine_hits(WRITE_SHAPE_INTERNALS, skip="tiger_etl_spark/lake")
     assert not hits, hits

@@ -4,12 +4,15 @@ One micro-batch of change events flows through:
 
 1. validate → quarantine split           (Pydantic analog, §1.3)
 2. schema-id mapping to the live schema  (Alembic analog, §4 #3)
-3. LWW dedup per url                     (W3; skew-proof max_by)
-4. html→text extraction on winners only  (F10 analog, vectorized pandas UDF)
+3. LWW dedup per url                     (W3; max_by in the bucket exchange)
+4. html→text extraction on winners only  (F10 analog, vectorized Arrow UDF)
 5. MERGE INTO the lake table             (J3/J6; tombstoned deletes)
 6. lineage + watermark accounting        (A4 analog; exactly-once props)
 
-Extraction runs *after* dedup so losing events never pay the UDF.
+Steps 3–5 are one `LakeTable.merge`. It owns the one bucket exchange and
+the LWW resolve; this module hands it a `derive` (step 4, plus the
+static-dim join and enrichers) that the merge applies to the winners,
+after the exchange, so losing events never pay the UDF.
 The applied-batch id is committed atomically with the data files, so a
 replay from checkpoint skips the batch entirely (and even a crash
 between data-commit and checkpoint-commit is safe: re-applying is a
@@ -28,7 +31,6 @@ from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
 
 from tiger_etl_spark.cdc.schema_evolution import map_to_live_schema
 from tiger_etl_spark.cdc.schemas import EVENTS_READ_SCHEMA, PAGES_SCHEMA
@@ -213,7 +215,7 @@ def _checked_dim(static_dim: tuple, stream_cols: list[str]) -> DataFrame:
     that shadow stream/internal columns are dropped (the stream's value
     wins — a dim that redefines `content_len` must not make the select
     ambiguous); duplicate join keys are rejected (they would multiply
-    LWW winners and break the prepared-merge one-row-per-key contract).
+    LWW winners and break the merge's one-row-per-key contract).
     The duplicate check is one tiny action on the (small, broadcastable)
     dim — cached on the DataFrame handle so a streaming run pays it
     once, not per micro-batch."""
@@ -242,103 +244,6 @@ def _checked_dim(static_dim: tuple, stream_cols: list[str]) -> DataFrame:
     return dim_df.drop(*shadowed) if shadowed else dim_df
 
 
-def _shape_batch(
-    table: LakeTable,
-    mapped: DataFrame,
-    enrichers: dict | None = None,
-    static_dim: tuple[DataFrame, object] | None = None,
-) -> DataFrame:
-    """The one batch-shaping path of every ingest entry point (live
-    apply, quarantine replay, audit-reject replay), chosen only by the
-    table's merge policy.
-
-    merge_policy='lww' — the hot path, one shuffle total (SURVEY.md §3
-    steps 3–5 fused), merged as a PREPARED batch under mor and cow:
-
-      repartition(num_buckets, url)        — the ONLY exchange; partition
-                                             id == bucket (bucket_expr)
-      → LakeTable._resolve_lww             — LWW winner per url
-                                             (groupBy + max_by),
-                                             partition-local: hash(url,
-                                             B) already satisfies the
-                                             clustered distribution, so
-                                             Catalyst adds NO second
-                                             exchange (max_by's struct
-                                             buffer forces partial+final
-                                             SortAggregate over a
-                                             partition-local sort —
-                                             pinned in test_plans.py)
-      → extract_text_udf on html           — winners only, scalar Arrow/
-                                             pandas UDF: just the html
-                                             column crosses the JVM↔
-                                             Python boundary, not the row
-
-    The result is still laid out one-partition-per-bucket, so a mor
-    merge writes file-per-bucket with zero further shuffles. Losing
-    events never pay the extraction UDF; no per-row Python anywhere.
-
-    merge_policy='partial' — raw events (op preserved, no batch
-    collapse; see LakeTable.merge): every event pays extraction.
-
-    Both then take the same static-dim join, enrichers and projection,
-    so a replay enriches exactly like live ingest.
-    """
-    cols = [
-        "url",
-        "warc_ts",
-        "html",
-        extract_text_udf(F.col("html")).alias("text"),
-        "lang",
-        "content_len",
-    ]
-    if table.merge_policy == "lww":
-        normalized = mapped.select(
-            "url",
-            "warc_ts",
-            "html",
-            "lang",
-            "content_len",
-            F.col("op_seq").cast("long").alias("_op_seq"),
-            (F.col("op") == "D").alias("_deleted"),
-        )
-        winners = table._resolve_lww(
-            normalized.repartition(table.num_buckets, F.col(table.key_col))
-        )
-        lead, tail = [], ["_op_seq", "_deleted", "_bucket"]
-        out = winners.select(
-            *cols, "_op_seq", "_deleted", table.bucket_expr().alias("_bucket")
-        )
-    else:
-        lead, tail = ["op", "op_seq"], []
-        out = mapped.select(*lead, *cols)
-    if static_dim is not None:
-        # stream-static dimension enrichment: a BROADCAST left join with
-        # a small dim table (host metadata, language families, domain
-        # reputation) — on the lww path it lands on the winners-only,
-        # bucket-aligned stage, the broadcast preserves the
-        # partitioning, so the prepared merge still writes with zero
-        # further shuffles and losers never pay the join. Dim columns
-        # persist only if declared in the table schema (enrich_ddl);
-        # others feed `enrichers` expressions and are projected away
-        # below.
-        out = out.join(F.broadcast(_checked_dim(static_dim, out.columns)), static_dim[1], "left")
-    if enrichers:
-        # derived columns materialized at ingest (quality scores, token
-        # counts, fingerprints): on the lww path computed on WINNERS
-        # only, inside the same bucket-aligned stage — no extra shuffle,
-        # losers never pay, and scans filter on the stored column
-        # instead of recomputing (the CCNet/RefinedWeb "score at ingest"
-        # pattern)
-        out = out.withColumns(dict(enrichers))
-    if static_dim is not None:
-        # project to the table's physical columns: un-declared dim
-        # columns must not leak into data files
-        fields = DataType.fromDDL(table.schema_ddl).names
-        have = set(out.columns)
-        out = out.select(*lead, *[f for f in fields if f in have], *tail)
-    return out
-
-
 def _merge_events(
     spark: SparkSession,
     table: LakeTable,
@@ -348,13 +253,39 @@ def _merge_events(
     mode: str = "mor",
     props_updates_fn=None,
 ):
-    """Shape `mapped` (validated events in the live schema) and merge it."""
+    """Merge `mapped` (validated events in the live schema): the one
+    merge of every ingest entry point (live apply, quarantine replay,
+    audit-reject replay), so a replay enriches exactly like live ingest.
+    Its `derive` is html→text extraction, the static-dim broadcast
+    join, then the enrichers. The merge applies it to the rows it is
+    about to write — the LWW winners under merge_policy='lww', inside
+    the one bucket-aligned stage (losing events never pay the extraction
+    UDF or the join), the raw events under 'partial' — and keeps only
+    the table's columns, so un-declared dim columns never reach data
+    files."""
+
+    def derive(rows: DataFrame) -> DataFrame:
+        # scalar Arrow UDF: only the html column crosses the JVM↔Python
+        # boundary, not the row; no per-row Python anywhere
+        out = rows.withColumn("text", extract_text_udf(F.col("html")))
+        if static_dim is not None:
+            # stream-static dimension enrichment (host metadata,
+            # language families, domain reputation): a BROADCAST left
+            # join keeps the bucket-aligned layout, so it adds no
+            # shuffle. Dim columns persist only if declared in the table
+            # schema (enrich_ddl); others may feed `enrichers`.
+            dim = _checked_dim(static_dim, out.columns)
+            out = out.join(F.broadcast(dim), static_dim[1], "left")
+        if enrichers:
+            # derived columns materialized at ingest (quality scores,
+            # token counts, fingerprints): scans filter on the stored
+            # column instead of recomputing (the CCNet/RefinedWeb "score
+            # at ingest" pattern)
+            out = out.withColumns(dict(enrichers))
+        return out
+
     return table.merge(
-        spark,
-        _shape_batch(table, mapped, enrichers, static_dim),
-        mode=mode,
-        prepared=table.merge_policy == "lww",
-        props_updates_fn=props_updates_fn,
+        spark, mapped, mode=mode, props_updates_fn=props_updates_fn, derive=derive
     )
 
 
@@ -638,8 +569,8 @@ def replay_quarantine(
 
     Per quarantined batch dir: read the original wire-schema rows, apply
     the optional `fixer(df) -> df` repair transform, re-validate, run
-    now-valid rows through the same batch-shaping path (`_shape_batch`)
-    as live ingest, and rewrite the dir with only the rows that are
+    now-valid rows through the same merge and `derive` as live
+    ingest, and rewrite the dir with only the rows that are
     STILL invalid (removing it when none are). Deliberately does NOT
     touch the applied-batch ledger — those ids belong to the stream's
     exactly-once bookkeeping, and a replayed merge is idempotent under

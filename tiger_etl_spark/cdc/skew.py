@@ -3,10 +3,12 @@
 Common-Crawl hosts are Zipfian: a few url prefixes dominate a batch.
 Two layers of defense:
 
-1. The LWW dedup itself is already skew-proof: ``LakeTable._resolve``
-   uses an associative ``max_by`` aggregation with map-side partial
-   combine (the algebraic equivalent of salting), so a hot url never
-   concentrates its raw events on one reducer.
+1. The LWW dedup needs no global ordering: ``LakeTable._resolve``
+   is an associative ``max_by`` aggregation, not a ranking window. It is
+   planned sort-based after the bucket exchange (Exchange → Sort →
+   SortAggregate partial → final), so the partial aggregate does not
+   shrink a hot url's events before the shuffle: they all meet on its
+   bucket's task.
 2. The bucket-write shuffle can still hot-spot when one *bucket* gets a
    disproportionate share of a batch (hot host ⇒ many distinct urls can
    still hash across buckets, but a single viral url with heavy payload

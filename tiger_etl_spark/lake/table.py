@@ -88,6 +88,12 @@ def _atomic_write(path: str, data: str) -> None:
     os.replace(tmp, path)
 
 
+def prop_list(value: str | None) -> list[str]:
+    """A comma-separated table prop (``stats_cols``,
+    ``compact_cluster_cols``, ...) as its list of names."""
+    return [c.strip() for c in (value or "").split(",") if c.strip()]
+
+
 # Manifest sharding (Iceberg manifest-list analog): the snapshot manifest
 # v{N}.json holds a small "manifest_list" of immutable segment files
 # (meta/seg-*.json), each carrying a slice of the file entries, instead of
@@ -415,8 +421,8 @@ class LakeTable:
         """Column-wise LWW ($set analog) — delegates to
         operators.partial.partial_lww_state: each column keeps the value
         from its newest setter (any I, or a U with the column non-null)
-        that postdates the key's last D. Same associative one-hash-agg
-        scale shape as `_resolve_lww`. The resolved row is a full row, so
+        that postdates the key's last D. Same associative, skew-safe
+        aggregation as `_resolve_lww`. The resolved row is a full row, so
         it re-enters the table as an 'I'."""
         from tiger_etl_spark.operators.partial import partial_lww_state
 
@@ -424,29 +430,29 @@ class LakeTable:
         set_cols = [
             c
             for c in df.columns
-            if c not in (self.key_col, *ocols, _DELETED_COL, _OP_COL, _BUCKET_COL)
+            if c not in (self.key_col, *ocols, _DELETED_COL, _OP_COL)
         ]
-        resolved = partial_lww_state(
+        return partial_lww_state(
             df, self.key_col, ocols, _OP_COL, set_cols, deleted_col=_DELETED_COL
         ).withColumn(
             _OP_COL, F.when(F.col(_DELETED_COL), F.lit("D")).otherwise(F.lit("I"))
         )
-        if _BUCKET_COL in df.columns:
-            resolved = resolved.withColumn(_BUCKET_COL, self.bucket_expr())
-        return resolved
 
     def _resolve_lww(self, df: DataFrame) -> DataFrame:
         """LWW: keep the max-(order_cols, _op_seq) row per key (SURVEY.md
         §2.5 W3).
 
-        Implemented as a `max_by` hash aggregation, NOT a row_number
-        window: max over a struct is associative, so Spark computes
-        partial maxima map-side before the shuffle — a hot key (one url
-        with millions of events in a batch) reduces to one candidate per
-        input partition instead of millions of rows sorting on a single
-        task. This is the built-in equivalent of two-phase salted dedup,
-        with no sort at all. Ties (exact duplicate events) carry equal
-        payloads, so the winner is well-defined either way."""
+        Implemented as a `max_by` aggregation, NOT a row_number window:
+        max over a struct is associative, so a hot key (one url with
+        millions of events in a batch) needs no global ordering and no
+        per-key row numbering. `max_by` over a struct with string or
+        binary fields cannot use HashAggregate, so Spark plans it
+        sort-based. Under `_winners` the plan is Exchange → Sort →
+        SortAggregate partial_max_by → SortAggregate max_by: the partial
+        aggregate runs after the exchange, so it removes nothing before
+        the shuffle (pinned in tests/test_plans.py). Ties (exact
+        duplicate events) carry equal payloads, so the winner is
+        well-defined either way."""
         cols = [c for c in df.columns if c != self.key_col]
         order = F.struct(*self.manifest["order_cols"], _SEQ_COL)
         return (
@@ -454,6 +460,21 @@ class LakeTable:
             .agg(F.max_by(F.struct(*cols), order).alias("_w"))
             .select(self.key_col, "_w.*")
         )
+
+    def _winners(self, df: DataFrame, resolve: bool = True) -> DataFrame:
+        """The one bucket exchange of every write. `repartition(B, key)`
+        puts bucket i in shuffle partition i (see bucket_expr), so the
+        resolve that follows runs partition-local (the exchange already
+        satisfies its clustering: no second exchange), and `_write_data`
+        emits one file per bucket with no further shuffle. The rows carry
+        their `_bucket`. resolve=False lays raw events out the same way
+        (a partial-policy mor merge writes every event). Reads keep plain
+        `_resolve`: a forced B-way exchange would turn a one-bucket
+        lookup into B tasks."""
+        out = df.repartition(self.num_buckets, F.col(self.key_col))
+        if resolve:
+            out = self._resolve(out)
+        return out.withColumn(_BUCKET_COL, self.bucket_expr())
 
     # --------------------------------------------------------------- scan
     def at_version(self, version: int) -> "LakeTable":
@@ -643,15 +664,16 @@ class LakeTable:
         batch: DataFrame,
         mode: str = "mor",
         props_updates: dict | None = None,
-        prepared: bool = False,
         props_updates_fn=None,
+        derive=None,
     ) -> MergeStats:
-        """MERGE INTO (SURVEY.md §2.3 J6): `batch` has the table schema
-        plus `op ('I'|'U'|'D')` and `op_seq long`. Within-batch LWW dedup
-        keeps the winning event per key (tombstones included — a D must
-        survive dedup to win over earlier I/U). Deletes persist as
-        tombstone rows so late-arriving older events can never resurrect
-        a deleted key (the idempotent-replay guard); `compact()` GCs them.
+        """MERGE INTO (SURVEY.md §2.3 J6): `batch` has table columns
+        plus `op ('I'|'U'|'D')` and `op_seq long`; columns that are not
+        the table's are dropped. Within-batch LWW dedup keeps the
+        winning event per key (tombstones included — a D must survive
+        dedup to win over earlier I/U). Deletes persist as tombstone rows
+        so late-arriving older events can never resurrect a deleted key
+        (the idempotent-replay guard); `compact()` GCs them.
 
         mode='mor' (merge-on-read): append delta files per bucket — one
         shuffle by bucket, write cost ∝ batch size. The 10^10-scale path.
@@ -662,77 +684,67 @@ class LakeTable:
         time order; out-of-order tails must use mor (resolution deferred
         to scan/compact, which see every raw event).
 
-        prepared=True: the caller already normalized (physical columns +
-        `_op_seq`/`_deleted`/`_bucket`), deduped per key, AND hash-
-        partitioned by `_bucket` (the pipeline's fused dedup+extract
-        stage) — merge then writes with NO further shuffle.
+        derive: optional `rows -> rows` callable applied to the batch
+        rows about to be written — the LWW winners under
+        merge_policy='lww' (so losing events never pay it), the raw
+        events under 'partial' — before they meet any table state. It
+        may add columns (text extraction, a broadcast dimension join,
+        enrichers); only the table's columns are kept. Under lww it runs
+        inside the bucket-aligned stage after the one exchange, so it
+        must not shuffle (a broadcast join does not).
 
         props_updates_fn: optional zero-arg callable evaluated AFTER the
         write job and BEFORE the commit — lets the caller fold metrics
         observed during the write (pyspark Observation) into the same
         atomic commit as the data files.
         """
-        if prepared:
-            if self.merge_policy != "lww":
-                raise ValueError("prepared merges require merge_policy='lww'")
-            deduped = batch
-        else:
-            normalized = (
-                batch.withColumn(_SEQ_COL, F.col("op_seq").cast("long"))
-                .withColumn(_DELETED_COL, F.col("op") == "D")
-                .withColumn(_BUCKET_COL, self.bucket_expr())
+        lww = self.merge_policy == "lww"
+        cols = [*DataType.fromDDL(self._physical_ddl()).names, _BUCKET_COL]
+
+        def table_cols(df: DataFrame) -> DataFrame:
+            have = set(df.columns)
+            return df.select(*[c for c in cols if c in have])
+
+        # $set semantics under 'partial': events are written RAW (op
+        # preserved). A batch-local collapse to one full row would stamp
+        # the winner's order on columns it never set and clobber newer
+        # table state — resolution is deferred to scan()/compact().
+        events = table_cols(
+            batch.withColumns(
+                {
+                    _SEQ_COL: F.col("op_seq").cast("long"),
+                    _DELETED_COL: F.col("op") == "D",
+                    **({} if lww else {_OP_COL: F.col("op")}),
+                }
             )
-            fields = DataType.fromDDL(self.schema_ddl).names
-            if self.merge_policy == "partial":
-                # $set semantics: events are written RAW (op preserved).
-                # A batch-local collapse to one full row would stamp the
-                # winner's order on columns it never set and clobber
-                # newer table state — resolution is deferred to
-                # scan()/compact(), which see every event.
-                deduped = normalized.withColumn(_OP_COL, F.col("op")).select(
-                    *fields, _SEQ_COL, _DELETED_COL, _OP_COL, _BUCKET_COL
-                )
-            else:
-                deduped = self._resolve(normalized).select(
-                    *fields, _SEQ_COL, _DELETED_COL, _BUCKET_COL
-                )
+        )
+        rows = self._winners(events) if lww else events
+        if derive is not None:
+            rows = table_cols(derive(rows))
 
         if mode == "mor":
-            write_df = deduped
+            write_df = rows if lww else self._winners(rows, resolve=False)
             removed: list[dict] = []
         elif mode == "cow":
-            touched = [
-                r[_BUCKET_COL]
-                for r in deduped.select(_BUCKET_COL).distinct().collect()
-            ]
-            touched_set = set(touched)
-            old_files = [
+            touched_set = {
+                r[0] for r in events.select(self.bucket_expr()).distinct().collect()
+            }
+            removed = [
                 f for f in self.manifest["files"] if f["bucket"] in touched_set
             ]
-            current = self._read_files(spark, old_files).withColumn(
-                _BUCKET_COL, self.bucket_expr()
+            write_df = self._winners(
+                self._read_files(spark, removed).unionByName(
+                    rows.drop(_BUCKET_COL), allowMissingColumns=True
+                )
             )
-            write_df = self._resolve(current.unionByName(deduped))
-            removed = old_files
         else:
             raise ValueError(f"unknown merge mode {mode!r}")
 
         new_files = self._write_data(
-            spark,
-            write_df,
-            kind="delta" if mode == "mor" else "base",
-            skip_repartition=prepared and mode == "mor",
+            spark, write_df, kind="delta" if mode == "mor" else "base"
         )
         removed_paths = {f["path"] for f in removed}
-        kept = (
-            self.manifest["files"]
-            if mode == "mor"
-            else [
-                f
-                for f in self.manifest["files"]
-                if f["path"] not in removed_paths
-            ]
-        )
+        kept = [f for f in self.manifest["files"] if f["path"] not in removed_paths]
         summary = {
             "operation": f"merge-{mode}",
             "rows_written": sum(f["rows"] for f in new_files),
@@ -745,18 +757,7 @@ class LakeTable:
             self.manifest = dict(
                 self.manifest, props={**self.manifest["props"], **props_updates}
             )
-        try:
-            self._commit(kept + new_files, summary)
-        except RuntimeError:
-            # lost an optimistic-concurrency race: the snapshot on disk
-            # is untouched, so remove THIS attempt's staged data files
-            # (they are referenced by no manifest) and let the caller
-            # reload + retry (`merge_with_retry`)
-            for f in new_files:
-                fp = self._abs(f["path"])
-                if os.path.exists(fp):
-                    os.remove(fp)
-            raise
+        self._commit_or_discard(kept + new_files, new_files, summary)
         return MergeStats(
             snapshot_id=self.manifest["snapshot_id"],
             rows_upserted=sum(f["rows"] for f in new_files),
@@ -814,31 +815,19 @@ class LakeTable:
         not just the first. Normalization bounds come from one narrow
         min/max scan of the rewritten files (column-pruned — reads only
         the z-order columns)."""
-        cluster_ts = cluster_ts or self.manifest["props"].get("compact_cluster_ts")
-        cluster_cols = cluster_cols or [
-            c.strip()
-            for c in self.manifest["props"]
-            .get("compact_cluster_cols", "")
-            .split(",")
-            if c.strip()
-        ]
+        props = self.manifest["props"]
+        cluster_ts = cluster_ts or props.get("compact_cluster_ts")
+        cluster_cols = cluster_cols or prop_list(props.get("compact_cluster_cols"))
         if max_records_per_file is None:
-            mrpf = self.manifest["props"].get("compact_max_records_per_file")
+            mrpf = props.get("compact_max_records_per_file")
             max_records_per_file = int(mrpf) if mrpf else None
-        zorder_cols = zorder_cols or [
-            c.strip()
-            for c in self.manifest["props"]
-            .get("compact_zorder_cols", "")
-            .split(",")
-            if c.strip()
-        ]
+        zorder_cols = zorder_cols or prop_list(props.get("compact_zorder_cols"))
         files = self.manifest["files"]
         dirty_buckets = {f["bucket"] for f in files if f["kind"] == "delta"}
         if not dirty_buckets:
             return MergeStats(snapshot_id=self.manifest["snapshot_id"])
         old = [f for f in files if f["bucket"] in dirty_buckets]
-        df = self._read_files(spark, old).withColumn(_BUCKET_COL, self.bucket_expr())
-        resolved = self._resolve(df)
+        resolved = self._winners(self._read_files(spark, old))
         if tombstone_horizon is not None:
             ts_col = self.manifest["order_cols"][0]
             resolved = resolved.where(
@@ -865,7 +854,7 @@ class LakeTable:
             max_records_per_file=max_records_per_file,
         )
         kept = [f for f in files if f["bucket"] not in dirty_buckets]
-        self._commit(kept + new_files, {"operation": "compact"})
+        self._commit_or_discard(kept + new_files, new_files, {"operation": "compact"})
         return MergeStats(
             snapshot_id=self.manifest["snapshot_id"],
             buckets_touched=len(dirty_buckets),
@@ -881,16 +870,15 @@ class LakeTable:
         df: DataFrame,
         kind: str,
         sort_in_bucket: bool = False,
-        skip_repartition: bool = False,
         ts_cluster: str | None = None,
         sort_cols: list[str] | None = None,
         max_records_per_file: int | None = None,
     ) -> list[dict]:
-        """One shuffle: hash-partition by bucket, then file-per-bucket
-        via partitionBy into a staging dir; files then move (same-fs
-        rename) into data/ and the manifest records them with stats.
-        skip_repartition: input is already partitioned by bucket (fused
-        pipeline) — write directly, zero shuffles."""
+        """File-per-bucket via partitionBy into a staging dir; files then
+        move (same-fs rename) into data/ and the manifest records them
+        with stats. `df` comes from `_winners`: already laid out one
+        partition per bucket, so the only shuffle here is the salted one
+        (`write_salts` > 1)."""
         stage = os.path.join(self.path, f"stage-{uuid.uuid4().hex}")
         ts_col = self.manifest["order_cols"][0]
         # Salted write shuffle: partition by (bucket, salt) so a hot
@@ -899,9 +887,8 @@ class LakeTable:
         # the key (replay-safe). Files-per-bucket > 1 is fine — the
         # manifest tracks files, compact() re-collapses them.
         salts = int(self.manifest["props"].get("write_salts", 1))
-        if skip_repartition:
-            out = df
-        elif salts > 1 and not sort_in_bucket:
+        out = df
+        if salts > 1 and not sort_in_bucket:
             # explicit partition count (REPARTITION_BY_NUM): a flexible
             # repartition would let AQE coalesce small batches back into
             # few tasks, silently defeating the salt
@@ -909,10 +896,6 @@ class LakeTable:
             out = df.repartition(
                 self.num_buckets * salts, F.col(_BUCKET_COL), salt
             )
-        else:
-            # bucket-aligned shuffle (see bucket_expr): partition i holds
-            # exactly bucket i — B even tasks, one output file per bucket
-            out = df.repartition(self.num_buckets, F.col(self.key_col))
         part_cols = [_BUCKET_COL]
         if ts_cluster is not None:
             fmt = {
@@ -999,13 +982,6 @@ class LakeTable:
         shutil.rmtree(stage, ignore_errors=True)
         return new_files
 
-    def _file_stats(self, path: str, ts_col: str) -> dict:
-        """Per-file min/max stats on (key, event-time) for scan pruning,
-        straight from the parquet footer (no data read) — the analog of
-        Iceberg manifest column bounds / the reference's 29 secondary
-        indexes (alembic 310f4b46a4b2:32-110)."""
-        return self._stats_from_metadata(pq.ParquetFile(path).metadata, ts_col)
-
     def _stats_from_metadata(self, md, ts_col: str) -> dict:
         import math
 
@@ -1014,12 +990,8 @@ class LakeTable:
         # analog) — lets scans range-prune on stored/enriched columns
         # (e.g. a quality score) with zero extra commit I/O: the bounds
         # come from the same parquet footer read.
-        extra = {
-            c.strip()
-            for c in self.manifest["props"].get("stats_cols", "").split(",")
-            if c.strip()
-        }
-        wanted = {ts_col, self.key_col} | extra
+        extra = prop_list(self.manifest["props"].get("stats_cols"))
+        wanted = {ts_col, self.key_col, *extra}
         schema_names = [md.schema.column(i).name for i in range(md.num_columns)]
         mins: dict = {}
         maxs: dict = {}
@@ -1119,6 +1091,24 @@ class LakeTable:
             k: v for k, v in self._seg_cache.items() if k in live
         }
 
+    def _commit_or_discard(
+        self, files: list[dict], new_files: list[dict], summary: dict
+    ) -> None:
+        """`_commit(files, summary)` for a commit that wrote `new_files`.
+        If it loses an optimistic-concurrency race, the snapshot on disk
+        is untouched and no manifest references `new_files`: remove them
+        (a merge, a compaction or a full rebucket copy would otherwise sit
+        on disk until `vacuum`) and re-raise, so the caller can reload
+        and retry (`merge_with_retry`)."""
+        try:
+            self._commit(files, summary)
+        except RuntimeError:
+            for f in new_files:
+                fp = self._abs(f["path"])
+                if os.path.exists(fp):
+                    os.remove(fp)
+            raise
+
     def update_props(self, updates: dict) -> None:
         """Commit a props-only change (exactly-once batch bookkeeping)."""
         new_props = {**self.manifest["props"], **updates}
@@ -1133,12 +1123,11 @@ class LakeTable:
         schema; scans of mixed files rely on parquet fill-null for added
         columns and upcast for widened ones; `renames` maps old physical
         name → new name for files written before the rename."""
-        stats_cols = {
-            c.strip()
-            for c in self.manifest["props"].get("stats_cols", "").split(",")
-            if c.strip()
+        protected = {
+            self.key_col,
+            *self.manifest["order_cols"],
+            *prop_list(self.manifest["props"].get("stats_cols")),
         }
-        protected = {self.key_col, *self.manifest["order_cols"], *stats_cols}
         bad = protected & set((renames or {}))
         if bad:
             raise ValueError(
@@ -1342,9 +1331,6 @@ class LakeTable:
             segs.update(s["path"] for s in m.get("manifest_list", []))
         return data, segs
 
-    def _live_files(self, exclude_versions: set[int] | None = None) -> set[str]:
-        return self._live_refs(exclude_versions)[0]
-
     def vacuum(self, max_age_hours: float = 24.0) -> dict:
         """Remove crash debris (Iceberg remove_orphan_files analog):
         staging dirs and data files referenced by NO live manifest,
@@ -1528,32 +1514,20 @@ class LakeTable:
         old_b = self.num_buckets
         df = self._read_files(spark, files)
         # resolution is per-key, independent of bucketing; switch the
-        # live manifest to the new count so bucket_expr/_write_data
-        # target the new layout
-        resolved = self._resolve(df)
+        # live manifest to the new count so _winners/_write_data target
+        # the new layout
         old_manifest = self.manifest
         self.manifest = dict(self.manifest)
         self.manifest["num_buckets"] = new_num_buckets
         try:
             new_files = self._write_data(
-                spark,
-                resolved.withColumn(_BUCKET_COL, self.bucket_expr()),
-                kind="base",
-                sort_in_bucket=True,
+                spark, self._winners(df), kind="base", sort_in_bucket=True
             )
-            try:
-                self._commit(
-                    new_files,
-                    {"operation": "rebucket", "from": old_b, "to": new_num_buckets},
-                )
-            except RuntimeError:
-                # lost the optimistic race (e.g. an ingest merge landed
-                # mid-rewrite): remove the full-table orphan copy
-                for f in new_files:
-                    fp = self._abs(f["path"])
-                    if os.path.exists(fp):
-                        os.remove(fp)
-                raise
+            self._commit_or_discard(
+                new_files,
+                new_files,
+                {"operation": "rebucket", "from": old_b, "to": new_num_buckets},
+            )
         except BaseException:
             # restore the handle to the published snapshot — leaving the
             # new bucket count on the old manifest would make

@@ -16,9 +16,11 @@ the final state is resolved *column-wise*:
 - the row's order columns (event time, sequence) come from the newest
   ``I``/``U``.
 
-Everything is one hash aggregation of associative ``max`` over
-``(order, value)`` structs — partial combine map-side, no window sort,
-no hot-key skew (same scale argument as ``lake.table._resolve``).
+Everything is one aggregation of associative ``max`` over
+``(order, value)`` structs — no window, no per-key ranking. Structs with
+string or binary fields make Spark plan it sort-based; on the write path
+it runs after the bucket exchange (``lake.table.LakeTable._winners``),
+like the LWW ``max_by``.
 """
 
 from __future__ import annotations
