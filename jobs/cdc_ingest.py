@@ -147,7 +147,8 @@ def main() -> None:
         default="halt",
         help="on audit failure: 'halt' the stream fail-closed (restart "
         "re-delivers the batch), or 'quarantine' — dead-letter the raw "
-        "batch under <table>/_audit_rejects/ and continue",
+        "batch in the table's quarantine store (repaired by "
+        "maintenance.py --replay-quarantine --audit) and continue",
     )
     ap.add_argument("--local-cores", type=int, default=0, help=">0: run local[N] (smoke)")
     args = ap.parse_args()

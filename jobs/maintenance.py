@@ -90,8 +90,10 @@ def main() -> None:
     ap.add_argument(
         "--replay-quarantine",
         action="store_true",
-        help="re-validate and re-ingest dead-letter rows before "
-        "maintenance (rows still invalid stay quarantined)",
+        help="re-validate and re-ingest the dead-letter store before "
+        "maintenance: per-row rejects and, with --audit, whole batches "
+        "the stream's audit gate rejected (rows still invalid, and "
+        "repairs that fail --audit, stay quarantined)",
     )
     ap.add_argument(
         "--verify-checksum",
@@ -102,32 +104,27 @@ def main() -> None:
         "manifests (costs two scans)",
     )
     ap.add_argument(
-        "--replay-audit-rejects",
-        action="store_true",
-        help="re-merge whole batches the WAP gate dead-lettered "
-        "(audit_policy=quarantine), staged and re-judged by --audit; "
-        "batches that still fail the gate stay rejected",
-    )
-    ap.add_argument(
         "--audit",
         default=None,
-        help="audit spec for --replay-audit-rejects (same grammar as "
-        "cdc_ingest --audit; typically the SAME spec the stream ran). "
-        "Omitted = repaired batches publish unaudited.",
+        help="audit spec gating each --replay-quarantine merge (same "
+        "grammar as cdc_ingest --audit; typically the SAME spec the "
+        "stream ran). Omitted = per-row repairs publish unaudited and "
+        "audit-rejected batches stay held.",
     )
     ap.add_argument(
         "--enrich",
         default=None,
         help="enricher preset spec ('standard', 'meta', 'content', or a "
-        "'+' combination) to apply during --replay-quarantine / "
-        "--replay-audit-rejects (MUST match what ingest used, or "
-        "repaired rows land with NULL derived columns)",
+        "'+' combination) to apply during --replay-quarantine (MUST "
+        "match what ingest used, or repaired rows land with NULL "
+        "derived columns)",
     )
     ap.add_argument(
         "--dim-table",
         default=None,
-        help="static dimension (parquet) for --replay-quarantine "
-        "(MUST match what ingest used)",
+        help="static dimension (parquet) joined during "
+        "--replay-quarantine (MUST match what ingest used, or repaired "
+        "rows land with NULL dim columns)",
     )
     ap.add_argument("--dim-on", default="lang", help="join column for --dim-table")
     ap.add_argument("--local-cores", type=int, default=None)
@@ -136,6 +133,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from tiger_etl_spark.lake import LakeTable
+    from tiger_etl_spark.lake.table import prop_list
 
     if args.describe:  # pure manifest math — skip Spark startup entirely
         print(json.dumps(LakeTable.load(args.table).describe()))
@@ -165,38 +163,15 @@ def main() -> None:
             replay_quarantine,
             resolve_enrich_spec,
         )
+        from tiger_etl_spark.lake.wap import parse_audit_spec
 
+        dim = spark.read.parquet(args.dim_table) if args.dim_table else None
         out["quarantine_replay"] = replay_quarantine(
             spark,
             table,
+            audit=parse_audit_spec(args.audit) if args.audit else None,
             enrichers=resolve_enrich_spec(args.enrich)[0],
-            static_dim=(
-                (spark.read.parquet(args.dim_table), args.dim_on)
-                if args.dim_table
-                else None
-            ),
-        )
-    if args.replay_audit_rejects:
-        from tiger_etl_spark.cdc.pipeline import (
-            replay_audit_rejects,
-            resolve_enrich_spec,
-        )
-
-        audit = None
-        if args.audit:
-            from tiger_etl_spark.lake.wap import parse_audit_spec
-
-            audit = parse_audit_spec(args.audit)
-        out["audit_reject_replay"] = replay_audit_rejects(
-            spark,
-            table,
-            audit=audit,
-            enrichers=resolve_enrich_spec(args.enrich)[0],
-            static_dim=(
-                (spark.read.parquet(args.dim_table), args.dim_on)
-                if args.dim_table
-                else None
-            ),
+            static_dim=None if dim is None else (dim, args.dim_on),
         )
     if args.rebucket is not None and args.rebucket != table.num_buckets:
         stats = table.rebucket(spark, args.rebucket)
@@ -208,12 +183,8 @@ def main() -> None:
             max_delta_files_per_bucket=args.max_delta_files_per_bucket,
             keep_snapshots=args.keep_snapshots,
             cluster_ts=args.cluster_ts,
-            cluster_cols=(
-                args.cluster_cols.split(",") if args.cluster_cols else None
-            ),
-            zorder_cols=(
-                args.zorder_cols.split(",") if args.zorder_cols else None
-            ),
+            cluster_cols=prop_list(args.cluster_cols) or None,
+            zorder_cols=prop_list(args.zorder_cols) or None,
             max_records_per_file=args.max_records_per_file,
             verify=args.verify_checksum,
         )

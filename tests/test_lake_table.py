@@ -119,11 +119,24 @@ def test_compact_collapses_deltas_and_gcs_tombstones(spark, table):
     assert internal.where(F.col("_deleted")).count() == 0
 
 
-@pytest.mark.parametrize("layout", ["empty", "clean", "dirty", "mixed"])
-def test_scan_same_rows_and_schema_for_every_bucket_layout(spark, table, layout):
+@pytest.mark.parametrize(
+    "layout,policy",
+    [
+        pytest.param(layout, policy, id=layout if policy == "lww" else f"{layout}-{policy}")
+        for policy in ("lww", "partial")
+        for layout in ("empty", "clean", "dirty", "mixed")
+    ],
+)
+def test_scan_same_rows_and_schema_for_every_bucket_layout(spark, tmp_path, layout, policy):
     """Whichever legs a snapshot has — none, only base (clean) buckets,
     only delta (dirty) buckets, or both — scan() returns the live schema
-    and the LWW state."""
+    and the LWW state, under either merge policy (a partial table's
+    internal scan keeps `_op` nullable even when every bucket is
+    dirty)."""
+    table = LakeTable.create(
+        str(tmp_path / "t"), DDL, key_col="url", order_cols=("warc_ts",),
+        num_buckets=4, merge_policy=policy,
+    )
     rows = [("I", i, f"k{i}", i, f"v{i}") for i in range(12)]
     later = [("U", 20, "k1", 50, "w1"), ("D", 21, "k2", 51, None)]
     want = {}

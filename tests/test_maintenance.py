@@ -279,3 +279,58 @@ def test_maintain_verify_checksum_passes_and_rolls_back(spark, tmp_path):
     assert out3["snapshots_expired_files_removed"] == 0
     # rolled back: full content restored, k0 included
     assert _state(spark, t2) == before2
+
+
+def test_maintenance_cli_column_lists_allow_spaces(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """`jobs/maintenance.py --zorder-cols "x, y"` (and --cluster-cols)
+    name the columns x and y, not " y": the compaction runs on them and
+    preserves the table's state."""
+    import json
+    import sys
+
+    from jobs.maintenance import main
+
+    path = str(tmp_path / "t")
+    t = LakeTable.create(
+        path, f"{DDL}, x long, y long", key_col="url", num_buckets=2
+    )
+    for j in range(3):
+        t.merge(
+            spark,
+            spark.createDataFrame(
+                [
+                    ("I", j * 10 + i, f"k{i}", ts(j * 10 + i), f"v{j}", i * j, i - j)
+                    for i in range(4)
+                ],
+                "op string, op_seq long, url string, warc_ts timestamp, "
+                "text string, x long, y long",
+            ),
+        )
+    before = sorted(tuple(r) for r in t.scan(spark).collect())
+
+    seen = []
+    compact = LakeTable.compact
+
+    def spy(self, *args, **kw):
+        seen.append((kw["zorder_cols"], kw["cluster_cols"]))
+        return compact(self, *args, **kw)
+
+    monkeypatch.setattr(LakeTable, "compact", spy)
+    monkeypatch.setattr(
+        sys,
+        "argv",
+        [
+            "maintenance.py", "--table", path,
+            "--max-delta-files-per-bucket", "1",
+            "--zorder-cols", "x, y", "--cluster-cols", " y ,x",
+        ],
+    )
+    main()
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["compacted"]
+    assert seen == [(["x", "y"], ["y", "x"])]
+    after = LakeTable.load(path)
+    assert all(f["kind"] == "base" for f in after.manifest["files"])
+    assert sorted(tuple(r) for r in after.scan(spark).collect()) == before

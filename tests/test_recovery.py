@@ -139,7 +139,10 @@ def test_replay_quarantine_repairs_and_reingests(spark, tmp_path):
         "warc_ts", F.coalesce("warc_ts", F.lit(ts(2)))
     )
     res = replay_quarantine(spark, t, fixer=fix_ts)
-    assert res == {"batches": 1, "rows_applied": 1, "rows_still_invalid": 1}
+    assert res == {
+        "batches": 1, "rows_applied": 1, "rows_still_invalid": 1,
+        "still_failing": 0,
+    }
     got = t.scan(spark).where(F.col("url") == "http://fixable/2").collect()
     assert len(got) == 1
     # the replayed row went through the SAME extraction as live ingest
@@ -153,13 +156,17 @@ def test_replay_quarantine_repairs_and_reingests(spark, tmp_path):
         "op", F.when(F.col("op") == "X", "I").otherwise(F.col("op"))
     )
     res = replay_quarantine(spark, t, fixer=fix_op)
-    assert res == {"batches": 1, "rows_applied": 1, "rows_still_invalid": 0}
+    assert res == {
+        "batches": 1, "rows_applied": 1, "rows_still_invalid": 0,
+        "still_failing": 0,
+    }
     assert t.scan(spark).count() == 3
     assert not os.path.isdir(os.path.join(t.path, "_quarantine", "batch_id=0"))
 
     # pass 3: nothing left — a no-op
     assert replay_quarantine(spark, t) == {
         "batches": 0, "rows_applied": 0, "rows_still_invalid": 0,
+        "still_failing": 0,
     }
 
 

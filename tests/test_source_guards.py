@@ -26,6 +26,13 @@ WRITE_SHAPE_INTERNALS = re.compile(
     r"\b_resolve\w*\(|\.repartition\(\s*[\w.]*num_buckets"
 )
 
+# One dead-letter store: the rows of a batch that did not publish (its
+# per-row rejects, or all of it when the audit gate rejected it) live in
+# the dir cdc.pipeline.quarantine_dir names. No other module spells that
+# path, and the retired second store is gone.
+QUARANTINE_PATH = re.compile(r"[\"'/]_quarantine\b")
+RETIRED_DEAD_LETTER_STORE = re.compile(r"_audit_reject[s]")
+
 
 def _engine_hits(pattern: re.Pattern, skip: str | None = None) -> list[str]:
     return [
@@ -52,4 +59,11 @@ def test_staged_commit_internals_stay_in_lake():
 def test_write_shape_stays_in_lake():
     assert _engine_hits(WRITE_SHAPE_INTERNALS)  # the pattern is live
     hits = _engine_hits(WRITE_SHAPE_INTERNALS, skip="tiger_etl_spark/lake")
+    assert not hits, hits
+
+
+def test_one_dead_letter_store():
+    assert not _engine_hits(RETIRED_DEAD_LETTER_STORE)
+    assert _engine_hits(QUARANTINE_PATH)  # the pattern is live
+    hits = _engine_hits(QUARANTINE_PATH, skip="tiger_etl_spark/cdc/pipeline.py")
     assert not hits, hits

@@ -18,7 +18,12 @@ from pyspark.sql import functions as F
 
 from tiger_etl_spark.cdc import oracle
 from tiger_etl_spark.cdc.datagen import gen_change_events, write_change_files
-from tiger_etl_spark.cdc.pipeline import create_pages_table, read_lineage
+from tiger_etl_spark.cdc.pipeline import (
+    create_pages_table,
+    read_lineage,
+    read_quarantine,
+    replay_quarantine,
+)
 from tiger_etl_spark.cdc.streaming import AuditRejected, run_stream
 from tiger_etl_spark.lake import LakeTable
 from tiger_etl_spark.lake.wap import AuditSpec, parse_audit_spec
@@ -109,9 +114,10 @@ def test_audit_halt_stops_before_publish(spark, tmp_path):
 
 
 def test_audit_quarantine_continues_and_deadletters(spark, tmp_path):
-    """quarantine: the poisoned batch is dead-lettered (raw rows +
-    reasons) and the stream drains to the end; final state equals the
-    oracle replay of every file EXCEPT the poisoned one."""
+    """quarantine: the poisoned batch is dead-lettered in the one
+    dead-letter store (raw rows + reasons) and the stream drains to the
+    end; final state equals the oracle replay of every file EXCEPT the
+    poisoned one."""
     cdir = _mk_changes(tmp_path, poison=True)
     tp = str(tmp_path / "pages")
     create_pages_table(tp, num_buckets=4)
@@ -140,11 +146,21 @@ def test_audit_quarantine_continues_and_deadletters(spark, tmp_path):
     assert set(state) == set(expected)
     assert all(v is None or v >= 0 for v in state.values())
 
-    rdir = os.path.join(tp, "_audit_rejects", f"batch_id={bad_id}")
-    rejected = spark.read.parquet(rdir)
-    assert rejected.count() > 0
-    assert rejected.where(F.col("content_len") >= 0).count() == 0
-    with open(os.path.join(rdir, "_reasons.json")) as fh:
+    # the batch's dead-letter dir holds exactly the poisoned file's
+    # rows, each tagged with the checks the batch failed
+    qdir = os.path.join(tp, "_quarantine", f"batch_id={bad_id}")
+    rejected = spark.read.parquet(qdir).collect()
+
+    def key(r):
+        return (r["op"], r["op_seq"], r["url"])
+
+    poisoned = pq.read_table(files[POISON_IDX]).to_pylist()
+    assert sorted(map(key, rejected)) == sorted(map(key, poisoned))
+    assert all(r["content_len"] < 0 for r in rejected)
+    assert {r["_invalid_reasons"] for r in rejected} == {
+        "audit:" + ",".join(failures)
+    }
+    with open(os.path.join(qdir, "_reasons.json")) as fh:
         reasons = json.load(fh)
     assert reasons["failures"] == failures
     # no lineage row for the rejected batch (its staged snapshot was
@@ -152,9 +168,6 @@ def test_audit_quarantine_continues_and_deadletters(spark, tmp_path):
     lineage = _lineage_snapshots(spark, tp)
     assert bad_id not in lineage
     assert lineage == {r.batch_id: r.snapshot_id for r in res.lineage}
-    assert not os.path.isdir(
-        os.path.join(tp, "_quarantine", f"batch_id={bad_id}")
-    )
 
 
 def test_audit_error_inside_staged_batch_leaves_nothing_behind(
@@ -214,14 +227,14 @@ def test_audit_quarantine_exactly_once_on_restart(spark, tmp_path):
     assert _final(spark, tp) == before
 
 
-def test_replay_audit_rejects_repairs_and_publishes(spark, tmp_path):
+def test_replay_audit_rejected_batch_repairs_and_publishes(spark, tmp_path):
     """The repair loop: a dead-lettered batch, fixed (content_len
     recomputed from html) and re-merged under the SAME audit, brings the
-    table to full parity with the never-poisoned change log; the reject
-    dir and the rejected-prop entry are cleared. An unfixed replay must
-    still fail the gate and keep the dir."""
-    from tiger_etl_spark.cdc.pipeline import replay_audit_rejects
-
+    table to full parity with the never-poisoned change log; the dir and
+    the rejected-prop entry are cleared in ONE commit. A replay without
+    a gate must hold the batch, an unfixed replay must still fail the
+    gate, and a fix that leaves every row invalid publishes nothing: all
+    three keep the dir intact."""
     cdir = _mk_changes(tmp_path, poison=True)
     tp = str(tmp_path / "pages")
     create_pages_table(tp, num_buckets=4)
@@ -237,21 +250,55 @@ def test_replay_audit_rejects_repairs_and_publishes(spark, tmp_path):
     assert res.batches_rejected == 1
     bad_id = res.audit_failures[0][0]
     table = LakeTable.load(tp)
-    rdir = os.path.join(tp, "_audit_rejects", f"batch_id={bad_id}")
+    rdir = os.path.join(tp, "_quarantine", f"batch_id={bad_id}")
+    n_rejected = spark.read.parquet(rdir).count()
+    # the store also holds the stream's one per-row reject (an event
+    # with an empty url, in another batch): every replay re-validates it
+    # and keeps it
+    row_rejects = read_quarantine(spark, table).where(
+        ~F.col("_invalid_reasons").startswith("audit:")
+    )
+    assert row_rejects.count() == 1
+    row_dir = os.path.join(
+        tp, "_quarantine", f"batch_id={row_rejects.first()['batch_id']}"
+    )
+    v = table.manifest["version"]
+
+    def store():
+        # file lists of both dirs plus the reject's sidecar
+        with open(os.path.join(rdir, "_reasons.json")) as fh:
+            reasons = json.load(fh)
+        return sorted(os.listdir(rdir)), sorted(os.listdir(row_dir)), reasons
+
+    def assert_untouched(out, rows_still_invalid, still_failing):
+        assert out == {
+            "batches": 2,
+            "rows_applied": 0,
+            "rows_still_invalid": rows_still_invalid,
+            "still_failing": still_failing,
+        }
+        assert store() == store_before
+        published = LakeTable.load(tp)
+        assert published.manifest["version"] == v
+        assert str(bad_id) in published.props["audit_rejected"]
+
+    store_before = store()
+    # replay with NO gate (the per-row replay an operator or cron runs):
+    # the audit-rejected batch is held unread; the per-row reject is
+    # re-validated, still invalid, and kept as it was
+    assert_untouched(replay_quarantine(spark, table), 1, 1)
 
     # replay WITHOUT a fixer: the same poison re-merges staged, fails
     # the same gate, aborts — dir intact, nothing published
-    v = table.manifest["version"]
-    out = replay_audit_rejects(spark, table, audit=_audit())
-    assert out == {
-        "batches": 1,
-        "published": 0,
-        "still_failing": 1,
-        "rows_applied": 0,
-        "rows_dropped_invalid": 0,
-    }
-    assert os.path.isdir(rdir)
-    assert LakeTable.load(tp).manifest["version"] == v
+    assert_untouched(replay_quarantine(spark, table, audit=_audit()), 1, 1)
+
+    # a "fix" that leaves every row invalid: nothing reaches the gate,
+    # nothing publishes, both dirs keep their original rows
+    out = replay_quarantine(
+        spark, table, fixer=lambda df: df.withColumn("url", F.lit("")),
+        audit=_audit(),
+    )
+    assert_untouched(out, n_rejected + 1, 0)
 
     # replay WITH the repair: publishes, clears dir + prop, and the
     # final state now equals the oracle replay of the CLEAN log
@@ -260,10 +307,20 @@ def test_replay_audit_rejects_repairs_and_publishes(spark, tmp_path):
             "content_len", F.length("html").cast("long")  # null html → null
         )
 
-    out2 = replay_audit_rejects(spark, table, fixer=fix, audit=_audit())
-    assert out2["published"] == 1 and out2["rows_applied"] > 0
+    out2 = replay_quarantine(spark, table, fixer=fix, audit=_audit())
+    assert out2 == {
+        "batches": 2,
+        "rows_applied": n_rejected,
+        "rows_still_invalid": 1,
+        "still_failing": 0,
+    }
     assert not os.path.isdir(rdir)
-    assert str(bad_id) not in table.props.get("audit_rejected", {})
+    # the entry is cleared by the replayed merge's own commit: one
+    # version, no separate props-only commit after it
+    published = LakeTable.load(tp)
+    assert published.manifest["version"] == v + 1
+    assert str(bad_id) not in published.props.get("audit_rejected", {})
+    assert read_quarantine(spark, published).count() == 1
     clean = _mk_changes(tmp_path, poison=False)
     expected = oracle.replay_dir(clean)
     state = {
@@ -301,15 +358,14 @@ def test_clean_stream_with_audit_matches_oracle(spark, tmp_path):
         assert rows[url]["text"] == e["text"]
 
 
-def test_replay_audit_rejects_partial_table_enriches_like_live_ingest(
+def test_replay_audit_rejected_batch_partial_table_enriches_like_live_ingest(
     spark, tmp_path
 ):
     """A merge_policy='partial' table that declares an enrich column and
-    a static-dim column: the rows an audit-reject replay publishes must
-    carry both columns exactly as live ingest of the same (repaired)
-    change log does — the replay takes the same shaping path, enrichers
-    and static_dim included."""
-    from tiger_etl_spark.cdc.pipeline import replay_audit_rejects
+    a static-dim column: the rows a replay of an audit-rejected batch
+    publishes must carry both columns exactly as live ingest of the same
+    (repaired) change log does — the replay takes the same shaping path,
+    enrichers and static_dim included."""
     from tiger_etl_spark.cdc.schemas import PAGES_SCHEMA
 
     ddl = ", ".join(
@@ -347,16 +403,17 @@ def test_replay_audit_rejects_partial_table_enriches_like_live_ingest(
     )
     assert res.batches_rejected == 1
     bad_id = res.audit_failures[0][0]
-    rdir = os.path.join(tp, "_audit_rejects", f"batch_id={bad_id}")
+    rdir = os.path.join(tp, "_quarantine", f"batch_id={bad_id}")
     replayed_urls = {r["url"] for r in spark.read.parquet(rdir).collect()}
 
     def fix(df):
         return df.withColumn("content_len", F.length("html").cast("long"))
 
-    out = replay_audit_rejects(
+    out = replay_quarantine(
         spark, LakeTable.load(tp), fixer=fix, audit=_audit(), **kw
     )
-    assert out["published"] == 1 and out["rows_applied"] > 0
+    assert out["still_failing"] == 0 and out["rows_applied"] > 0
+    assert not os.path.isdir(rdir)
 
     live = mk_table("live")
     run_stream(

@@ -74,35 +74,6 @@ def _langs(urls: np.ndarray) -> list[str | None]:
     return [choices[zlib.crc32(u.encode()) % 6] for u in urls]
 
 
-def gen_pages(seed: int, n: int, n_hosts: int = 100, n_paths: int | None = None) -> pa.Table:
-    """Base `pages` table (FIXTURES.md §1)."""
-    from tiger_etl_spark.functions.text import extract_text_py
-
-    rng = np.random.default_rng(seed)
-    n_paths = n_paths or max(10, n // max(1, n_hosts // 4))
-    urls = _make_urls(rng, n, n_hosts, n_paths)
-    # dedupe urls, keep first occurrence (a base table has unique keys)
-    _, first_idx = np.unique(urls, return_index=True)
-    first_idx.sort()
-    urls = urls[first_idx]
-    m = len(urls)
-    ts = EPOCH_US + np.arange(m, dtype=np.int64) * 137 * 1_000_000
-    html = _make_html(rng, m)
-    text = [extract_text_py(h) for h in html]
-    langs = _langs(urls)
-    content_len = [len(h) if h is not None else None for h in html]
-    return pa.table(
-        {
-            "url": pa.array(urls, pa.string()),
-            "warc_ts": pa.array(ts, pa.timestamp("us", tz="UTC")),
-            "html": pa.array(html, pa.binary()),
-            "text": pa.array(text, pa.string()),
-            "lang": pa.array(langs, pa.string()),
-            "content_len": pa.array(content_len, pa.int64()),
-        }
-    )
-
-
 def gen_change_events(
     seed: int,
     n: int,
@@ -368,23 +339,3 @@ def write_change_files(
         # exact duplicate rows re-appear in the next file
         carry = idx[[bool(ev["dup_next_file"][i]) for i in idx]]
     return paths
-
-
-def events_as_dicts(ev: dict) -> list[dict]:
-    """Row-wise view for the single-threaded oracle."""
-    n = len(ev["op_seq"])
-    out = []
-    for i in range(n):
-        out.append(
-            {
-                "op": ev["op"][i],
-                "op_seq": int(ev["op_seq"][i]),
-                "url": ev["url"][i],
-                "warc_ts_us": None if ev["ts_null"][i] else int(ev["warc_ts_us"][i]),
-                "html": ev["html"][i],
-                "lang": ev["lang"][i],
-                "content_len": None if ev["content_len"][i] < 0 else int(ev["content_len"][i]),
-                "valid": bool(ev["valid"][i]),
-            }
-        )
-    return out

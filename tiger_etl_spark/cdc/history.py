@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from tiger_etl_spark.cdc.pipeline import applied_batches_update, batch_applied
 from tiger_etl_spark.lake import LakeTable
+from tiger_etl_spark.lake.table import prop_list
 from tiger_etl_spark.operators.scd import scd2_history
 
 _KEY_PROP = "scd2_key"
@@ -99,7 +100,7 @@ def create_history_table(
 
 def _tracked(hist: LakeTable) -> tuple[str, list[str]]:
     key_col = hist.props.get(_KEY_PROP)
-    attrs = [c for c in hist.props.get(_ATTRS_PROP, "").split(",") if c]
+    attrs = prop_list(hist.props.get(_ATTRS_PROP))
     if not key_col or not attrs:
         raise ValueError(
             f"{hist.path} is not an SCD2 history table (missing "

@@ -22,6 +22,7 @@ no-op under the LWW guard).
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 import threading
@@ -254,8 +255,8 @@ def _merge_events(
     props_updates_fn=None,
 ):
     """Merge `mapped` (validated events in the live schema): the one
-    merge of every ingest entry point (live apply, quarantine replay,
-    audit-reject replay), so a replay enriches exactly like live ingest.
+    merge of both ingest entry points (live apply, quarantine replay),
+    so a replay enriches exactly like live ingest.
     Its `derive` is html→text extraction, the static-dim broadcast
     join, then the enrichers. The merge applies it to the rows it is
     about to write — the LWW winners under merge_policy='lww', inside
@@ -430,7 +431,7 @@ def apply_changes(
     # joined before apply_changes returns or raises; an all-valid batch
     # leaves no (empty) dir behind; a failed merge removes the batch's
     # dead-letter dir so nothing stray outlives an uncommitted batch.
-    qdir = os.path.join(table.path, "_quarantine", f"batch_id={batch_id}")
+    qdir = quarantine_dir(table, batch_id)
     q_err: list[Exception] = []
 
     def write_quarantine() -> None:
@@ -542,10 +543,38 @@ def read_lineage(spark: SparkSession, table: LakeTable) -> DataFrame:
     )
 
 
+def quarantine_dir(table: LakeTable, batch_id: int | None = None) -> str:
+    """The dead-letter store `<table>/_quarantine/`, or batch N's dir in
+    it: the rows of the batch that did not publish — its per-row
+    validation failures, or all of it when the audit gate rejected the
+    batch (`_invalid_reasons` = "audit:<failed checks>")."""
+    root = os.path.join(table.path, "_quarantine")
+    return root if batch_id is None else os.path.join(root, f"batch_id={batch_id}")
+
+
+AUDIT_REASONS = "_reasons.json"
+
+
+def dead_letter_batch(
+    table: LakeTable, batch_df: DataFrame, batch_id: int, res
+) -> None:
+    """Dead-letter a batch the audit gate rejected (`res`): its raw
+    wire-schema rows, `_invalid_reasons` = "audit:<failed checks>", and
+    the `AUDIT_REASONS` sidecar that marks the dir for
+    `replay_quarantine`. Renamed into place, never seen sidecar-less."""
+    tmp = os.path.join(quarantine_dir(table), f".reject-tmp-{uuid.uuid4().hex}")
+    batch_df.select(*EVENTS_READ_SCHEMA.fieldNames()).withColumn(
+        "_invalid_reasons", F.lit("audit:" + ",".join(res.failures))
+    ).write.parquet(tmp)
+    with open(os.path.join(tmp, AUDIT_REASONS), "w") as fh:
+        json.dump({"failures": res.failures, "metrics": res.metrics}, fh)
+    os.rename(tmp, quarantine_dir(table, batch_id))
+
+
 def read_quarantine(spark: SparkSession, table: LakeTable) -> DataFrame:
     """Dead-letter rows. Batches with nothing invalid write no
     quarantine dir at all (the common case), so absence = empty."""
-    qdir = os.path.join(table.path, "_quarantine")
+    qdir = quarantine_dir(table)
     if not os.path.isdir(qdir):
         return empty_frame(spark, EVENTS_READ_SCHEMA).withColumns(
             {
@@ -560,6 +589,7 @@ def replay_quarantine(
     spark: SparkSession,
     table: LakeTable,
     fixer=None,
+    audit=None,
     enrichers: dict | None = None,
     static_dim: tuple[DataFrame, object] | None = None,
 ) -> dict:
@@ -567,20 +597,31 @@ def replay_quarantine(
     split — the reference raises per-row and drops the request,
     validations.py:49-430; a pipeline must instead repair and re-ingest).
 
-    Per quarantined batch dir: read the original wire-schema rows, apply
-    the optional `fixer(df) -> df` repair transform, re-validate, run
-    now-valid rows through the same merge and `derive` as live
-    ingest, and rewrite the dir with only the rows that are
-    STILL invalid (removing it when none are). Deliberately does NOT
-    touch the applied-batch ledger — those ids belong to the stream's
-    exactly-once bookkeeping, and a replayed merge is idempotent under
-    the LWW guard anyway, which also makes this call crash-safe: a crash
-    between merge-commit and dir-rewrite just re-merges no-op winners on
-    the next call. An administrative operation (one merge commit per
-    dead-letter batch), not a hot-path one.
-    """
-    qroot = os.path.join(table.path, "_quarantine")
-    out = {"batches": 0, "rows_applied": 0, "rows_still_invalid": 0}
+    Per batch dir — per-row rejects and audit-rejected whole batches
+    alike: read the original wire-schema rows, apply the optional
+    `fixer(df) -> df` repair transform, re-validate, and run the
+    now-valid rows through the same merge and `derive` as live ingest
+    (pass `enrichers` / `static_dim` as ingest did) as the stage of
+    ``lake.wap.audit_staged``, gated by `audit` (an AuditSpec, typically
+    the stream's; None = a plain commit). A repair that fails the gate
+    aborts trace-free and keeps its dir intact (`still_failing`); so
+    does an audit-rejected batch (its dir holds the `AUDIT_REASONS`
+    sidecar) when `audit` is None — only a gate may publish it, so it
+    is held unread. On publish the dir is rewritten with only the rows
+    that are STILL invalid (removed when none are), and the merge's own
+    commit clears the batch's `audit_rejected` entry; a dir with nothing
+    to publish keeps its original rows (removed only when a `fixer`
+    dropped them all). Deliberately does NOT touch the applied-batch
+    ledger — those ids belong to the stream's exactly-once bookkeeping
+    (it must keep skipping the batch), and a replayed merge is
+    idempotent under the LWW guard anyway, which also makes this call
+    crash-safe: a crash between merge-commit and dir-rewrite just
+    re-merges no-op winners on the next call. An administrative
+    operation (one merge commit per dead-letter batch), not a hot-path
+    one."""
+    qroot = quarantine_dir(table)
+    keys = ("batches", "rows_applied", "rows_still_invalid", "still_failing")
+    out = dict.fromkeys(keys, 0)
     # crash recovery for the rewrite swap below: an aside dir whose
     # batch dir is missing means we died between the two renames —
     # restore it (the conservative superset; re-replaying it is
@@ -593,12 +634,40 @@ def replay_quarantine(
         else:
             os.rename(aside, target)
     for qdir in sorted(glob.glob(os.path.join(qroot, "batch_id=*"))):
+        bid = os.path.basename(qdir).split("=", 1)[1]
+        out["batches"] += 1
+        if audit is None and os.path.exists(os.path.join(qdir, AUDIT_REASONS)):
+            # only a gate may publish what a gate rejected: hold it
+            out["still_failing"] += 1
+            continue
         mapped, still, n_ok, n_bad = _revalidate(spark, qdir, fixer)
+        out["rows_still_invalid"] += n_bad
         if n_ok:
-            # pass static_dim exactly as live ingest did — a replay
-            # that enriched differently would null dim columns
-            _merge_events(spark, table, mapped, enrichers, static_dim)
-        if n_bad:
+
+            def clear_reject() -> dict:
+                # rides the replayed merge's own commit: no crash window
+                # leaves a published repair marked as rejected
+                rejected = dict(table.props.get("audit_rejected", {}))
+                if rejected.pop(bid, None) is None:
+                    return {}
+                return {"audit_rejected": rejected}
+
+            _, res = audit_staged(
+                spark,
+                table,
+                audit,
+                lambda: _merge_events(
+                    spark, table, mapped, enrichers, static_dim,
+                    props_updates_fn=clear_reject,
+                ),
+            )
+            if res is not None and not res.passed:
+                out["still_failing"] += 1
+                continue
+            out["rows_applied"] += n_ok
+        if not n_bad:
+            shutil.rmtree(qdir, ignore_errors=True)
+        elif n_ok:
             # tmp name must sit OUTSIDE the `batch_id=*` glob namespace
             # (and be dot-hidden from partition discovery): a crash
             # between write and rename must never leave a phantom dir a
@@ -618,100 +687,4 @@ def replay_quarantine(
             os.rename(qdir, aside)
             os.rename(tmp, qdir)
             shutil.rmtree(aside, ignore_errors=True)
-        else:
-            shutil.rmtree(qdir, ignore_errors=True)
-        out["batches"] += 1
-        out["rows_applied"] += n_ok
-        out["rows_still_invalid"] += n_bad
-    return out
-
-
-def read_audit_rejects(spark: SparkSession, table: LakeTable) -> DataFrame:
-    """All audit-rejected batches' raw wire rows, with their batch id."""
-    root = os.path.join(table.path, "_audit_rejects")
-    dirs = sorted(glob.glob(os.path.join(root, "batch_id=*")))
-    if not dirs:
-        return empty_frame(spark, EVENTS_READ_SCHEMA).withColumn(
-            "_reject_batch_id", F.lit(None).cast("long")
-        )
-    parts = []
-    for d in dirs:
-        bid = int(os.path.basename(d).split("=", 1)[1])
-        parts.append(
-            spark.read.schema(EVENTS_READ_SCHEMA)
-            .parquet(d)
-            .withColumn("_reject_batch_id", F.lit(bid).cast("long"))
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def replay_audit_rejects(
-    spark: SparkSession,
-    table: LakeTable,
-    fixer=None,
-    audit=None,
-    enrichers: dict | None = None,
-    static_dim: tuple[DataFrame, object] | None = None,
-) -> dict:
-    """Repair-and-reingest for WHOLE batches the Write-Audit-Publish
-    gate dead-lettered (`run_stream(audit_policy='quarantine')`): the
-    per-batch analog of `replay_quarantine`'s per-row recovery.
-
-    Per reject dir: read the raw wire rows, apply the optional
-    `fixer(df) -> df` repair, re-validate (rows the fixer could not
-    save are routed into the normal per-row quarantine dead-letter for
-    this batch when the repair publishes — `replay_quarantine` is their
-    recovery loop), then merge through the SAME batch-shaping path as
-    live ingest (enrichers and static_dim included) — STAGED through
-    ``lake.wap.audit_staged``, the same gate the stream ran, and
-    re-judged by `audit` (an AuditSpec, typically the stream's spec):
-    a repair that still fails the gate aborts trace-free and keeps the
-    reject dir for another round. On publish the dir is removed and the
-    batch's `audit_rejected` prop entry cleared (it stays in the
-    applied ledger — the stream must keep skipping it).
-
-    Crash-safe by idempotence: a crash between publish and dir removal
-    re-replays a merge whose rows are LWW no-ops, the audit passes on
-    the already-repaired state, and the dir is removed then.
-    """
-    root = os.path.join(table.path, "_audit_rejects")
-    out = {
-        "batches": 0,
-        "published": 0,
-        "still_failing": 0,
-        "rows_applied": 0,
-        "rows_dropped_invalid": 0,
-    }
-    for rdir in sorted(glob.glob(os.path.join(root, "batch_id=*"))):
-        bid = int(os.path.basename(rdir).split("=", 1)[1])
-        mapped, still, n_ok, n_bad = _revalidate(spark, rdir, fixer)
-        out["batches"] += 1
-        out["rows_dropped_invalid"] += n_bad
-        if not n_ok:
-            continue
-        _, res = audit_staged(
-            spark,
-            table,
-            audit,
-            lambda: _merge_events(spark, table, mapped, enrichers, static_dim),
-        )
-        if res is not None and not res.passed:
-            out["still_failing"] += 1
-            continue
-        out["published"] += 1
-        out["rows_applied"] += n_ok
-        if n_bad:
-            # preserve the rows the fixer could not save: they re-enter
-            # the per-row dead-letter (their original stream-time copy
-            # was subsumed into this reject dir when the batch bounced)
-            still.write.mode("overwrite").parquet(
-                os.path.join(table.path, "_quarantine", f"batch_id={bid}")
-            )
-        shutil.rmtree(rdir, ignore_errors=True)
-        rejected = dict(table.props.get("audit_rejected", {}))
-        if rejected.pop(str(bid), None) is not None:
-            table.update_props({"audit_rejected": rejected})
     return out

@@ -14,7 +14,6 @@ harmless. Restart-from-checkpoint tests in tests/test_streaming.py.
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 from dataclasses import dataclass, field
@@ -28,6 +27,8 @@ from tiger_etl_spark.cdc.pipeline import (
     apply_changes,
     applied_batches_update,
     batch_applied,
+    dead_letter_batch,
+    quarantine_dir,
 )
 from tiger_etl_spark.cdc.sources import read_change_stream
 from tiger_etl_spark.lake import LakeTable
@@ -64,11 +65,9 @@ def _drop_batch_outputs(table: LakeTable, batch_id: int) -> None:
     """Remove what `apply_changes` wrote beside the table for a batch
     whose staged commit was aborted: its dead-letter rows and its
     lineage row."""
-    for side in ("_quarantine", "_lineage"):
-        shutil.rmtree(
-            os.path.join(table.path, side, f"batch_id={batch_id}"),
-            ignore_errors=True,
-        )
+    lineage = os.path.join(table.path, "_lineage", f"batch_id={batch_id}")
+    for d in (quarantine_dir(table, batch_id), lineage):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def run_stream(
@@ -127,10 +126,13 @@ def run_stream(
     - 'halt' (default, fail-closed): raise AuditRejected; the checkpoint
       did not advance, so a restart re-delivers the batch — an operator
       must fix or drop it.
-    - 'quarantine': dead-letter the RAW batch under
-      `<table>/_audit_rejects/batch_id=N/` (reasons in `_reasons.json`),
-      mark the batch applied in the ledger (so replay skips it, and the
-      SCD2 history/views never see it), and continue the stream.
+    - 'quarantine': dead-letter the RAW batch in the one dead-letter
+      store, `quarantine_dir(table, N)` (every row, `_invalid_reasons`
+      = "audit:<failed checks>"; failures and metrics in its
+      `_reasons.json` sidecar), mark the batch applied in the ledger (so
+      replay skips it, and the SCD2 history/views never see it), and
+      continue the stream. Only `replay_quarantine(audit=...)` publishes
+      it.
     Audit cost is one extra job per batch — enable it when a bad publish
     is costlier than that scan (it usually is)."""
     result = StreamResult()
@@ -191,7 +193,7 @@ def run_stream(
             raise
         if res is not None and not res.passed:
             # the staged batch was aborted; its per-row dead-letter split
-            # is subsumed by the whole-batch reject copy below, and its
+            # is subsumed by the whole-batch dead-letter below, and its
             # lineage row names a snapshot that was never published
             _drop_batch_outputs(table, batch_id)
             result.batches_rejected += 1
@@ -201,21 +203,12 @@ def run_stream(
             # quarantine policy: dead-letter the raw batch, then mark
             # it applied (props-only commit) so replay and later
             # maintenance skip it — the stream keeps going
-            rdir = os.path.join(
-                table.path, "_audit_rejects", f"batch_id={batch_id}"
-            )
-            batch_df.write.mode("overwrite").parquet(rdir)
-            with open(os.path.join(rdir, "_reasons.json"), "w") as fh:
-                json.dump({"failures": res.failures, "metrics": res.metrics}, fh)
+            dead_letter_batch(table, batch_df, batch_id, res)
             hwm = int(table.props.get("applied_batch_hwm", -1))
-            rejected = {
-                k: v
-                for k, v in {
-                    **table.props.get("audit_rejected", {}),
-                    str(batch_id): ",".join(res.failures),
-                }.items()
-                if int(k) > max(hwm, batch_id) - APPLIED_WINDOW
-            }
+            rejected = dict(table.props.get("audit_rejected", {}))
+            rejected[str(batch_id)] = ",".join(res.failures)
+            floor = max(hwm, batch_id) - APPLIED_WINDOW
+            rejected = {k: v for k, v in rejected.items() if int(k) > floor}
             table.update_props(
                 {
                     **applied_batches_update(

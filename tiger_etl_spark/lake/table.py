@@ -235,11 +235,6 @@ class LakeTable:
     def merge_policy(self) -> str:
         return self.manifest.get("merge_policy", "lww")
 
-    def _order_exprs(self) -> list:
-        return [F.col(c).desc() for c in self.manifest["order_cols"]] + [
-            F.col(_SEQ_COL).desc()
-        ]
-
     def bucket_expr(self, col=None):
         """bucket(B, key) = pmod(murmur3(key), B) (see BUCKET_HASH_FN,
         recorded in the manifest) — deliberately the SAME

@@ -19,9 +19,10 @@ upstream schema break, a fan-out bug doubling the row count).
 Three pieces:
 - ``AuditSpec`` — the declarative check set.
 - ``audit_staged`` — the one staged-commit gate of the ingest paths
-  (``run_stream(audit=...)`` per micro-batch, ``replay_audit_rejects``
-  per repaired batch): stage with the pointer held back, audit only the
-  files the stage added, then publish or abort.
+  (``run_stream(audit=...)`` per micro-batch, ``replay_quarantine(
+  audit=...)`` per repaired dead-letter batch): stage with the pointer
+  held back, audit only the files the stage added, then publish or
+  abort.
 - ``WapCommit`` — explicit stage → audit → publish | abort on one table
   with a whole-table audit (the interactive / job-script form).
 
