@@ -591,8 +591,8 @@ def lake_wap_publish_state(spark: SparkSession, sf_dir: str) -> DataFrame:
 def cdc_bootstrap_tail_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot bootstrap + binlog-tail takeover (cdc/bootstrap.py —
     the DMS/Debezium snapshot+streaming pattern): full-load the gen-0
-    crawl as base files at position op_seq=1 (cow on empty, one
-    bucket-aligned shuffle), then tail two change batches through the
+    crawl as base files at position op_seq=1 (applied, then
+    compacted), then tail two change batches through the
     real pipeline — link-rewrite every third page (U, day 2), delete
     every seventh (D, day 3). Final state must be the LWW resolution,
     with text extracted by the SAME vectorized kernel on both the

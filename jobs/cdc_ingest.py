@@ -52,8 +52,11 @@ def main() -> None:
     ap.add_argument("--write-salts", type=int, default=1)
     ap.add_argument("--max-files-per-trigger", type=int, default=8)
     ap.add_argument("--watermark-hours", type=int, default=24)
-    ap.add_argument("--compact-every", type=int, default=8)
-    ap.add_argument("--merge-mode", choices=["mor", "cow"], default="mor")
+    ap.add_argument(
+        "--compact-every", type=int, default=8,
+        help="compact every N applied batches (0 = never; 1 = every bucket "
+        "compacted after each batch)",
+    )
     ap.add_argument(
         "--compact-cluster-ts",
         choices=["year", "month", "day", "hour"],
@@ -316,7 +319,6 @@ def main() -> None:
         args.checkpoint,
         max_files_per_trigger=args.max_files_per_trigger,
         watermark_hours=args.watermark_hours,
-        merge_mode=args.merge_mode,
         compact_every=args.compact_every,
         file_format=args.file_format,
         enrichers=enrichers,

@@ -85,7 +85,7 @@ def _assert_full_parity(spark, table_path, changes):
 def test_bootstrap_then_tail_matches_full_replay(spark, tmp_path, changes):
     """Load the snapshot, tail exactly the post-snapshot files: final
     state == oracle replay of the whole log. Bootstrap wrote BASE files
-    (cow on empty) and set the position marker."""
+    (apply, then compact) and set the position marker."""
     tp = str(tmp_path / "pages")
     t = create_pages_table(tp, num_buckets=4)
     rec = bootstrap_table(spark, t, _snapshot_df(spark, tmp_path, changes))
@@ -122,6 +122,62 @@ def test_bootstrap_is_idempotent(spark, tmp_path, changes):
     v = t.manifest["version"]
     assert bootstrap_table(spark, t, snap) is None
     assert t.manifest["version"] == v
+
+
+def test_bootstrap_writes_day_clustered_base_files(spark, tmp_path):
+    """The load takes the table's compaction layout: into a
+    `compact_cluster_ts='day'` table it writes base files only, one per
+    (bucket, day), so a time-window scan of the bootstrapped corpus
+    prunes files."""
+    import datetime as dt
+
+    t0 = dt.datetime(2025, 3, 1, tzinfo=dt.timezone.utc)
+    rows = [
+        (f"http://h{i % 5}.example/p{i}", t0 + dt.timedelta(days=i % 3, minutes=i),
+         f"<p>page {i}</p>".encode(), "en", 20)
+        for i in range(30)
+    ]
+    tp = str(tmp_path / "pages_day")
+    t = create_pages_table(tp, num_buckets=2, compact_cluster_ts="day")
+    bootstrap_table(spark, t, spark.createDataFrame(rows, SNAP_SCHEMA))
+    files = t.manifest["files"]
+    assert {f["kind"] for f in files} == {"base"}
+    days = [f["min"]["warc_ts"][:10] for f in files]
+    assert days == [f["max"]["warc_ts"][:10] for f in files]
+    assert len(set(days)) == 3
+    assert len({(f["bucket"], d) for f, d in zip(files, days)}) == len(files)
+    assert sorted(r["url"] for r in t.scan(spark).collect()) == sorted(
+        r[0] for r in rows
+    )
+
+
+def test_bootstrap_crash_before_compaction_converges(
+    spark, tmp_path, changes, monkeypatch
+):
+    """A crash after the load's data commit but before its compaction:
+    the rerun's apply is a ledger no-op, then it compacts and sets the
+    marker — all-base, marked, and at oracle parity."""
+    compact = LakeTable.compact
+    crashed = []
+
+    def crash_once(self, *args, **kwargs):
+        if not crashed:
+            crashed.append(True)
+            raise RuntimeError("injected crash before compaction")
+        return compact(self, *args, **kwargs)
+
+    monkeypatch.setattr(LakeTable, "compact", crash_once)
+    tp = str(tmp_path / "pages_crash")
+    snap = _snapshot_df(spark, tmp_path, changes)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        bootstrap_table(spark, create_pages_table(tp, num_buckets=4), snap)
+    t = LakeTable.load(tp)
+    assert t.props.get("bootstrap_op_seq") is None
+    assert {f["kind"] for f in t.manifest["files"]} == {"delta"}
+    assert bootstrap_table(spark, t, snap) is not None
+    assert t.props["bootstrap_op_seq"] == "1"
+    assert {f["kind"] for f in t.manifest["files"]} == {"base"}
+    _assert_full_parity(spark, tp, str(tmp_path / "snap_prefix"))
 
 
 def test_snapshot_to_events_shape(spark, tmp_path, changes):

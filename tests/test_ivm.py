@@ -8,7 +8,7 @@ import os
 from pyspark.sql import functions as F
 
 from tiger_etl_spark.cdc.datagen import gen_change_events, write_change_files
-from tiger_etl_spark.cdc.ivm import IncrementalCountView, dirty_buckets_between
+from tiger_etl_spark.cdc.ivm import IncrementalAggView, dirty_buckets_between
 from tiger_etl_spark.cdc.pipeline import apply_changes, create_pages_table
 from tiger_etl_spark.cdc.schemas import EVENTS_READ_SCHEMA
 
@@ -29,7 +29,7 @@ def test_view_tracks_table_across_batches(spark, tmp_path):
     ev = gen_change_events(seed=11, n=1500, n_hosts=40)
     write_change_files(ev, cdir, n_files=3)
     table = create_pages_table(str(tmp_path / "pages"), num_buckets=8)
-    view = IncrementalCountView(str(tmp_path / "view"), "lang")
+    view = IncrementalAggView(str(tmp_path / "view"), "lang")
 
     for i, p in enumerate(sorted(glob.glob(os.path.join(cdir, "*.parquet")))):
         apply_changes(
@@ -57,7 +57,7 @@ def test_refresh_touches_only_dirty_buckets(spark, tmp_path):
         ),
         batch_id=0,
     )
-    view = IncrementalCountView(str(tmp_path / "view"), "lang")
+    view = IncrementalAggView(str(tmp_path / "view"), "lang")
     view.refresh(spark, table)
     v_before = table.manifest["version"]
 
@@ -87,7 +87,7 @@ def test_compaction_keeps_view_correct(spark, tmp_path):
     ev = gen_change_events(seed=13, n=1200, n_hosts=30)
     write_change_files(ev, cdir, n_files=2)
     table = create_pages_table(str(tmp_path / "pages"), num_buckets=8)
-    view = IncrementalCountView(str(tmp_path / "view"), "lang")
+    view = IncrementalAggView(str(tmp_path / "view"), "lang")
     for i, p in enumerate(sorted(glob.glob(os.path.join(cdir, "*.parquet")))):
         apply_changes(
             spark, table, spark.read.schema(EVENTS_READ_SCHEMA).parquet(p), batch_id=i
@@ -124,7 +124,7 @@ def test_refresh_falls_back_after_snapshot_expiry(spark, tmp_path):
         )
 
     t.merge(spark, b([("I", i + 1, f"u{i}", ts(i), "en") for i in range(4)]))
-    view = IncrementalCountView(str(tmp_path / "v"), "lang")
+    view = IncrementalAggView(str(tmp_path / "v"), "lang")
     view.refresh(spark, t)
     for j in range(7):
         t.merge(spark, b([("I", 10 + j, f"w{j}", ts(10 + j), "de")]))
@@ -145,7 +145,7 @@ def test_views_refresh_inside_run_stream(spark, tmp_path):
     write_change_files(ev, cdir, n_files=3)
     tp = str(tmp_path / "pages")
     create_pages_table(tp, num_buckets=4)
-    view = IncrementalCountView(str(tmp_path / "view"), "lang")
+    view = IncrementalAggView(str(tmp_path / "view"), "lang")
     res = run_stream(
         spark,
         cdir,
@@ -182,7 +182,7 @@ def test_views_refresh_on_replayed_skipped_batches(spark, tmp_path):
     create_pages_table(tp, num_buckets=4)
     run_stream(spark, cdir, tp, str(tmp_path / "ckpt1"), max_files_per_trigger=1)
 
-    view = IncrementalCountView(str(tmp_path / "view"), "lang")
+    view = IncrementalAggView(str(tmp_path / "view"), "lang")
     res = run_stream(
         spark,
         cdir,
@@ -199,8 +199,6 @@ def test_views_refresh_on_replayed_skipped_batches(spark, tmp_path):
 def test_agg_view_sum_min_max(spark, tmp_path):
     """Generalized view: sum/min/max partials fold exactly through
     incremental refreshes, updates and deletes included."""
-    from tiger_etl_spark.cdc.ivm import IncrementalAggView
-
     cdir = str(tmp_path / "changes")
     ev = gen_change_events(seed=23, n=1500, n_hosts=40)
     write_change_files(ev, cdir, n_files=3)
@@ -413,7 +411,6 @@ def test_ingest_cli_webgraph_path(spark, tmp_path):
 def test_transform_must_keep_bucket_column(spark, tmp_path):
     import pytest as _pytest
 
-    from tiger_etl_spark.cdc.ivm import IncrementalAggView
     from tiger_etl_spark.lake import LakeTable
 
     t = LakeTable.create(

@@ -1,5 +1,5 @@
-"""LakeTable format: snapshot isolation, merge (mor/cow), compaction,
-tombstones, snapshot expiry."""
+"""LakeTable format: snapshot isolation, merge (with and without a
+compaction after each batch), compaction, tombstones, snapshot expiry."""
 
 from __future__ import annotations
 
@@ -40,48 +40,58 @@ def state(spark, table):
     }
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_merge_upsert_delete(spark, table, mode):
-    b1 = batch_df(
+def merge(spark, table, rows, compact: bool) -> None:
+    """One batch. compact=True keeps a copy-on-write layout: every merge
+    is followed by a compaction, so the table stays all-base."""
+    table.merge(spark, batch_df(spark, rows))
+    if compact:
+        table.compact(spark)
+        assert all(f["kind"] == "base" for f in table.manifest["files"])
+
+
+# "mor": the merged deltas stay; "cow": each merge is compacted away
+WRITE_LAYOUTS = pytest.mark.parametrize("compact", [False, True], ids=["mor", "cow"])
+
+
+@WRITE_LAYOUTS
+def test_merge_upsert_delete(spark, table, compact):
+    merge(
         spark,
+        table,
         [("I", 1, "a", 1, "a1"), ("I", 2, "b", 2, "b1"), ("I", 3, "c", 3, "c1")],
+        compact,
     )
-    table.merge(spark, b1, mode=mode)
     assert set(state(spark, table)) == {"a", "b", "c"}
 
-    b2 = batch_df(spark, [("U", 4, "a", 10, "a2"), ("D", 5, "b", 11, None)])
-    table.merge(spark, b2, mode=mode)
+    merge(spark, table, [("U", 4, "a", 10, "a2"), ("D", 5, "b", 11, None)], compact)
     st = state(spark, table)
     assert set(st) == {"a", "c"}
     assert st["a"][1] == "a2"
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_within_batch_lww_and_tombstone_wins(spark, table, mode):
+@WRITE_LAYOUTS
+def test_within_batch_lww_and_tombstone_wins(spark, table, compact):
     # same key three times in one batch: latest (warc_ts, op_seq) wins;
     # a delete must survive dedup to beat earlier I/U
-    b = batch_df(
-        spark,
-        [
-            ("I", 1, "k", 1, "v1"),
-            ("U", 2, "k", 5, "v2"),
-            ("D", 3, "k", 9, None),
-            ("I", 4, "x", 2, "x1"),
-        ],
-    )
-    table.merge(spark, b, mode=mode)
+    rows = [
+        ("I", 1, "k", 1, "v1"),
+        ("U", 2, "k", 5, "v2"),
+        ("D", 3, "k", 9, None),
+        ("I", 4, "x", 2, "x1"),
+    ]
+    merge(spark, table, rows, compact)
     assert set(state(spark, table)) == {"x"}
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_late_event_cannot_resurrect_delete(spark, table, mode):
-    table.merge(spark, batch_df(spark, [("I", 1, "k", 1, "v1")]), mode=mode)
-    table.merge(spark, batch_df(spark, [("D", 2, "k", 100, None)]), mode=mode)
+@WRITE_LAYOUTS
+def test_late_event_cannot_resurrect_delete(spark, table, compact):
+    merge(spark, table, [("I", 1, "k", 1, "v1")], compact)
+    merge(spark, table, [("D", 2, "k", 100, None)], compact)
     # late update with older event time than the delete → no-op
-    table.merge(spark, batch_df(spark, [("U", 3, "k", 50, "late")]), mode=mode)
+    merge(spark, table, [("U", 3, "k", 50, "late")], compact)
     assert state(spark, table) == {}
     # but a genuinely newer event re-inserts
-    table.merge(spark, batch_df(spark, [("U", 4, "k", 200, "new")]), mode=mode)
+    merge(spark, table, [("U", 4, "k", 200, "new")], compact)
     assert state(spark, table)["k"][1] == "new"
 
 
@@ -141,8 +151,8 @@ def test_scan_same_rows_and_schema_for_every_bucket_layout(spark, tmp_path, layo
     later = [("U", 20, "k1", 50, "w1"), ("D", 21, "k2", 51, None)]
     want = {}
     if layout != "empty":
-        table.merge(spark, batch_df(spark, rows), mode="mor" if layout == "dirty" else "cow")
-        table.merge(spark, batch_df(spark, later), mode="cow" if layout == "clean" else "mor")
+        merge(spark, table, rows, compact=layout == "mixed")
+        merge(spark, table, later, compact=layout == "clean")
         want = {f"k{i}": (ts(i), f"v{i}") for i in range(12) if i != 2}
         want["k1"] = (ts(50), "w1")
     dirty = {f["bucket"] for f in table.manifest["files"] if f["kind"] == "delta"}

@@ -154,20 +154,6 @@ def test_lake_partial_policy_multi_batch_matches_replay(spark, tmp_path, seed):
     assert _state_of(spark, table) == expected
 
 
-def test_lake_partial_policy_cow_mode(spark, tmp_path):
-    """cow resolves AT WRITE (collapses each batch into current state),
-    so it requires batches in event-time order — correct for an in-order
-    tail; out-of-order streams need mor (resolution deferred to
-    scan/compact, test above). Same caveat as any read-optimized
-    write-time collapse."""
-    evs = sorted(gen_events(11, n=120, n_keys=12), key=lambda e: (e["ts"], e["seq"]))
-    table = _mk_table(tmp_path)
-    table.merge(spark, _batch_df(spark, evs[:60]), mode="cow")
-    table.merge(spark, _batch_df(spark, evs[60:]), mode="cow")
-    expected = {k: (v["a"], v["b"]) for k, v in replay(evs).items()}
-    assert _state_of(spark, table) == expected
-
-
 def test_load_refuses_foreign_bucket_hash(spark, tmp_path):
     import json
     import os

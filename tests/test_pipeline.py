@@ -123,12 +123,15 @@ def test_replayed_batch_skipped(spark, applied, change_dir):
 
 
 def test_cow_mode_same_parity(spark, tmp_path, change_dir):
+    """The copy-on-write layout — every batch applied, then compacted —
+    reaches the same state as the merge-on-read stream."""
     table = create_pages_table(str(tmp_path / "pages_cow"), num_buckets=4)
     for i, path in enumerate(sorted(glob.glob(os.path.join(change_dir, "*.parquet")))):
         events = spark.read.schema(EVENTS_READ_SCHEMA).parquet(path)
-        apply_changes(spark, table, events, batch_id=i, merge_mode="cow")
+        apply_changes(spark, table, events, batch_id=i)
+        table.compact(spark)
     assert_final_state_matches_oracle(spark, table, change_dir)
-    # cow keeps buckets compacted: no delta files
+    # compacted after every batch: no delta files
     assert all(f["kind"] == "base" for f in table.manifest["files"])
 
 
@@ -208,15 +211,10 @@ def test_ingest_stats_cols_enable_col_range_pruning(spark, tmp_path, change_dir)
     assert len(planned) <= len(table.manifest["files"])
 
 
-@pytest.mark.parametrize("merge_mode", ["mor", "cow"])
-def test_static_dim_enrichment_broadcast_join(
-    spark, tmp_path, change_dir, merge_mode, monkeypatch
-):
+def test_static_dim_enrichment_broadcast_join(spark, tmp_path, change_dir, monkeypatch):
     """Stream-static join: a small dimension broadcast-joined onto the
-    LWW winners; declared dim columns persist under both merge modes,
-    and every ingest write plan keeps its exchange count (broadcast adds
-    no shuffle): the one bucket exchange under mor, plus the one that
-    merges the winners with bucket state under cow."""
+    LWW winners; declared dim columns persist, and every ingest write
+    plan keeps its one bucket exchange (broadcast adds no shuffle)."""
     from tiger_etl_spark.lake import LakeTable
 
     plans = []
@@ -241,7 +239,7 @@ def test_static_dim_enrichment_broadcast_join(
         events = spark.read.schema(EVENTS_READ_SCHEMA).parquet(path)
         apply_changes(
             spark, table, events, batch_id=i,
-            merge_mode=merge_mode, enrichers=enrichers, static_dim=(dim, "lang"),
+            enrichers=enrichers, static_dim=(dim, "lang"),
         )
     assert_final_state_matches_oracle(spark, table, change_dir)
     rows = table.scan(spark).collect()
@@ -254,14 +252,12 @@ def test_static_dim_enrichment_broadcast_join(
             assert r["lang_rank"] in (10, 20, 30)
     # un-declared dim column never leaks into the table
     assert "dim_rank" not in table.scan(spark).columns
-    # plan shape of every ingest write: broadcast join, and exactly the
-    # hash-partition exchanges named above
+    # plan shape of every ingest write: broadcast join, and exactly one
+    # hash-partition exchange
     assert len(plans) == N_FILES
     for plan in plans:
         assert "BroadcastHashJoin" in plan
-        assert plan.count("Exchange hashpartitioning") == (
-            1 if merge_mode == "mor" else 2
-        ), plan
+        assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_static_dim_guards(spark, tmp_path, change_dir):

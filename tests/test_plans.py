@@ -106,16 +106,16 @@ def assert_one_write_with_exchanges(write_plans, n: int) -> str:
     return handed[0]
 
 
-def ingest_changes(spark, tmp_path, merge_mode: str) -> None:
+def ingest_changes(spark, tmp_path, name: str) -> None:
     """One CDC batch from real parquet change files into a fresh
-    8-bucket pages table."""
+    8-bucket pages table at `tmp_path/name`."""
     from tiger_etl_spark.cdc.datagen import gen_change_events, write_change_files
 
     changes = str(tmp_path / "changes")
     write_change_files(gen_change_events(seed=3, n=500, n_hosts=10), changes, n_files=2)
-    table = create_pages_table(str(tmp_path / "pages"), num_buckets=8)
+    table = create_pages_table(str(tmp_path / name), num_buckets=8)
     src = spark.read.schema(EVENTS_READ_SCHEMA).parquet(changes)
-    apply_changes(spark, table, src, batch_id=0, merge_mode=merge_mode)
+    apply_changes(spark, table, src, batch_id=0)
 
 
 def test_fused_cdc_path_single_exchange(spark, tmp_path, write_plans):
@@ -131,14 +131,6 @@ def test_fused_cdc_path_single_exchange(spark, tmp_path, write_plans):
     assert "partial_max_by" in plan and "max_by" in plan, plan
     # and the one exchange is the bucket-aligned REPARTITION_BY_NUM
     assert "REPARTITION_BY_NUM" in plan, plan
-
-
-def test_cow_cdc_path_two_exchanges(spark, tmp_path, write_plans):
-    """A copy-on-write ingest: the batch's bucket exchange, then one
-    more to merge its winners with the touched buckets' state."""
-    ingest_changes(spark, tmp_path, "cow")
-    plan = assert_one_write_with_exchanges(write_plans, 2)
-    assert plan.count("REPARTITION_BY_NUM") == 2, plan
 
 
 def _values_batch(spark, rows):
@@ -198,31 +190,6 @@ def test_read_files_empty_is_zero_partitions_live_schema(spark, mor_table):
     empty = table._read_files(spark, [])
     assert empty.rdd.getNumPartitions() == 0
     assert empty.schema == spark.createDataFrame([], table._physical_ddl()).schema
-
-
-def test_cow_merge_into_fresh_table_no_python_relation(spark, tmp_path, monkeypatch):
-    """A copy-on-write merge into buckets with no files yet unions the
-    batch with an empty current state: that state must not be a Python
-    relation either."""
-    from tiger_etl_spark.lake import LakeTable
-
-    table = LakeTable.create(
-        str(tmp_path / "cow"), "url string, warc_ts timestamp, text string",
-        key_col="url", num_buckets=4,
-    )
-    plans = []
-    write_data = LakeTable._write_data
-
-    def spy(self, spark_, df, *args, **kwargs):
-        plans.append(plan_of(df))
-        return write_data(self, spark_, df, *args, **kwargs)
-
-    monkeypatch.setattr(LakeTable, "_write_data", spy)
-    rows = [("I", 1, "a", 1, "a1"), ("I", 2, "b", 2, "b1")]
-    table.merge(spark, _values_batch(spark, rows), mode="cow")
-    assert len(plans) == 1
-    assert "ExistingRDD" not in plans[0], plans[0]
-    assert sorted(r["url"] for r in table.scan(spark).collect()) == ["a", "b"]
 
 
 def test_raw_event_merge_single_exchange(spark, tmp_path, write_plans):

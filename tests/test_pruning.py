@@ -348,6 +348,37 @@ def test_compact_cluster_ts_default_from_props(spark, tmp_path):
     assert got["k1"] == "v1b" and got["k0"] == "v0"
 
 
+def test_rebucket_keeps_cluster_ts_layout(spark, tmp_path):
+    """rebucket is the compaction rewrite: a `compact_cluster_ts='day'`
+    table keeps one base file per (bucket, day) under its new bucket
+    count, so a one-day window still plans fewer files than it holds."""
+    t = LakeTable.create(
+        str(tmp_path / "t"),
+        DDL,
+        key_col="url",
+        num_buckets=2,
+        props={"compact_cluster_ts": "day"},
+    )
+    rows = [
+        ("I", d * 100 + i, f"d{d}k{i}", d * 1440 + i, f"v-{d}-{i}")
+        for d in range(3)
+        for i in range(8)
+    ]
+    t.merge(spark, batch_df(spark, rows))
+    t.compact(spark)
+    t.rebucket(spark, 4)
+    files = t.manifest["files"]
+    assert all(f["kind"] == "base" for f in files)
+    assert all(f["min"]["warc_ts"][:10] == f["max"]["warc_ts"][:10] for f in files)
+    want = {(bucket_of(u, 4), ts(m).isoformat()[:10]) for _, _, u, m, _ in rows}
+    got = [(f["bucket"], f["min"]["warc_ts"][:10]) for f in files]
+    assert sorted(got) == sorted(want)  # one file per (bucket, day)
+    lo, hi = ts(1440), ts(1440 + 100)
+    assert len(t.plan_files(ts_range=(lo, hi))) < len(files)
+    got_rows = _rows(t.scan(spark, ts_range=(lo, hi)))
+    assert got_rows == sorted((f"d1k{i}", f"v-1-{i}") for i in range(8))
+
+
 # --------------------------------- float-stats safety (NaN/Inf poisoning)
 
 

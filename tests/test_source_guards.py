@@ -34,6 +34,12 @@ QUARANTINE_PATH = re.compile(r"[\"'/]_quarantine\b")
 RETIRED_DEAD_LETTER_STORE = re.compile(r"_audit_reject[s]")
 
 
+# One write mode: `LakeTable.merge` appends, and every rewrite to base
+# files is a compaction. No caller picks a merge mode, and the merge
+# runs no bucket-set collect of its own.
+MERGE_MODE = re.compile(r"merge[_-]mode|\bmode\s*=\s*[\"'](?:cow|mor)[\"']")
+
+
 def _engine_hits(pattern: re.Pattern, skip: str | None = None) -> list[str]:
     return [
         f"{path.relative_to(ROOT)}:{text.count(chr(10), 0, m.start()) + 1}"
@@ -67,3 +73,15 @@ def test_one_dead_letter_store():
     assert _engine_hits(QUARANTINE_PATH)  # the pattern is live
     hits = _engine_hits(QUARANTINE_PATH, skip="tiger_etl_spark/cdc/pipeline.py")
     assert not hits, hits
+
+
+def test_one_write_mode():
+    assert MERGE_MODE.search('table.merge(spark, batch, mode="cow")')
+    hits = _engine_hits(MERGE_MODE) + [
+        name
+        for name in ("bench.py", "__spark_entry__.py")
+        if MERGE_MODE.search((ROOT / name).read_text())
+    ]
+    assert not hits, hits
+    table_src = (ROOT / "tiger_etl_spark" / "lake" / "table.py").read_text()
+    assert "distinct().collect()" not in table_src

@@ -16,11 +16,10 @@ Design:
   lineage, enrichment, and text extraction are identical by
   construction, so a bootstrapped row is byte-identical to the same row
   arriving on the stream.
-- ``merge_mode='cow'`` on the empty table means the load writes BASE
-  files directly — one bucket-aligned shuffle, one file per (bucket,
-  salt), no delta layer to compact later. This is the right 100 TB
-  shape: the initial load is the single biggest write the table will
-  ever see.
+- The load is applied like any batch, then compacted: the biggest
+  write the table will ever see leaves no delta layer, and its base
+  files take the table's compaction layout (``compact_cluster_ts``
+  windows, cluster columns, z-order), so time-window scans prune it.
 - Overlap safety needs no fencing: events re-delivered from before the
   snapshot position carry older ``warc_ts`` and lose LWW against the
   snapshot rows; events after it carry newer ``warc_ts`` and win. The
@@ -28,9 +27,10 @@ Design:
   position and replay through the overlap idempotently.
 - Idempotent twice over: the load rides the applied-batch ledger (slot
   ``BOOTSTRAP_BATCH_ID``, committed atomically with the data), so a
-  crash between the data commit and the ``bootstrap_op_seq`` marker
-  prop makes the re-run a ledger no-op that then just sets the marker;
-  a fully completed bootstrap short-circuits on the marker.
+  crash after the data commit but before the ``bootstrap_op_seq``
+  marker prop makes the re-run's apply a ledger no-op; the re-run then
+  compacts (a no-op if that step had finished) and sets the marker. A
+  fully completed bootstrap short-circuits on the marker.
 """
 
 from __future__ import annotations
@@ -83,9 +83,10 @@ def bootstrap_table(
     static_dim=None,
 ) -> LineageRecord | None:
     """Full-load `snapshot` into the (typically empty) `table` as base
-    files, stamping every row at the snapshot position `op_seq`. Returns
-    the load's LineageRecord, or None when the table already carries a
-    ``bootstrap_op_seq`` marker (idempotent re-run)."""
+    files (apply, then compact), stamping every row at the snapshot
+    position `op_seq`. Returns the load's LineageRecord, or None when
+    the table already carries a ``bootstrap_op_seq`` marker (idempotent
+    re-run)."""
     if table.props.get("bootstrap_op_seq") is not None:
         return None
     rec = apply_changes(
@@ -93,11 +94,11 @@ def bootstrap_table(
         table,
         snapshot_to_events(snapshot, op_seq=op_seq),
         batch_id=BOOTSTRAP_BATCH_ID,
-        merge_mode="cow",
         enrichers=enrichers,
         static_dim=static_dim,
     )
-    # marker commits AFTER the data; the crash window in between is
-    # covered by the ledger slot (see module docstring)
+    table.compact(spark)
+    # marker commits AFTER the data and its compaction; a crash in
+    # between is covered by the ledger slot (see module docstring)
     table.update_props({"bootstrap_op_seq": str(op_seq)})
     return rec

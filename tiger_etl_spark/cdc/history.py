@@ -201,7 +201,6 @@ def apply_scd2_changes(
     stats = hist.merge(
         spark,
         frags,
-        mode="mor",
         props_updates_fn=lambda: applied_batches_update(
             hist.props, applied, batch_id, hist.manifest["snapshot_id"] + 1
         ),
@@ -328,7 +327,7 @@ def rewrite_history(
     before = hist.manifest["snapshot_id"]
     with LakeTransaction(txn_dir) as txn:  # commits on clean exit
         txn.truncate(hist)
-        stats = txn.merge(hist, spark, batch, mode="mor")
+        stats = txn.merge(hist, spark, batch)
     return {
         "fragments": stats.rows_upserted,
         "snapshot_before": before,

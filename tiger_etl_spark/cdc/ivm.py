@@ -238,10 +238,3 @@ class IncrementalAggView:
             .groupBy(*self.group_cols)
             .agg(*self._fold_aggs())
         )
-
-
-class IncrementalCountView(IncrementalAggView):
-    """The grouped row-count special case (original surface)."""
-
-    def __init__(self, path: str, group_col: str):
-        super().__init__(path, group_col, {"n_rows": (None, "count")})

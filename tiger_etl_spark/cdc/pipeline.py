@@ -251,7 +251,6 @@ def _merge_events(
     mapped: DataFrame,
     enrichers: dict | None,
     static_dim: tuple[DataFrame, object] | None,
-    mode: str = "mor",
     props_updates_fn=None,
 ):
     """Merge `mapped` (validated events in the live schema): the one
@@ -285,9 +284,7 @@ def _merge_events(
             out = out.withColumns(dict(enrichers))
         return out
 
-    return table.merge(
-        spark, mapped, mode=mode, props_updates_fn=props_updates_fn, derive=derive
-    )
+    return table.merge(spark, mapped, props_updates_fn=props_updates_fn, derive=derive)
 
 
 def _revalidate(spark: SparkSession, path: str, fixer) -> tuple:
@@ -350,7 +347,6 @@ def apply_changes(
     events: DataFrame,
     batch_id: int,
     watermark_hours: int = WATERMARK_HOURS_DEFAULT,
-    merge_mode: str = "mor",
     enrichers: dict | None = None,
     static_dim: tuple[DataFrame, object] | None = None,
 ) -> LineageRecord:
@@ -487,8 +483,7 @@ def apply_changes(
 
     try:
         stats = _merge_events(
-            spark, table, mapped, enrichers, static_dim,
-            mode=merge_mode, props_updates_fn=commit_props,
+            spark, table, mapped, enrichers, static_dim, props_updates_fn=commit_props
         )
     except BaseException:
         # failed (uncommitted) batch: no thread outlives this call, no

@@ -35,7 +35,9 @@ _PROP = "replica_src_version"
 
 def sync_to(spark: SparkSession, source: LakeTable, replica: LakeTable) -> dict:
     """Bring `replica` up to `source`'s current snapshot. Returns sync
-    stats; no-op (and no commit) when already current."""
+    stats; no-op (and no commit) when already current. `rows_upserted`
+    counts the rows written, tombstones included: a merge has no cheap
+    tombstone count of its own."""
     v_from = int(replica.props.get(_PROP, 0))
     v_to = int(source.manifest["version"])
     if v_to == v_from:
@@ -106,7 +108,6 @@ def sync_to(spark: SparkSession, source: LakeTable, replica: LakeTable) -> dict:
         "synced": True,
         "full_resync": full_resync,
         "rows_upserted": stats.rows_upserted,
-        "rows_deleted": stats.rows_deleted,
     }
 
 

@@ -77,7 +77,6 @@ def run_stream(
     checkpoint_dir: str,
     max_files_per_trigger: int = 4,
     watermark_hours: int = WATERMARK_HOURS_DEFAULT,
-    merge_mode: str = "mor",
     compact_every: int = 0,
     maintain_every: int = 0,
     available_now: bool = True,
@@ -98,10 +97,11 @@ def run_stream(
     `compact_every` / `maintain_every`: run `table.compact` (always) or
     `table.maintain` (threshold-gated compaction + snapshot expiry)
     after every N applied batches — maintenance interleaved mid-stream
-    rather than as a separate job; per-batch wall time must stay flat
+    rather than as a separate job (`compact_every=1` keeps the table
+    all-base after every batch); per-batch wall time must stay flat
     across these (pinned by test_streaming + the soak bench).
 
-    `views`: IncrementalCountView instances refreshed after every batch
+    `views`: IncrementalAggView instances refreshed after every batch
     commit (continuous materialized views on the ingest path — each
     refresh scans only the buckets the batch touched, via the manifest
     diff; a refresh crash never corrupts the table, the next one
@@ -183,7 +183,7 @@ def run_stream(
                 audit,
                 lambda: apply_changes(
                     spark, table, batch_df, batch_id,
-                    watermark_hours=watermark_hours, merge_mode=merge_mode,
+                    watermark_hours=watermark_hours,
                     enrichers=enrichers, static_dim=static_dim,
                 ),
             )

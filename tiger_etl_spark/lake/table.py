@@ -3,9 +3,9 @@
 The sandbox has no Iceberg/Delta jars, so the lake layer is built from
 scratch (which is also the assignment: a brand-new engine, not a port).
 Design follows the Iceberg spec's public ideas (snapshot manifests,
-atomic pointer swap, hidden bucket partitioning, copy-on-write vs
-merge-on-read row-level operations, schema-id evolution) re-implemented
-minimally for a single-writer CDC sink:
+atomic pointer swap, hidden bucket partitioning, merge-on-read
+row-level operations with compaction, schema-id evolution)
+re-implemented minimally for a single-writer CDC sink:
 
 - ``meta/v{N}.json``  — snapshot manifest: schema registry, snapshot
   lineage, table properties (including applied-batch bookkeeping for
@@ -28,8 +28,9 @@ Partitioning: hidden ``bucket(B, key)`` via ``pmod(murmur3(key), B)``
 key)`` is bucket-aligned — see ``bucket_expr``).
 A CDC upsert table is bucketed by merge key so every MERGE is a
 bucket-local operation: the shuffle is one hash-partition by bucket, and
-write amplification is bounded by touched buckets (merge-on-read: by the
-batch size alone). Event-time pruning uses per-file min/max warc_ts stats.
+a merge appends delta files, so its write cost is bounded by the batch
+size alone; compaction rewrites only the buckets that hold deltas.
+Event-time pruning uses per-file min/max warc_ts stats.
 
 Reference analog: the TimescaleDB hypertable layout — time partitioning,
 compression segment-by key, retention
@@ -71,7 +72,6 @@ BUCKET_HASH_FN = "murmur3_pmod"
 class MergeStats:
     snapshot_id: int
     rows_upserted: int = 0
-    rows_deleted: int = 0
     buckets_touched: int = 0
     files_added: int = 0
     files_removed: int = 0
@@ -463,7 +463,7 @@ class LakeTable:
         satisfies its clustering: no second exchange), and `_write_data`
         emits one file per bucket with no further shuffle. The rows carry
         their `_bucket`. resolve=False lays raw events out the same way
-        (a partial-policy mor merge writes every event). Reads keep plain
+        (a partial-policy merge writes every event). Reads keep plain
         `_resolve`: a forced B-way exchange would turn a one-bucket
         lookup into B tasks."""
         out = df.repartition(self.num_buckets, F.col(self.key_col))
@@ -657,7 +657,6 @@ class LakeTable:
         self,
         spark: SparkSession,
         batch: DataFrame,
-        mode: str = "mor",
         props_updates: dict | None = None,
         props_updates_fn=None,
         derive=None,
@@ -670,14 +669,11 @@ class LakeTable:
         so late-arriving older events can never resurrect a deleted key
         (the idempotent-replay guard); `compact()` GCs them.
 
-        mode='mor' (merge-on-read): append delta files per bucket — one
-        shuffle by bucket, write cost ∝ batch size. The 10^10-scale path.
-        mode='cow' (copy-on-write): rewrite touched buckets to unique-key
-        base files — read cost stays minimal. Under merge_policy=
-        'partial', cow collapses each batch into current state at write
-        time, which is only order-correct when batches arrive in event-
-        time order; out-of-order tails must use mor (resolution deferred
-        to scan/compact, which see every raw event).
+        Merge-on-read: the batch is appended as delta files, one per
+        touched bucket, after one shuffle by bucket — write cost ∝ batch
+        size, never ∝ table size. Every rewrite of table state into
+        unique-key base files is `compact()`; a caller that wants a
+        read-optimized table after each batch compacts after it.
 
         derive: optional `rows -> rows` callable applied to the batch
         rows about to be written — the LWW winners under
@@ -716,32 +712,11 @@ class LakeTable:
         rows = self._winners(events) if lww else events
         if derive is not None:
             rows = table_cols(derive(rows))
-
-        if mode == "mor":
-            write_df = rows if lww else self._winners(rows, resolve=False)
-            removed: list[dict] = []
-        elif mode == "cow":
-            touched_set = {
-                r[0] for r in events.select(self.bucket_expr()).distinct().collect()
-            }
-            removed = [
-                f for f in self.manifest["files"] if f["bucket"] in touched_set
-            ]
-            write_df = self._winners(
-                self._read_files(spark, removed).unionByName(
-                    rows.drop(_BUCKET_COL), allowMissingColumns=True
-                )
-            )
-        else:
-            raise ValueError(f"unknown merge mode {mode!r}")
-
         new_files = self._write_data(
-            spark, write_df, kind="delta" if mode == "mor" else "base"
+            spark, rows if lww else self._winners(rows, resolve=False), kind="delta"
         )
-        removed_paths = {f["path"] for f in removed}
-        kept = [f for f in self.manifest["files"] if f["path"] not in removed_paths]
-        summary = {
-            "operation": f"merge-{mode}",
+        summary = {  # "merge-mor": the name older manifests carry
+            "operation": "merge-mor",
             "rows_written": sum(f["rows"] for f in new_files),
         }
         if props_updates_fn is not None:
@@ -752,13 +727,12 @@ class LakeTable:
             self.manifest = dict(
                 self.manifest, props={**self.manifest["props"], **props_updates}
             )
-        self._commit_or_discard(kept + new_files, new_files, summary)
+        self._commit_or_discard(self.manifest["files"] + new_files, new_files, summary)
         return MergeStats(
             snapshot_id=self.manifest["snapshot_id"],
-            rows_upserted=sum(f["rows"] for f in new_files),
+            rows_upserted=summary["rows_written"],
             buckets_touched=len({f["bucket"] for f in new_files}),
             files_added=len(new_files),
-            files_removed=len(removed),
             bytes_written=sum(f["bytes"] for f in new_files),
             partition_counts={
                 f"bucket={f['bucket']}": f["rows"] for f in new_files
@@ -810,6 +784,35 @@ class LakeTable:
         not just the first. Normalization bounds come from one narrow
         min/max scan of the rewritten files (column-pruned — reads only
         the z-order columns)."""
+        files = self.manifest["files"]
+        dirty_buckets = {f["bucket"] for f in files if f["kind"] == "delta"}
+        if not dirty_buckets:
+            return MergeStats(snapshot_id=self.manifest["snapshot_id"])
+        old = [f for f in files if f["bucket"] in dirty_buckets]
+        kept = [f for f in files if f["bucket"] not in dirty_buckets]
+        return self._rewrite(
+            spark, old, kept, {"operation": "compact"}, len(dirty_buckets),
+            tombstone_horizon, cluster_ts, cluster_cols, max_records_per_file,
+            zorder_cols,
+        )
+
+    def _rewrite(
+        self,
+        spark: SparkSession,
+        files: list[dict],
+        kept: list[dict],
+        summary: dict,
+        buckets_touched: int,
+        tombstone_horizon=None,
+        cluster_ts: str | None = None,
+        cluster_cols: list[str] | None = None,
+        max_records_per_file: int | None = None,
+        zorder_cols: list[str] | None = None,
+    ) -> MergeStats:
+        """The one rewrite to base files (`compact`, `rebucket`): the
+        LWW winners of `files`, tombstones older than the horizon
+        dropped, written sorted in the layout the arguments name (else
+        the table's `compact_*` props) and committed beside `kept`."""
         props = self.manifest["props"]
         cluster_ts = cluster_ts or props.get("compact_cluster_ts")
         cluster_cols = cluster_cols or prop_list(props.get("compact_cluster_cols"))
@@ -817,12 +820,7 @@ class LakeTable:
             mrpf = props.get("compact_max_records_per_file")
             max_records_per_file = int(mrpf) if mrpf else None
         zorder_cols = zorder_cols or prop_list(props.get("compact_zorder_cols"))
-        files = self.manifest["files"]
-        dirty_buckets = {f["bucket"] for f in files if f["kind"] == "delta"}
-        if not dirty_buckets:
-            return MergeStats(snapshot_id=self.manifest["snapshot_id"])
-        old = [f for f in files if f["bucket"] in dirty_buckets]
-        resolved = self._winners(self._read_files(spark, old))
+        resolved = self._winners(self._read_files(spark, files))
         if tombstone_horizon is not None:
             ts_col = self.manifest["order_cols"][0]
             resolved = resolved.where(
@@ -832,29 +830,27 @@ class LakeTable:
         if zorder_cols:
             from tiger_etl_spark.lake.zorder import column_bounds, zorder_key
 
-            # bounds over the RAW dirty files (a superset of the resolved
+            # bounds over the RAW files (a superset of the resolved
             # values — valid, possibly slightly wide, normalization): a
             # column-pruned narrow scan, no LWW resolution needed
             bounds = column_bounds(
-                self._read_files(spark, old).select(*zorder_cols), zorder_cols
+                self._read_files(spark, files).select(*zorder_cols), zorder_cols
             )
             sort_exprs = [zorder_key(zorder_cols, bounds)] + sort_exprs
         new_files = self._write_data(
             spark,
             resolved,
             kind="base",
-            sort_in_bucket=True,
             ts_cluster=cluster_ts,
             sort_cols=sort_exprs or None,
             max_records_per_file=max_records_per_file,
         )
-        kept = [f for f in files if f["bucket"] not in dirty_buckets]
-        self._commit_or_discard(kept + new_files, new_files, {"operation": "compact"})
+        self._commit_or_discard(kept + new_files, new_files, summary)
         return MergeStats(
             snapshot_id=self.manifest["snapshot_id"],
-            buckets_touched=len(dirty_buckets),
+            buckets_touched=buckets_touched,
             files_added=len(new_files),
-            files_removed=len(old),
+            files_removed=len(files),
             bytes_written=sum(f["bytes"] for f in new_files),
         )
 
@@ -864,7 +860,6 @@ class LakeTable:
         spark: SparkSession,
         df: DataFrame,
         kind: str,
-        sort_in_bucket: bool = False,
         ts_cluster: str | None = None,
         sort_cols: list[str] | None = None,
         max_records_per_file: int | None = None,
@@ -873,7 +868,7 @@ class LakeTable:
         move (same-fs rename) into data/ and the manifest records them
         with stats. `df` comes from `_winners`: already laid out one
         partition per bucket, so the only shuffle here is the salted one
-        (`write_salts` > 1)."""
+        (`write_salts` > 1, delta files only); base files sort in-bucket."""
         stage = os.path.join(self.path, f"stage-{uuid.uuid4().hex}")
         ts_col = self.manifest["order_cols"][0]
         # Salted write shuffle: partition by (bucket, salt) so a hot
@@ -883,7 +878,7 @@ class LakeTable:
         # manifest tracks files, compact() re-collapses them.
         salts = int(self.manifest["props"].get("write_salts", 1))
         out = df
-        if salts > 1 and not sort_in_bucket:
+        if salts > 1 and kind == "delta":
             # explicit partition count (REPARTITION_BY_NUM): a flexible
             # repartition would let AQE coalesce small batches back into
             # few tasks, silently defeating the salt
@@ -903,16 +898,12 @@ class LakeTable:
                 _TSWIN_COL, F.date_format(F.col(ts_col), fmt)
             )
             part_cols.append(_TSWIN_COL)
-            if sort_in_bucket:
-                # writer emits one partition dir at a time per task;
-                # cluster columns sort INSIDE each dir so the
-                # maxRecordsPerFile splits below cut contiguous ranges
-                out = out.sortWithinPartitions(
-                    _BUCKET_COL, _TSWIN_COL, *(sort_cols or []), self.key_col
-                )
-        elif sort_in_bucket:
+        if kind == "base":
+            # writer emits one partition dir at a time per task;
+            # cluster columns sort INSIDE each dir so the
+            # maxRecordsPerFile splits below cut contiguous ranges
             out = out.sortWithinPartitions(
-                _BUCKET_COL, *(sort_cols or []), self.key_col
+                *part_cols, *(sort_cols or []), self.key_col
             )
         writer = out.write.mode("overwrite")
         if max_records_per_file:
@@ -1497,17 +1488,18 @@ class LakeTable:
         """Partition evolution (Iceberg `bucket(B)` spec change): when
         the key population outgrows the bucket count, rewrite the whole
         table — resolved, tombstones preserved — into `new_num_buckets`
-        base files under one snapshot-isolated commit. Readers of older
-        snapshots keep the OLD bucket count (each manifest records its
-        own `num_buckets`, and `at_version` re-derives `bucket_expr`
-        from it), so time travel and in-flight scans stay correct; the
-        next merge shuffles by the new bucketing automatically. One
-        full-table shuffle — schedule like any major compaction."""
+        base files under one snapshot-isolated commit: the rewrite of
+        `compact`, in the compaction layout of the table's props. Readers
+        of older snapshots keep the OLD bucket count (each manifest
+        records its own `num_buckets`, and `at_version` re-derives
+        `bucket_expr` from it), so time travel and in-flight scans stay
+        correct; the next merge shuffles by the new bucketing
+        automatically. One full-table shuffle — schedule like any major
+        compaction."""
         if new_num_buckets == self.num_buckets:
             return MergeStats(snapshot_id=self.manifest["snapshot_id"])
         files = self.manifest["files"]
         old_b = self.num_buckets
-        df = self._read_files(spark, files)
         # resolution is per-key, independent of bucketing; switch the
         # live manifest to the new count so _winners/_write_data target
         # the new layout
@@ -1515,13 +1507,12 @@ class LakeTable:
         self.manifest = dict(self.manifest)
         self.manifest["num_buckets"] = new_num_buckets
         try:
-            new_files = self._write_data(
-                spark, self._winners(df), kind="base", sort_in_bucket=True
-            )
-            self._commit_or_discard(
-                new_files,
-                new_files,
+            return self._rewrite(
+                spark,
+                files,
+                [],
                 {"operation": "rebucket", "from": old_b, "to": new_num_buckets},
+                new_num_buckets,
             )
         except BaseException:
             # restore the handle to the published snapshot — leaving the
@@ -1529,13 +1520,6 @@ class LakeTable:
             # bucket_expr/plan_files disagree with what readers see
             self.manifest = old_manifest
             raise
-        return MergeStats(
-            snapshot_id=self.manifest["snapshot_id"],
-            buckets_touched=new_num_buckets,
-            files_added=len(new_files),
-            files_removed=len(files),
-            bytes_written=sum(f["bytes"] for f in new_files),
-        )
 
 
 def merge_with_retry(
