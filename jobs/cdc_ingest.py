@@ -246,15 +246,9 @@ def main() -> None:
             cur = prop_list(tbl.props["stats_cols"])
             std = prop_list(STANDARD_STATS_COLS)
             stats_val = ",".join(cur + [c for c in std if c not in cur])
-        updates = {}
-        for prop, val in (
-            ("compact_cluster_ts", args.compact_cluster_ts),
-            ("stats_cols", stats_val),
-        ):
-            if val is not None and tbl.props.get(prop) != val:
-                updates[prop] = val
+        flags = {"compact_cluster_ts": args.compact_cluster_ts, "stats_cols": stats_val}
+        updates = tbl.update_props({k: v for k, v in flags.items() if v is not None})
         if updates:
-            tbl.update_props(updates)
             print(json.dumps({"props_updated": updates}))
 
     if args.history_path and not LakeTable.exists(args.history_path):
@@ -303,10 +297,12 @@ def main() -> None:
             enrichers=enrichers,
             static_dim=static_dim,
         )
+        # resumed: a rerun after a crash past the load's data commit
+        status = "skipped" if rec is None else "resumed" if rec.skipped else "loaded"
         print(
             json.dumps(
                 {
-                    "bootstrap": "skipped" if rec is None else "loaded",
+                    "bootstrap": status,
                     "bootstrap_rows": 0 if rec is None else rec.rows_in,
                 }
             )

@@ -15,8 +15,13 @@ Local smoke:
 
     python jobs/maintenance.py --table /tmp/pages --local-cores 8
 
-Prints one JSON line with what was done (compacted? files expired?
-rebucketed?) for the scheduler's logs.
+The layout flags (--cluster-ts, --cluster-cols, --zorder-cols,
+--max-records-per-file) are stored as the table's `compact_*` props, so
+the layout set once holds for every later compaction, in this job or in
+the stream.
+
+Prints one JSON line with what was done (props updated? compacted?
+files expired? rebucketed?) for the scheduler's logs.
 """
 
 from __future__ import annotations
@@ -42,26 +47,30 @@ def main() -> None:
         "--cluster-ts",
         choices=["year", "month", "day", "hour"],
         default=None,
-        help="time-cluster base files at compaction (bucket+window layout)",
+        help="time-cluster base files (bucket+window layout); stored as "
+        "table prop compact_cluster_ts, so every later compaction keeps it",
     )
     ap.add_argument(
         "--cluster-cols",
         default=None,
         help="comma list: sort compacted buckets by these columns "
-        "(tight per-file stats_cols bounds)",
+        "(tight per-file stats_cols bounds); stored as table prop "
+        "compact_cluster_cols",
     )
     ap.add_argument(
         "--zorder-cols",
         default=None,
         help="comma list: Z-order compacted buckets across these "
-        "columns (multi-dimensional pruning)",
+        "columns (multi-dimensional pruning); stored as table prop "
+        "compact_zorder_cols",
     )
     ap.add_argument(
         "--max-records-per-file",
         type=int,
         default=None,
         help="split compacted files at this row count (enables "
-        "cluster/zorder pruning granularity)",
+        "cluster/zorder pruning granularity); stored as table prop "
+        "compact_max_records_per_file",
     )
     ap.add_argument(
         "--rebucket",
@@ -131,6 +140,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
+    from pyspark.sql.types import DataType
 
     from tiger_etl_spark.lake import LakeTable
     from tiger_etl_spark.lake.table import prop_list
@@ -158,6 +168,29 @@ def main() -> None:
         spark = SparkSession.builder.appName("lake-maintenance").getOrCreate()
     table = LakeTable.load(args.table)
     out: dict = {"table": args.table, "version_before": table.manifest["version"]}
+    # the layout flags set the table's compaction layout once: every
+    # later rewrite (rebucket, maintain, a stream's compactions) reads it,
+    # so a column the table lacks would fail each of them, not just this run
+    unknown = set(prop_list(args.cluster_cols) + prop_list(args.zorder_cols)) - set(
+        DataType.fromDDL(table.schema_ddl).names
+    )
+    if unknown:
+        raise SystemExit(f"layout columns {sorted(unknown)} not in the table schema")
+    layout = {
+        "compact_cluster_ts": args.cluster_ts,
+        "compact_cluster_cols": args.cluster_cols,
+        "compact_zorder_cols": args.zorder_cols,
+        "compact_max_records_per_file": args.max_records_per_file,
+    }
+    updates = table.update_props(
+        {
+            prop: ",".join(prop_list(val)) if prop.endswith("_cols") else str(val)
+            for prop, val in layout.items()
+            if val is not None
+        }
+    )
+    if updates:
+        out["props_updated"] = updates
     if args.replay_quarantine:
         from tiger_etl_spark.cdc.pipeline import (
             replay_quarantine,
@@ -182,10 +215,6 @@ def main() -> None:
             spark,
             max_delta_files_per_bucket=args.max_delta_files_per_bucket,
             keep_snapshots=args.keep_snapshots,
-            cluster_ts=args.cluster_ts,
-            cluster_cols=prop_list(args.cluster_cols) or None,
-            zorder_cols=prop_list(args.zorder_cols) or None,
-            max_records_per_file=args.max_records_per_file,
             verify=args.verify_checksum,
         )
     )

@@ -156,7 +156,9 @@ def test_bootstrap_crash_before_compaction_converges(
 ):
     """A crash after the load's data commit but before its compaction:
     the rerun's apply is a ledger no-op, then it compacts and sets the
-    marker — all-base, marked, and at oracle parity."""
+    marker — all-base, marked, and at oracle parity. The rerun reports
+    the load as resumed (`skipped`: `--bootstrap` prints "resumed"), not
+    as a fresh load of 0 rows."""
     compact = LakeTable.compact
     crashed = []
 
@@ -174,7 +176,9 @@ def test_bootstrap_crash_before_compaction_converges(
     t = LakeTable.load(tp)
     assert t.props.get("bootstrap_op_seq") is None
     assert {f["kind"] for f in t.manifest["files"]} == {"delta"}
-    assert bootstrap_table(spark, t, snap) is not None
+    rec = bootstrap_table(spark, t, snap)
+    assert rec is not None
+    assert rec.skipped and rec.batch_id == -1 and rec.rows_applied == 0
     assert t.props["bootstrap_op_seq"] == "1"
     assert {f["kind"] for f in t.manifest["files"]} == {"base"}
     _assert_full_parity(spark, tp, str(tmp_path / "snap_prefix"))

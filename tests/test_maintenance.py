@@ -281,16 +281,29 @@ def test_maintain_verify_checksum_passes_and_rolls_back(spark, tmp_path):
     assert _state(spark, t2) == before2
 
 
-def test_maintenance_cli_column_lists_allow_spaces(
-    spark, tmp_path, monkeypatch, capsys
-):
-    """`jobs/maintenance.py --zorder-cols "x, y"` (and --cluster-cols)
-    name the columns x and y, not " y": the compaction runs on them and
-    preserves the table's state."""
+def _run_maintenance_cli(monkeypatch, capsys, *argv) -> dict:
+    """Run `jobs/maintenance.py` in-process (on the test session) and
+    return its JSON report line."""
     import json
     import sys
 
     from jobs.maintenance import main
+
+    monkeypatch.setattr(sys, "argv", ["maintenance.py", *argv])
+    main()
+    return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def test_maintenance_cli_column_lists_allow_spaces(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """`jobs/maintenance.py --zorder-cols "x, y"` (and --cluster-cols)
+    name the columns x and y, not " y": they are stored as the table's
+    layout props, the compaction lays files out by them, and the table's
+    state is preserved. A column the table lacks is refused before
+    anything commits: stored, it would fail every later compaction."""
+    from tiger_etl_spark.lake import zorder
+    from tiger_etl_spark.lake.table import prop_list
 
     path = str(tmp_path / "t")
     t = LakeTable.create(
@@ -310,27 +323,146 @@ def test_maintenance_cli_column_lists_allow_spaces(
         )
     before = sorted(tuple(r) for r in t.scan(spark).collect())
 
-    seen = []
-    compact = LakeTable.compact
+    # the one reader of the layout props, and the z-order key it builds
+    seen, zorder_cols = [], []
+    base_layout = LakeTable._base_layout
+    zorder_key = zorder.zorder_key
 
-    def spy(self, *args, **kw):
-        seen.append((kw["zorder_cols"], kw["cluster_cols"]))
-        return compact(self, *args, **kw)
+    def layout_spy(self, raw):
+        layout = base_layout(self, raw)
+        seen.append(
+            (
+                prop_list(self.props["compact_zorder_cols"]),
+                prop_list(self.props["compact_cluster_cols"]),
+                layout["sort_cols"][1:],
+            )
+        )
+        return layout
 
-    monkeypatch.setattr(LakeTable, "compact", spy)
-    monkeypatch.setattr(
-        sys,
-        "argv",
-        [
-            "maintenance.py", "--table", path,
-            "--max-delta-files-per-bucket", "1",
-            "--zorder-cols", "x, y", "--cluster-cols", " y ,x",
-        ],
+    def zorder_spy(cols, *args, **kw):
+        zorder_cols.append(list(cols))
+        return zorder_key(cols, *args, **kw)
+
+    monkeypatch.setattr(LakeTable, "_base_layout", layout_spy)
+    monkeypatch.setattr(zorder, "zorder_key", zorder_spy)
+    out = _run_maintenance_cli(
+        monkeypatch, capsys, "--table", path,
+        "--max-delta-files-per-bucket", "1",
+        "--zorder-cols", "x, y", "--cluster-cols", " y ,x",
     )
-    main()
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["props_updated"] == {
+        "compact_zorder_cols": "x,y",
+        "compact_cluster_cols": "y,x",
+    }
     assert out["compacted"]
-    assert seen == [(["x", "y"], ["y", "x"])]
+    assert seen == [(["x", "y"], ["y", "x"], ["y", "x"])]
+    assert zorder_cols == [["x", "y"]]
     after = LakeTable.load(path)
+    assert prop_list(after.props["compact_zorder_cols"]) == ["x", "y"]
+    assert prop_list(after.props["compact_cluster_cols"]) == ["y", "x"]
     assert all(f["kind"] == "base" for f in after.manifest["files"])
     assert sorted(tuple(r) for r in after.scan(spark).collect()) == before
+
+    version = after.manifest["version"]
+    with pytest.raises(SystemExit, match=r"\['z'\]"):
+        _run_maintenance_cli(
+            monkeypatch, capsys, "--table", path, "--zorder-cols", "x,z"
+        )
+    after = LakeTable.load(path)
+    assert after.manifest["version"] == version
+    assert after.props["compact_zorder_cols"] == "x,y"
+
+
+def _xy_rows(spark, n: int, seq0: int = 0):
+    return spark.createDataFrame(
+        [
+            (
+                "I", seq0 + i + 1, f"u{i}", ts(i),
+                (i % 20) / 20.0, ((i // 20) % 20) / 20.0,
+            )
+            for i in range(n)
+        ],
+        "op string, op_seq long, url string, warc_ts timestamp, x double, y double",
+    )
+
+
+def test_maintenance_cli_zorder_layout_survives_later_compaction(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """The layout the maintenance job sets stays set: after a later
+    merge, a plain `compact(spark)` (what a stream's `compact_every`
+    runs) rewrites the dirty buckets in the same z-order split, so a
+    `y` range still prunes most files."""
+    path = str(tmp_path / "t")
+    t = LakeTable.create(
+        path,
+        "url string, warc_ts timestamp, x double, y double",
+        key_col="url",
+        num_buckets=2,
+        props={"stats_cols": "x,y"},
+    )
+    t.merge(spark, _xy_rows(spark, 400))
+    out = _run_maintenance_cli(
+        monkeypatch, capsys, "--table", path,
+        "--max-delta-files-per-bucket", "0",
+        "--zorder-cols", "x,y", "--max-records-per-file", "25",
+    )
+    assert out["compacted"]
+    assert out["props_updated"] == {
+        "compact_zorder_cols": "x,y",
+        "compact_max_records_per_file": "25",
+    }
+
+    def y_pruned(table):
+        files = table.manifest["files"]
+        planned = table.plan_files(col_ranges={"y": (0.8, None)})
+        return len(planned), len(files)
+
+    t = LakeTable.load(path)
+    planned, n_files = y_pruned(t)
+    assert n_files >= 16 and planned < 0.7 * n_files, (planned, n_files)
+    # a small update, then the stream's compaction call
+    t.merge(spark, _xy_rows(spark, 4, seq0=1000))
+    t.compact(spark)
+    assert all(f["kind"] == "base" for f in t.manifest["files"])
+    planned, n_files = y_pruned(t)
+    assert n_files >= 16 and planned < 0.7 * n_files, (planned, n_files)
+    want = sorted(
+        r["url"] for r in t.scan(spark).where(F.col("y") >= 0.8).collect()
+    )
+    got = sorted(
+        r["url"] for r in t.scan(spark, col_ranges={"y": (0.8, None)}).collect()
+    )
+    assert got == want and len(got) == 80
+
+
+def test_maintenance_cli_rebucket_takes_cluster_ts(
+    spark, tmp_path, monkeypatch, capsys
+):
+    """`--rebucket 4 --cluster-ts day` stores the layout before the
+    rebucket runs, so the rewrite writes one base file per (bucket,
+    day)."""
+    path = str(tmp_path / "t")
+    t = LakeTable.create(path, DDL, key_col="url", num_buckets=2)
+    rows = [
+        ("I", d * 100 + i, f"d{d}k{i}", d * 86_400 + i, f"v-{d}-{i}")
+        for d in range(3)
+        for i in range(8)
+    ]
+    t.merge(spark, batch_df(spark, rows))
+    before = _state(spark, t)
+    out = _run_maintenance_cli(
+        monkeypatch, capsys, "--table", path,
+        "--rebucket", "4", "--cluster-ts", "day",
+    )
+    assert out["props_updated"] == {"compact_cluster_ts": "day"}
+    assert out["rebucketed_to"] == 4
+    t = LakeTable.load(path)
+    files = t.manifest["files"]
+    assert t.num_buckets == 4 and all(f["kind"] == "base" for f in files)
+    assert all(f["min"]["warc_ts"][:10] == f["max"]["warc_ts"][:10] for f in files)
+    want = {(bucket_of(u, 4), ts(s).isoformat()[:10]) for _, _, u, s, _ in rows}
+    got = [(f["bucket"], f["min"]["warc_ts"][:10]) for f in files]
+    assert sorted(got) == sorted(want)  # one file per (bucket, day)
+    assert out["rebucket_files_written"] == len(files)
+    assert _state(spark, t) == before

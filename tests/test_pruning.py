@@ -301,9 +301,9 @@ def test_col_range_compaction_preserves_stats(spark, qtable):
 
 
 def test_compact_cluster_ts_prunes_base_files(spark, tmp_path):
-    """compact(cluster_ts='day') splits each bucket's base data into
-    one file per day, so manifest time-range pruning keeps working on
-    fully-compacted tables."""
+    """A `compact_cluster_ts='day'` layout splits each bucket's base
+    data into one file per day, so manifest time-range pruning keeps
+    working on fully-compacted tables."""
     t = LakeTable.create(str(tmp_path / "t"), DDL, key_col="url", num_buckets=2)
     # 3 distinct days, 8 keys each
     rows = []
@@ -311,7 +311,8 @@ def test_compact_cluster_ts_prunes_base_files(spark, tmp_path):
         for i in range(8):
             rows.append(("I", d * 100 + i, f"d{d}k{i}", d * 1440 + i, f"v-{d}-{i}"))
     t.merge(spark, batch_df(spark, rows))
-    t.compact(spark, cluster_ts="day")
+    t.update_props({"compact_cluster_ts": "day"})
+    t.compact(spark)
     files = t.manifest["files"]
     assert all(f["kind"] == "base" for f in files)
     assert len(files) == 6  # 2 buckets × 3 days
@@ -468,10 +469,11 @@ def test_plan_files_buckets_param(spark, qtable):
 
 
 def test_compact_cluster_cols_tightens_stats_bounds(spark, tmp_path):
-    """CLUSTER BY analog: compacting with cluster_cols sorts each bucket
-    by the column and splits files sequentially (maxRecordsPerFile), so
-    per-file stats bounds become tight contiguous ranges and a
-    col_ranges scan of a fully-compacted table skips most files."""
+    """CLUSTER BY analog: compacting under `compact_cluster_cols` sorts
+    each bucket by the column and splits files sequentially
+    (maxRecordsPerFile), so per-file stats bounds become tight
+    contiguous ranges and a col_ranges scan of a fully-compacted table
+    skips most files."""
     t = LakeTable.create(
         str(tmp_path / "t"),
         "url string, warc_ts timestamp, q double",
@@ -486,7 +488,10 @@ def test_compact_cluster_cols_tightens_stats_bounds(spark, tmp_path):
             rows, "op string, op_seq long, url string, warc_ts timestamp, q double"
         ),
     )
-    t.compact(spark, cluster_cols=["q"], max_records_per_file=25)
+    t.update_props(
+        {"compact_cluster_cols": "q", "compact_max_records_per_file": "25"}
+    )
+    t.compact(spark)
     files = t.manifest["files"]
     # several files per bucket, all base
     assert len(files) >= 8 and all(f["kind"] == "base" for f in files)
@@ -553,7 +558,10 @@ def test_compact_zorder_prunes_on_every_clustered_column(spark, tmp_path):
             "op string, op_seq long, url string, warc_ts timestamp, x double, y double",
         ),
     )
-    t.compact(spark, zorder_cols=["x", "y"], max_records_per_file=25)
+    t.update_props(
+        {"compact_zorder_cols": "x,y", "compact_max_records_per_file": "25"}
+    )
+    t.compact(spark)
     files = t.manifest["files"]
     assert len(files) >= 12
     px = t.plan_files(col_ranges={"x": (0.8, None)})
@@ -598,7 +606,10 @@ def test_compact_zorder_handles_date_and_timestamp_columns(spark, tmp_path):
             "op string, op_seq long, url string, warc_ts timestamp, d date, x double",
         ),
     )
-    t.compact(spark, zorder_cols=["d", "x"], max_records_per_file=25)
+    t.update_props(
+        {"compact_zorder_cols": "d,x", "compact_max_records_per_file": "25"}
+    )
+    t.compact(spark)
     files = t.manifest["files"]
     assert len(files) >= 8 and all(f["kind"] == "base" for f in files)
     # x still prunes despite sharing the interleave with the date dim

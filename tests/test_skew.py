@@ -1,10 +1,10 @@
 """Hot-key skew handling (SURVEY.md §4 custom-work #2, §7 stage 6).
 
-Three layers verified: heavy-hitter detection finds a planted hot host;
-salted repartition spreads a hot key over multiple tasks while
-preserving the rows exactly (salt→unsalt identity); and a salted lake
-write splits the hot bucket across multiple files with scan results
-identical to the unsalted table.
+The engine's one salting path is the salted bucket write
+(`LakeTable._write_data` under the `write_salts` table prop): a salted
+lake write, and a salted CDC ingest, split the hot bucket across
+multiple files with scan results identical to the unsalted table, and
+compaction re-collapses them to one file per bucket.
 """
 
 from __future__ import annotations
@@ -12,11 +12,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from tiger_etl_spark.cdc.pipeline import apply_changes, create_pages_table
-from tiger_etl_spark.cdc.skew import (
-    detect_heavy_hitters,
-    salted_repartition,
-    url_host,
-)
 from tiger_etl_spark.lake import LakeTable
 
 DDL = "url string, warc_ts timestamp, html binary, text string, lang string, content_len long"
@@ -34,38 +29,6 @@ def _skewed_events(spark, n_hot=2000, n_cold=500):
         "op string, op_seq long, url string, warc_ts timestamp, html binary, "
         "lang string, content_len long",
     ).withColumn("warc_ts", F.timestamp_seconds(F.col("op_seq") + 1_700_000_000))
-
-
-def test_detect_heavy_hitters_finds_hot_host(spark):
-    df = _skewed_events(spark)
-    hot = detect_heavy_hitters(
-        df, url_host(F.col("url")), threshold_frac=0.3, sample_frac=None
-    )
-    assert hot and hot[0][0] == "hot.example"
-    # cold hosts stay below the threshold
-    assert all(h == "hot.example" for h, _ in hot)
-
-
-def test_salted_repartition_identity_and_spread(spark):
-    df = _skewed_events(spark)
-    salted = salted_repartition(df, "url", n_salts=8, hot_values=None)
-    # identity: same multiset of rows, no salt column leaks
-    assert salted.columns == df.columns
-    assert salted.exceptAll(df).isEmpty() and df.exceptAll(salted).isEmpty()
-    # spread: the hot url's rows land on more than one partition.
-    # Materialize partition ids BEFORE filtering — a filter above the
-    # repartition gets pushed below the exchange and AQE then coalesces
-    # the tiny filtered shuffle to one partition, probing the wrong plan.
-    pids = salted.select("url", F.spark_partition_id().alias("pid")).cache()
-    try:
-        pids.count()
-        parts = (
-            pids.where(F.col("url") == "https://hot.example/p0")
-            .select("pid").distinct().count()
-        )
-        assert parts > 1
-    finally:
-        pids.unpersist()
 
 
 def test_salted_lake_write_splits_hot_bucket(spark, tmp_path):

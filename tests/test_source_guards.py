@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import ast
+import inspect
 import pathlib
 import re
 
@@ -38,6 +40,13 @@ RETIRED_DEAD_LETTER_STORE = re.compile(r"_audit_reject[s]")
 # files is a compaction. No caller picks a merge mode, and the merge
 # runs no bucket-set collect of its own.
 MERGE_MODE = re.compile(r"merge[_-]mode|\bmode\s*=\s*[\"'](?:cow|mor)[\"']")
+
+
+# The compaction layout lives in the table's `compact_*` props alone: no
+# rewrite call takes a layout argument, and one function reads the props
+# for every rewrite to base files.
+LAYOUT_ARGS = {"cluster_ts", "cluster_cols", "zorder_cols", "max_records_per_file"}
+COMPACT_PROP_READ = re.compile(r"""(?:\.get\(|\[)\s*f?["']compact_""")
 
 
 def _engine_hits(pattern: re.Pattern, skip: str | None = None) -> list[str]:
@@ -85,3 +94,27 @@ def test_one_write_mode():
     assert not hits, hits
     table_src = (ROOT / "tiger_etl_spark" / "lake" / "table.py").read_text()
     assert "distinct().collect()" not in table_src
+
+
+def test_one_reader_of_the_compaction_layout():
+    from tiger_etl_spark.lake import LakeTable
+
+    for method in (LakeTable.compact, LakeTable.maintain):
+        params = set(inspect.signature(method).parameters)
+        assert not params & LAYOUT_ARGS, (method.__name__, params)
+    assert COMPACT_PROP_READ.search('props.get("compact_zorder_cols")')
+    assert COMPACT_PROP_READ.search("props['compact_cluster_ts']")
+    readers = set()
+    for path in sorted((ROOT / "tiger_etl_spark").rglob("*.py")):
+        text = path.read_text()
+        funcs = [
+            node
+            for node in ast.walk(ast.parse(text))
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for m in COMPACT_PROP_READ.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            enclosing = [f for f in funcs if f.lineno <= line <= f.end_lineno]
+            inner = max(enclosing, key=lambda f: f.lineno, default=None)
+            readers.add((str(path.relative_to(ROOT)), inner and inner.name))
+    assert readers == {("tiger_etl_spark/lake/table.py", "_base_layout")}, readers

@@ -86,7 +86,8 @@ def bootstrap_table(
     files (apply, then compact), stamping every row at the snapshot
     position `op_seq`. Returns the load's LineageRecord, or None when
     the table already carries a ``bootstrap_op_seq`` marker (idempotent
-    re-run)."""
+    re-run). A rerun that resumes a load whose data commit landed
+    returns the ledger's ``skipped`` record: it only compacts and marks."""
     if table.props.get("bootstrap_op_seq") is not None:
         return None
     rec = apply_changes(

@@ -60,6 +60,8 @@ class LineageRecord:
     bytes_in: int = 0
     batch_seconds: float = 0.0
     partition_counts: dict[str, int] = field(default_factory=dict)
+    # the applied-batch ledger already held the batch: nothing was applied
+    skipped: bool = False
 
 
 def create_pages_table(
@@ -369,6 +371,7 @@ def apply_changes(
             offset_start="",
             offset_end="",
             snapshot_id=table.manifest["snapshot_id"],
+            skipped=True,
         )
 
     t0 = time.time()

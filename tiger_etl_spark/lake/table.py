@@ -740,50 +740,46 @@ class LakeTable:
         )
 
     # ------------------------------------------------------------ compact
-    def compact(
-        self,
-        spark: SparkSession,
-        tombstone_horizon=None,
-        cluster_ts: str | None = None,
-        cluster_cols: list[str] | None = None,
-        max_records_per_file: int | None = None,
-        zorder_cols: list[str] | None = None,
-    ) -> MergeStats:
+    def compact(self, spark: SparkSession, tombstone_horizon=None) -> MergeStats:
         """Rewrite dirty buckets to unique-key base files sorted by key
         (the Timescale 'compress segmentby/orderby' analog). Tombstones
         older than `tombstone_horizon` (an event-time cutoff ≥ the
         watermark horizon) are dropped — later events for those keys can
         no longer arrive, so the tombstone is garbage.
 
-        `cluster_ts` ('year'|'month'|'day'|'hour', default from table
-        prop `compact_cluster_ts`) splits each bucket's base data into
-        one file per event-time window — the Iceberg
-        `bucket(key) + days(ts)` layout. Without it a compacted bucket
-        is ONE file spanning all time, so manifest time-range pruning
-        (lake/pruning.py) degrades to nothing on compacted data; with
-        it, a time-window scan of a compacted 10^10-row table reads only
-        the files whose window overlaps. Same single shuffle — the
+        The base files take the table's compaction layout: table props
+        set once (at `create`, by `update_props`, or by the layout flags
+        of `jobs/maintenance.py`) and applied by every rewrite —
+        `compact`, `maintain`, `rebucket`, a stream's
+        `compact_every`/`maintain_every`:
+
+        `compact_cluster_ts` ('year'|'month'|'day'|'hour') splits each
+        bucket's base data into one file per event-time window — the
+        Iceberg `bucket(key) + days(ts)` layout. Without it a compacted
+        bucket is ONE file spanning all time, so manifest time-range
+        pruning (lake/pruning.py) degrades to nothing on compacted data;
+        with it, a time-window scan of a compacted 10^10-row table reads
+        only the files whose window overlaps. Same single shuffle — the
         writer splits files within each bucket task, no extra exchange.
 
-        `cluster_cols` (+ `max_records_per_file`, default from table
-        props `compact_cluster_cols` / `compact_max_records_per_file`)
-        is the generic "CLUSTER BY" analog for `stats_cols` pruning:
-        each bucket's rows are SORTED by these columns and the writer
-        splits the sorted run into ≤max_records_per_file files, so every
-        file covers a tight, contiguous value range of the cluster
-        columns and `scan(col_ranges=...)` skips most of a compacted
-        table instead of matching every file's full-span bounds. (A
-        single sort key is the common case; multiple columns nest
+        `compact_cluster_cols` (+ `compact_max_records_per_file`) is the
+        generic "CLUSTER BY" analog for `stats_cols` pruning: each
+        bucket's rows are SORTED by these columns and the writer splits
+        the sorted run into ≤max_records_per_file files, so every file
+        covers a tight, contiguous value range of the cluster columns
+        and `scan(col_ranges=...)` skips most of a compacted table
+        instead of matching every file's full-span bounds. (A single
+        sort key is the common case; multiple columns nest
         lexicographically.) Same shuffle count; the sort is per-bucket.
 
-        `zorder_cols` (prop `compact_zorder_cols`) is the
-        multi-dimensional variant (Iceberg/Delta Z-ORDER): rows sort by
-        the interleaved bit pattern of the columns' normalized ranks
-        (lake/zorder.py), so each emitted file covers a small
-        hyper-rectangle and `col_ranges` prunes on EVERY listed column,
-        not just the first. Normalization bounds come from one narrow
-        min/max scan of the rewritten files (column-pruned — reads only
-        the z-order columns)."""
+        `compact_zorder_cols` is the multi-dimensional variant
+        (Iceberg/Delta Z-ORDER): rows sort by the interleaved bit
+        pattern of the columns' normalized ranks (lake/zorder.py), so
+        each emitted file covers a small hyper-rectangle and
+        `col_ranges` prunes on EVERY listed column, not just the first.
+        Normalization bounds come from one narrow min/max scan of the
+        rewritten files (column-pruned — reads only the z-order
+        columns)."""
         files = self.manifest["files"]
         dirty_buckets = {f["bucket"] for f in files if f["kind"] == "delta"}
         if not dirty_buckets:
@@ -792,8 +788,7 @@ class LakeTable:
         kept = [f for f in files if f["bucket"] not in dirty_buckets]
         return self._rewrite(
             spark, old, kept, {"operation": "compact"}, len(dirty_buckets),
-            tombstone_horizon, cluster_ts, cluster_cols, max_records_per_file,
-            zorder_cols,
+            tombstone_horizon,
         )
 
     def _rewrite(
@@ -804,46 +799,20 @@ class LakeTable:
         summary: dict,
         buckets_touched: int,
         tombstone_horizon=None,
-        cluster_ts: str | None = None,
-        cluster_cols: list[str] | None = None,
-        max_records_per_file: int | None = None,
-        zorder_cols: list[str] | None = None,
     ) -> MergeStats:
         """The one rewrite to base files (`compact`, `rebucket`): the
         LWW winners of `files`, tombstones older than the horizon
-        dropped, written sorted in the layout the arguments name (else
-        the table's `compact_*` props) and committed beside `kept`."""
-        props = self.manifest["props"]
-        cluster_ts = cluster_ts or props.get("compact_cluster_ts")
-        cluster_cols = cluster_cols or prop_list(props.get("compact_cluster_cols"))
-        if max_records_per_file is None:
-            mrpf = props.get("compact_max_records_per_file")
-            max_records_per_file = int(mrpf) if mrpf else None
-        zorder_cols = zorder_cols or prop_list(props.get("compact_zorder_cols"))
-        resolved = self._winners(self._read_files(spark, files))
+        dropped, written sorted in the table's compaction layout and
+        committed beside `kept`."""
+        raw = self._read_files(spark, files)
+        resolved = self._winners(raw)
         if tombstone_horizon is not None:
             ts_col = self.manifest["order_cols"][0]
             resolved = resolved.where(
                 (~F.col(_DELETED_COL)) | (F.col(ts_col) >= F.lit(tombstone_horizon))
             )
-        sort_exprs: list = list(cluster_cols or [])
-        if zorder_cols:
-            from tiger_etl_spark.lake.zorder import column_bounds, zorder_key
-
-            # bounds over the RAW files (a superset of the resolved
-            # values — valid, possibly slightly wide, normalization): a
-            # column-pruned narrow scan, no LWW resolution needed
-            bounds = column_bounds(
-                self._read_files(spark, files).select(*zorder_cols), zorder_cols
-            )
-            sort_exprs = [zorder_key(zorder_cols, bounds)] + sort_exprs
         new_files = self._write_data(
-            spark,
-            resolved,
-            kind="base",
-            ts_cluster=cluster_ts,
-            sort_cols=sort_exprs or None,
-            max_records_per_file=max_records_per_file,
+            spark, resolved, kind="base", **self._base_layout(raw)
         )
         self._commit_or_discard(kept + new_files, new_files, summary)
         return MergeStats(
@@ -853,6 +822,28 @@ class LakeTable:
             files_removed=len(files),
             bytes_written=sum(f["bytes"] for f in new_files),
         )
+
+    def _base_layout(self, raw: DataFrame) -> dict:
+        """The table's compaction layout as `_write_data` arguments: the
+        one reader of the `compact_*` props (see `compact`). `raw` holds
+        the rows being laid out; z-order bounds come from it (over raw
+        files, a superset of the resolved values — a valid, possibly
+        slightly wide, normalization from a column-pruned narrow scan
+        with no LWW resolution)."""
+        props = self.manifest["props"]
+        sort_cols: list = prop_list(props.get("compact_cluster_cols"))
+        zorder_cols = prop_list(props.get("compact_zorder_cols"))
+        if zorder_cols:
+            from tiger_etl_spark.lake.zorder import column_bounds, zorder_key
+
+            bounds = column_bounds(raw.select(*zorder_cols), zorder_cols)
+            sort_cols = [zorder_key(zorder_cols, bounds)] + sort_cols
+        mrpf = props.get("compact_max_records_per_file")
+        return {
+            "ts_cluster": props.get("compact_cluster_ts"),
+            "sort_cols": sort_cols or None,
+            "max_records_per_file": int(mrpf) if mrpf else None,
+        }
 
     # ----------------------------------------------------------- internal
     def _write_data(
@@ -1095,12 +1086,16 @@ class LakeTable:
                     os.remove(fp)
             raise
 
-    def update_props(self, updates: dict) -> None:
-        """Commit a props-only change (exactly-once batch bookkeeping)."""
-        new_props = {**self.manifest["props"], **updates}
-        files = self.manifest["files"]
-        self.manifest = dict(self.manifest, props=new_props)
-        self._commit(files, {"operation": "props"})
+    def update_props(self, updates: dict) -> dict:
+        """Commit a props-only change (exactly-once batch bookkeeping, a
+        job's layout flags). Keys already holding their value are
+        skipped, and nothing commits when none is left. Returns the
+        props that changed."""
+        changed = {k: v for k, v in updates.items() if self.props.get(k) != v}
+        if changed:
+            self.manifest = dict(self.manifest, props={**self.props, **changed})
+            self._commit(self.manifest["files"], {"operation": "props"})
+        return changed
 
     # ----------------------------------------------------- schema evolution
     def evolve_schema(self, new_ddl: str, renames: dict[str, str] | None = None) -> int:
@@ -1417,10 +1412,6 @@ class LakeTable:
         max_delta_files_per_bucket: int = 8,
         keep_snapshots: int = 5,
         tombstone_horizon=None,
-        cluster_ts: str | None = None,
-        cluster_cols: list[str] | None = None,
-        zorder_cols: list[str] | None = None,
-        max_records_per_file: int | None = None,
         verify: bool = False,
     ) -> dict:
         """One-call maintenance policy (the Iceberg maintenance-job /
@@ -1453,14 +1444,7 @@ class LakeTable:
 
                 pre_version = self.manifest["version"]
                 pre = table_checksum(self.scan(spark)).first()
-            self.compact(
-                spark,
-                tombstone_horizon=tombstone_horizon,
-                cluster_ts=cluster_ts,
-                cluster_cols=cluster_cols,
-                zorder_cols=zorder_cols,
-                max_records_per_file=max_records_per_file,
-            )
+            self.compact(spark, tombstone_horizon=tombstone_horizon)
             if verify:
                 from tiger_etl_spark.operators.audit import table_checksum
 

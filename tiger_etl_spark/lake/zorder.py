@@ -1,6 +1,6 @@
 """Z-order (Morton) clustering key — multi-dimensional file clustering.
 
-`compact(cluster_cols=[...])` sorts lexicographically: the FIRST column
+The `compact_cluster_cols` layout sorts lexicographically: the FIRST column
 gets tight per-file bounds, later ones stay full-span. When scans
 range-filter on several columns independently (quality AND length AND
 time), the Iceberg/Delta answer is Z-ORDER compaction: sort by the
