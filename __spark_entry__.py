@@ -550,9 +550,9 @@ def lake_wap_publish_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     see it; (2) stage a clean odd batch (event_id % 4 == 1) whose audit
     passes and publishes. Final state must be exactly the LWW resolution
     of evens ∪ clean odds — the poisoned batch must leave zero trace.
-    Audit cost: one narrow agg pass over the staged scan."""
+    Audit cost: one narrow agg pass over the batch's staged files."""
     from tiger_etl_spark.lake import LakeTable
-    from tiger_etl_spark.lake.wap import WapCommit
+    from tiger_etl_spark.lake.wap import AuditSpec, audit_staged
 
     base = _scratch_table("wap")
     t = LakeTable.create(
@@ -566,18 +566,22 @@ def lake_wap_publish_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     poisoned = _events_batch(
         spark, sf_dir, F.col("event_id") % 2 == 1
     ).withColumn("event_type", F.lit(None).cast("string"))
-    wap = WapCommit(t, os.path.join(base, "_txn"))
-    wap.merge(spark, poisoned)
-    res = wap.check_max_null_frac("event_type", 0.05).run(spark)
+    _, res = audit_staged(
+        spark,
+        t,
+        AuditSpec().check_max_null_frac("event_type", 0.05),
+        lambda: t.merge(spark, poisoned),
+    )
     assert not res.passed  # the gate must catch the null flood
 
     clean = _events_batch(spark, sf_dir, F.col("event_id") % 4 == 1)
-    wap2 = WapCommit(t, os.path.join(base, "_txn"))
-    wap2.merge(spark, clean)
-    res2 = (
-        wap2.check_max_null_frac("event_type", 0.05)
-        .check_rows_delta_frac(10.0)
-        .run(spark)
+    _, res2 = audit_staged(
+        spark,
+        t,
+        AuditSpec()
+        .check_max_null_frac("event_type", 0.05)
+        .check_rows_delta_frac(10.0),
+        lambda: t.merge(spark, clean),
     )
     assert res2.passed
     return t.scan(spark).select(

@@ -127,8 +127,8 @@ def test_detach_delete_is_cross_table_atomic(spark, graph, tmp_path):
             "dst_key",
         )
     )
-    txn.merge(graph.nodes_table, spark, node_batch)
-    txn.merge(graph.edges_table, spark, edge_batch)
+    txn.stage(graph.nodes_table).merge(spark, node_batch)
+    txn.stage(graph.edges_table).merge(spark, edge_batch)
     # commit point reached, publish skipped == crash window
     import json as _json
     import os as _os

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tiger_etl_spark.lake import LakeTable
-from tiger_etl_spark.lake.pruning import bucket_of, spark_hash_string
+from tiger_etl_spark.lake.pruning import bucket_of, plan_files, spark_hash_string
 
 DDL = "url string, warc_ts timestamp, text string"
 UTC = dt.timezone.utc
@@ -295,6 +295,65 @@ def test_col_range_compaction_preserves_stats(spark, qtable):
     # quality bounds top out below the threshold prune individually
     planned = qtable.plan_files(col_ranges={"quality": (0.75, None)})
     assert len(planned) < len(qtable.manifest["files"])
+
+
+def test_col_range_timestamp_bound_compares_as_time():
+    """A timestamp stats column records `isoformat()` bounds ('T'
+    separator, UTC offset). A bound written '2024-01-01 06:00:00' must
+    be compared as a time: in string order ' ' < 'T', so the file would
+    look wholly above the bound although it holds rows at or before it."""
+    f = {
+        "path": "b0.parquet",
+        "bucket": 0,
+        "kind": "base",
+        "min": {"seen_at": "2024-01-01T05:00:00+00:00"},
+        "max": {"seen_at": "2024-01-01T07:00:00+00:00"},
+    }
+    manifest = {
+        "files": [f],
+        "order_cols": ["warc_ts"],
+        "key_col": "url",
+        "num_buckets": 1,
+    }
+
+    def plan(lo, hi):
+        return plan_files(manifest, col_ranges={"seen_at": (lo, hi)})
+
+    assert plan(None, "2024-01-01 06:00:00") == [f]
+    assert plan("2024-01-01 06:00:00", None) == [f]
+    # a file the time order proves irrelevant is still pruned
+    assert plan(None, "2024-01-01 04:00:00") == []
+    assert plan("2024-01-01T08:00:00+00:00", None) == []
+    # plain strings keep plain string order
+    g = dict(f, min={"seen_at": "apple"}, max={"seen_at": "melon"})
+    manifest["files"] = [g]
+    assert plan("pear", None) == []
+    assert plan(None, "cherry") == [g]
+
+
+def test_col_range_on_timestamp_stats_col_returns_qualifying_rows(spark, tmp_path):
+    t = LakeTable.create(
+        str(tmp_path / "t"),
+        "url string, warc_ts timestamp, seen_at timestamp",
+        key_col="url",
+        num_buckets=1,
+        props={"stats_cols": "seen_at"},
+    )
+    t0 = dt.datetime(2024, 1, 1, 5, tzinfo=UTC)
+    t.merge(
+        spark,
+        spark.createDataFrame(
+            [
+                ("I", i + 1, f"u{i}", t0, t0 + dt.timedelta(hours=i))
+                for i in range(3)
+            ],
+            "op string, op_seq long, url string, warc_ts timestamp, "
+            "seen_at timestamp",
+        ),
+    )
+    t.compact(spark)
+    got = t.scan(spark, col_ranges={"seen_at": (None, "2024-01-01 06:00:00")})
+    assert sorted(r["url"] for r in got.collect()) == ["u0", "u1"]
 
 
 # ------------------------------------------- time-clustered compaction

@@ -49,6 +49,17 @@ LAYOUT_ARGS = {"cluster_ts", "cluster_cols", "zorder_cols", "max_records_per_fil
 COMPACT_PROP_READ = re.compile(r"""(?:\.get\(|\[)\s*f?["']compact_""")
 
 
+# One staged-commit protocol: `audit_staged` gates one table and
+# `LakeTransaction.stage` enlists tables for one atomic commit; the
+# pointer deferral and flip are known to lake/table.py and lake/txn.py
+# alone.
+RETIRED_STAGING = re.compile(r"\bWapCommit\b|\._track\(")
+POINTER_PROTOCOL_HOMES = {
+    "tiger_etl_spark/lake/table.py",
+    "tiger_etl_spark/lake/txn.py",
+}
+
+
 def _engine_hits(pattern: re.Pattern, skip: str | None = None) -> list[str]:
     return [
         f"{path.relative_to(ROOT)}:{text.count(chr(10), 0, m.start()) + 1}"
@@ -57,6 +68,14 @@ def _engine_hits(pattern: re.Pattern, skip: str | None = None) -> list[str]:
         if skip is None or not path.is_relative_to(ROOT / skip)
         for text in [path.read_text()]
         for m in pattern.finditer(text)
+    ]
+
+
+def _script_hits(pattern: re.Pattern) -> list[str]:
+    return [
+        name
+        for name in ("bench.py", "__spark_entry__.py")
+        if pattern.search((ROOT / name).read_text())
     ]
 
 
@@ -86,11 +105,7 @@ def test_one_dead_letter_store():
 
 def test_one_write_mode():
     assert MERGE_MODE.search('table.merge(spark, batch, mode="cow")')
-    hits = _engine_hits(MERGE_MODE) + [
-        name
-        for name in ("bench.py", "__spark_entry__.py")
-        if MERGE_MODE.search((ROOT / name).read_text())
-    ]
+    hits = _engine_hits(MERGE_MODE) + _script_hits(MERGE_MODE)
     assert not hits, hits
     table_src = (ROOT / "tiger_etl_spark" / "lake" / "table.py").read_text()
     assert "distinct().collect()" not in table_src
@@ -118,3 +133,13 @@ def test_one_reader_of_the_compaction_layout():
             inner = max(enclosing, key=lambda f: f.lineno, default=None)
             readers.add((str(path.relative_to(ROOT)), inner and inner.name))
     assert readers == {("tiger_etl_spark/lake/table.py", "_base_layout")}, readers
+
+
+def test_one_staging_protocol():
+    assert RETIRED_STAGING.search("wap = WapCommit(t, d)")
+    assert RETIRED_STAGING.search("txn._track(table)")
+    hits = _engine_hits(RETIRED_STAGING) + _script_hits(RETIRED_STAGING)
+    assert not hits, hits
+    assert not _script_hits(STAGED_COMMIT_INTERNALS)
+    homes = {hit.rsplit(":", 1)[0] for hit in _engine_hits(STAGED_COMMIT_INTERNALS)}
+    assert homes == POINTER_PROTOCOL_HOMES, homes

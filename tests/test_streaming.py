@@ -219,8 +219,7 @@ def test_applied_batch_bookkeeping_is_bounded(spark, tmp_path):
     # ledger math: window stays bounded over an arbitrarily long stream
     props: dict = {}
     for i in range(APPLIED_WINDOW * 3):
-        applied = props.get("applied_batches", {})
-        props.update(applied_batches_update(props, applied, i, i + 1))
+        props.update(applied_batches_update(props, i, i + 1))
     assert len(props["applied_batches"]) <= APPLIED_WINDOW
     assert int(props["applied_batch_hwm"]) == APPLIED_WINDOW * 3 - 1
     for i in range(APPLIED_WINDOW * 3):

@@ -40,8 +40,8 @@ def test_txn_commit_publishes_both_tables(spark, tmp_path):
     txn_dir = str(tmp_path / "_txn")
     # the J5 cascade: delete parent p1 + its children atomically
     with LakeTransaction(txn_dir) as txn:
-        txn.delete_where(parent, spark, F.col("url") == "p1", op_seq=100)
-        txn.delete_where(child, spark, F.col("url") == "c1", op_seq=101)
+        txn.stage(parent).delete_where(spark, F.col("url") == "p1", op_seq=100)
+        txn.stage(child).delete_where(spark, F.col("url") == "c1", op_seq=101)
     assert _keys(spark, LakeTable.load(parent.path)) == {"p2"}
     assert _keys(spark, LakeTable.load(child.path)) == {"c2"}
     assert os.listdir(txn_dir) == []  # intent cleaned up
@@ -52,7 +52,7 @@ def test_txn_abort_leaves_both_tables_untouched(spark, tmp_path):
     child = _mk(spark, tmp_path, "child", [("c1", 1)], 10)
     with pytest.raises(RuntimeError, match="boom"):
         with LakeTransaction(str(tmp_path / "_txn")) as txn:
-            txn.delete_where(parent, spark, F.col("url") == "p1", op_seq=100)
+            txn.stage(parent).delete_where(spark, F.col("url") == "p1", op_seq=100)
             raise RuntimeError("boom")
     assert _keys(spark, LakeTable.load(parent.path)) == {"p1"}
     assert _keys(spark, LakeTable.load(child.path)) == {"c1"}
@@ -70,8 +70,8 @@ def test_txn_crash_before_intent_commits_nothing(spark, tmp_path):
     child = _mk(spark, tmp_path, "child", [("c1", 1)], 10)
     txn_dir = str(tmp_path / "_txn")
     txn = LakeTransaction(txn_dir)
-    txn.delete_where(parent, spark, F.col("url") == "p1", op_seq=100)
-    txn.delete_where(child, spark, F.col("url") == "c1", op_seq=101)
+    txn.stage(parent).delete_where(spark, F.col("url") == "p1", op_seq=100)
+    txn.stage(child).delete_where(spark, F.col("url") == "c1", op_seq=101)
     # crash here: no commit() — fresh readers see pre-txn state
     assert LakeTransaction.recover(txn_dir) == 0
     assert _keys(spark, LakeTable.load(parent.path)) == {"p1"}
@@ -86,8 +86,8 @@ def test_txn_crash_between_pointer_flips_rolls_forward(spark, tmp_path):
     child = _mk(spark, tmp_path, "child", [("c1", 1)], 10)
     txn_dir = str(tmp_path / "_txn")
     txn = LakeTransaction(txn_dir)
-    txn.delete_where(parent, spark, F.col("url") == "p1", op_seq=100)
-    txn.delete_where(child, spark, F.col("url") == "c1", op_seq=101)
+    txn.stage(parent).delete_where(spark, F.col("url") == "p1", op_seq=100)
+    txn.stage(child).delete_where(spark, F.col("url") == "c1", op_seq=101)
     # manually reproduce commit() up to the crash point
     from tiger_etl_spark.lake.table import _atomic_write
 
@@ -113,6 +113,6 @@ def test_txn_crash_between_pointer_flips_rolls_forward(spark, tmp_path):
 def test_txn_multiple_ops_same_table(spark, tmp_path):
     t = _mk(spark, tmp_path, "t", [("a", 1), ("b", 2)], 1)
     with LakeTransaction(str(tmp_path / "_txn")) as txn:
-        txn.delete_where(t, spark, F.col("url") == "a", op_seq=100)
-        txn.delete_where(t, spark, F.col("url") == "b", op_seq=101)
+        txn.stage(t).delete_where(spark, F.col("url") == "a", op_seq=100)
+        txn.stage(t).delete_where(spark, F.col("url") == "b", op_seq=101)
     assert _keys(spark, LakeTable.load(t.path)) == set()

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tiger_etl_spark.lake import LakeTable, LakeTransaction
-from tiger_etl_spark.lake.wap import WapCommit, audit_staged, parse_audit_spec
+from tiger_etl_spark.lake.wap import AuditSpec, audit_staged, parse_audit_spec
 
 TS = dt.datetime(2024, 1, 1)
 SCHEMA = "op string, op_seq long, url string, warc_ts timestamp, v long"
@@ -50,13 +50,17 @@ def _state(spark, path):
 
 def test_staged_invisible_then_published(spark, tmp_path):
     t = _table(spark, tmp_path, [("a", 1), ("b", 2)])
-    wap = WapCommit(t, str(tmp_path / "_txn"))
-    wap.merge(spark, _batch(spark, [("a", 10), ("c", 3)], seq=5))
-    # staged state visible through the WAP handle only
-    staged = {r.url: r.v for r in wap.staged_scan(spark).collect()}
-    assert staged == {"a": 10, "b": 2, "c": 3}
-    assert _state(spark, t.path) == {"a": 1, "b": 2}
-    res = wap.check_max_null_frac("v", 0.0).run(spark)
+
+    def stage():
+        t.merge(spark, _batch(spark, [("a", 10), ("c", 3)], seq=5))
+        # staged state visible through the staging handle only
+        staged = {r.url: r.v for r in t.scan(spark).collect()}
+        assert staged == {"a": 10, "b": 2, "c": 3}
+        assert _state(spark, t.path) == {"a": 1, "b": 2}
+
+    _, res = audit_staged(
+        spark, t, AuditSpec().check_max_null_frac("v", 0.0), stage
+    )
     assert res.passed and not res.failures
     assert _state(spark, t.path) == {"a": 10, "b": 2, "c": 3}
 
@@ -64,10 +68,15 @@ def test_staged_invisible_then_published(spark, tmp_path):
 def test_failing_audit_aborts_and_readers_never_saw_it(spark, tmp_path):
     t = _table(spark, tmp_path, [("a", 1), ("b", 2)])
     published_version = t.manifest["version"]
-    wap = WapCommit(t, str(tmp_path / "_txn"))
     # null-flood batch: every v NULL (upstream schema break)
-    wap.merge(spark, _batch(spark, [("a", 0), ("x", 0)], seq=5, v_null=True))
-    res = wap.check_max_null_frac("v", 0.10).run(spark)
+    _, res = audit_staged(
+        spark,
+        t,
+        AuditSpec().check_max_null_frac("v", 0.10),
+        lambda: t.merge(
+            spark, _batch(spark, [("a", 0), ("x", 0)], seq=5, v_null=True)
+        ),
+    )
     assert not res.passed
     assert res.failures == ["null_frac(v)<=0.1"]
     assert _state(spark, t.path) == {"a": 1, "b": 2}
@@ -80,47 +89,53 @@ def test_failing_audit_aborts_and_readers_never_saw_it(spark, tmp_path):
 
 def test_rows_delta_guard_catches_fanout(spark, tmp_path):
     t = _table(spark, tmp_path, [(f"k{i}", i) for i in range(20)])
-    wap = WapCommit(t, str(tmp_path / "_txn"))
     # a "fan-out bug": batch inserts 3x the table size of new keys
-    wap.merge(
-        spark, _batch(spark, [(f"n{i}", i) for i in range(60)], seq=100, op="I")
+    fanout = _batch(spark, [(f"n{i}", i) for i in range(60)], seq=100, op="I")
+    _, res = audit_staged(
+        spark,
+        t,
+        AuditSpec().check_rows_delta_frac(0.5),
+        lambda: t.merge(spark, fanout),
     )
-    res = wap.check_rows_delta_frac(0.5).audit(spark)
     assert not res.passed
     assert any(n.startswith("rows_delta_frac") for n in res.failures)
-    wap.abort()
     assert len(_state(spark, t.path)) == 20
     # normal-sized batch passes the same guard (reads no data: manifest only)
-    wap2 = WapCommit(t, str(tmp_path / "_txn"))
-    wap2.merge(spark, _batch(spark, [("k0", 99)], seq=200))
-    res2 = wap2.check_rows_delta_frac(0.5).run(spark)
+    _, res2 = audit_staged(
+        spark,
+        t,
+        AuditSpec().check_rows_delta_frac(0.5),
+        lambda: t.merge(spark, _batch(spark, [("k0", 99)], seq=200)),
+    )
     assert res2.passed
     assert _state(spark, t.path)["k0"] == 99
 
 
 def test_violation_frac_predicate_check(spark, tmp_path):
     t = _table(spark, tmp_path, [("a", 1)])
-    wap = WapCommit(t, str(tmp_path / "_txn"))
-    wap.merge(spark, _batch(spark, [("b", -5), ("c", 7)], seq=5, op="I"))
-    res = (
-        wap.check_max_violation_frac("v_nonneg", F.col("v") >= 0, 0.10)
-        .audit(spark)
+    _, res = audit_staged(
+        spark,
+        t,
+        AuditSpec().check_max_violation_frac("v_nonneg", F.col("v") >= 0, 0.10),
+        lambda: t.merge(
+            spark, _batch(spark, [("b", -5), ("c", 7)], seq=5, op="I")
+        ),
     )
-    # 1 of 3 staged rows violates → 33% > 10%
+    # the audit judges the staged rows b and c: 1 of 2 violates → 50% > 10%
     assert not res.passed
-    assert abs(res.metrics["violation_frac(v_nonneg)<=0.1"] - 1 / 3) < 1e-9
-    wap.abort()
+    assert abs(res.metrics["violation_frac(v_nonneg)<=0.1"] - 1 / 2) < 1e-9
 
 
 def test_crash_after_intent_rolls_forward(spark, tmp_path):
-    """publish() writes the intent file first; a crash before the
+    """commit() writes the intent file first; a crash before the
     pointer flip must roll FORWARD on recover — the audited batch is
-    already committed."""
+    already committed. The audit here is the whole-table form: the
+    spec evaluated over the staged table's scan."""
     t = _table(spark, tmp_path, [("a", 1)])
     txn_dir = str(tmp_path / "_txn")
-    wap = WapCommit(t, txn_dir)
-    wap.merge(spark, _batch(spark, [("a", 2)], seq=5))
-    assert wap.audit(spark).passed  # no checks registered → pass
+    txn = LakeTransaction(txn_dir)
+    txn.stage(t).merge(spark, _batch(spark, [("a", 2)], seq=5))
+    assert AuditSpec().evaluate(spark, t.scan(spark)).passed  # no checks → pass
     # simulate the crash window: write the intent by hand, skip the flip
     import json, uuid
 
@@ -137,10 +152,6 @@ def test_crash_after_intent_rolls_forward(spark, tmp_path):
 def test_parse_audit_spec_grammar(spark, tmp_path):
     """CLI grammar → AuditSpec: each kind lands as the right check, and
     a bad term is rejected loudly."""
-    import pytest
-
-    from tiger_etl_spark.lake.wap import parse_audit_spec
-
     spec = parse_audit_spec(
         "null(v)<=0.1, nonneg(v)<=0.2, nonempty(url)<=0, delta<=2.5"
     )
@@ -156,28 +167,47 @@ def test_parse_audit_spec_grammar(spark, tmp_path):
             parse_audit_spec(bad)
     # semantics on a real table: nonneg catches the planted negative
     t = _table(spark, tmp_path, [("a", 1)])
-    wap = WapCommit(t, str(tmp_path / "_txn"))
-    wap.spec = parse_audit_spec("nonneg(v)<=0")
-    wap.merge(spark, _batch(spark, [("b", -3)], seq=5, op="I"))
-    res = wap.run(spark)
+    _, res = audit_staged(
+        spark,
+        t,
+        parse_audit_spec("nonneg(v)<=0"),
+        lambda: t.merge(spark, _batch(spark, [("b", -3)], seq=5, op="I")),
+    )
     assert not res.passed
     assert _state(spark, t.path) == {"a": 1}
 
 
-def test_audit_is_single_job(spark, tmp_path):
-    """All scan-based checks fold into one aggregation over one scan."""
+def test_audit_is_single_job(spark, tmp_path, monkeypatch):
+    """All scan-based checks fold into one aggregation over one scan of
+    the staged files: evaluating them runs exactly one Spark job."""
     t = _table(spark, tmp_path, [("a", 1), ("b", 2)])
-    wap = WapCommit(t, str(tmp_path / "_txn"))
-    wap.merge(spark, _batch(spark, [("c", 3)], seq=5, op="I"))
-    wap.check_max_null_frac("v", 0.5)
-    wap.check_max_violation_frac("pos", F.col("v") > 0, 0.5)
-    wap.check_rows_delta_frac(5.0)
-    tracker = spark.sparkContext.statusTracker()
-    before = len(tracker.getJobIdsForGroup() or [])
-    res = wap.audit(spark)
+    spec = (
+        AuditSpec()
+        .check_max_null_frac("v", 0.5)
+        .check_max_violation_frac("pos", F.col("v") > 0, 0.5)
+        .check_rows_delta_frac(5.0)
+    )
+    sc = spark.sparkContext
+    group = f"audit-{tmp_path.name}"
+    evaluate = AuditSpec.evaluate
+
+    def evaluate_in_group(self, *args, **kwargs):
+        sc.setJobGroup(group, "audit evaluation")
+        try:
+            return evaluate(self, *args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(AuditSpec, "evaluate", evaluate_in_group)
+    _, res = audit_staged(
+        spark,
+        t,
+        spec,
+        lambda: t.merge(spark, _batch(spark, [("c", 3)], seq=5, op="I")),
+    )
     assert res.passed
     assert len(res.metrics) == 3
-    wap.abort()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_error_inside_staged_section_aborts(spark, tmp_path):

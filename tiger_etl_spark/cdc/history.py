@@ -197,12 +197,11 @@ def apply_scd2_changes(
             "op_seq": F.lit(int(batch_id)).cast("long"),
         }
     )
-    applied = hist.props.get("applied_batches", {})
     stats = hist.merge(
         spark,
         frags,
         props_updates_fn=lambda: applied_batches_update(
-            hist.props, applied, batch_id, hist.manifest["snapshot_id"] + 1
+            hist.props, batch_id, hist.manifest["snapshot_id"] + 1
         ),
     )
     return {
@@ -326,8 +325,8 @@ def rewrite_history(
     )
     before = hist.manifest["snapshot_id"]
     with LakeTransaction(txn_dir) as txn:  # commits on clean exit
-        txn.truncate(hist)
-        stats = txn.merge(hist, spark, batch)
+        txn.stage(hist).truncate()
+        stats = hist.merge(spark, batch)
     return {
         "fragments": stats.rows_upserted,
         "snapshot_before": before,

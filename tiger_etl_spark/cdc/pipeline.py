@@ -331,10 +331,8 @@ def batch_applied(props: dict, batch_id: int) -> bool:
     return hwm is not None and batch_id <= int(hwm)
 
 
-def applied_batches_update(
-    props: dict, applied: dict, batch_id: int, snapshot_id: int
-) -> dict:
-    new = {**applied, str(batch_id): snapshot_id}
+def applied_batches_update(props: dict, batch_id: int, snapshot_id: int) -> dict:
+    new = {**props.get("applied_batches", {}), str(batch_id): snapshot_id}
     hwm = max(
         int(props.get("applied_batch_hwm", -1)),
         max(int(k) for k in new),
@@ -362,7 +360,6 @@ def apply_changes(
     the winners before enrichment (stream-static join; dim columns
     persist when declared in the table schema, and enrichers may
     reference them)."""
-    applied = table.props.get("applied_batches", {})
     if batch_applied(table.props, batch_id):
         # exactly-once: replayed batch (restart between data commit and
         # checkpoint commit) — skip without touching the table
@@ -479,7 +476,7 @@ def apply_changes(
         if prev_wm is not None and (high_wm is None or str(high_wm) < prev_wm):
             high_wm = prev_wm  # watermark never regresses
         return {
-            **applied_batches_update(table.props, applied, batch_id,
+            **applied_batches_update(table.props, batch_id,
                                      table.manifest["snapshot_id"] + 1),
             "high_watermark": str(high_wm) if high_wm else None,
         }

@@ -10,7 +10,7 @@ applies each increment as one MERGE into the replica.
 
 Exactly-once bookkeeping mirrors the ingest pipeline's: the last
 synced SOURCE version rides the replica's own atomic commit
-(`merge(props_updates=...)`), so a crash between diff and commit
+(`merge(props_updates_fn=...)`), so a crash between diff and commit
 re-syncs the same interval — and re-merging the same interval is
 idempotent (same keys, same LWW order, same winners). `op_seq` for
 the synthetic change events is the source version being applied:
@@ -101,7 +101,7 @@ def sync_to(spark: SparkSession, source: LakeTable, replica: LakeTable) -> dict:
             )
         )
         batch = ups.unionByName(dels, allowMissingColumns=False)
-    stats = replica.merge(spark, batch, props_updates={_PROP: v_to})
+    stats = replica.merge(spark, batch, props_updates_fn=lambda: {_PROP: v_to})
     return {
         "src_version_from": v_from,
         "src_version_to": v_to,

@@ -12,11 +12,12 @@ Spark-first shape: the routed split is a set of FILTERS over the one
 change batch (each destination's `apply_changes` pipeline reads only
 its slice — Catalyst pushes the route predicate into the shared scan),
 and atomicity reuses the lake's two-phase intent-log transaction
-(`lake/txn.py`): every table's merge is staged with its pointer
-un-flipped, then one intent file publishes all of them. Crash before
-the intent → nothing visible, replay re-applies the batch (per-table
-`applied_batches` bookkeeping makes the re-apply idempotent); crash
-after → `LakeTransaction.recover` rolls every pointer forward.
+(`lake/txn.py`): `txn.stage(table)` enlists each destination, so its
+`apply_changes` merge is staged with the pointer un-flipped, then one
+intent file publishes all of them. Crash before the intent → nothing
+visible, replay re-applies the batch (per-table `applied_batches`
+bookkeeping makes the re-apply idempotent); crash after →
+`LakeTransaction.recover` rolls every pointer forward.
 """
 
 from __future__ import annotations
@@ -70,9 +71,8 @@ def route_changes(
     try:
         for name, table in routes.items():
             sub = events.where(F.col(table_col) == name).drop(table_col)
-            txn._track(table)
             records[name] = apply_changes(
-                spark, table, sub, batch_id=batch_id, **apply_kwargs
+                spark, txn.stage(table), sub, batch_id=batch_id, **apply_kwargs
             )
         txn.commit()
     except BaseException:

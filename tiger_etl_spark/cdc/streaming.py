@@ -213,7 +213,6 @@ def run_stream(
                 {
                     **applied_batches_update(
                         table.props,
-                        table.props.get("applied_batches", {}),
                         batch_id,
                         table.manifest["snapshot_id"],
                     ),

@@ -125,11 +125,26 @@ def _num(v) -> bool:
     return isinstance(v, (int, float)) and not isinstance(v, bool)
 
 
+def _str_below(a: str, b: str) -> bool:
+    """``a < b`` in string order and, when both parse as ISO timestamps,
+    in time order too. A timestamp column's stats are ``isoformat()``
+    strings ('T' separator, UTC offset), which string order misranks
+    against a bound written '2024-01-01 06:00:00'; requiring both orders
+    keeps the test safe for string columns that only look like times."""
+    if not a < b:
+        return False
+    try:
+        return _to_cmp_ts(a) < _to_cmp_ts(b)
+    except ValueError:
+        return True
+
+
 def _file_col_overlaps(f: dict, col: str, lo, hi) -> bool:
     """Closed-interval overlap test against a file's recorded bounds for
     an arbitrary stats column. Conservative: prunes only when the bound
     and the stat are the SAME comparable family (number/number or
-    string/string); anything else keeps the file."""
+    string/string; ISO timestamp strings must be apart in both string
+    and time order); anything else keeps the file."""
     mn = f.get("min", {}).get(col)
     mx = f.get("max", {}).get(col)
     if mn is None or mx is None:
@@ -141,9 +156,9 @@ def _file_col_overlaps(f: dict, col: str, lo, hi) -> bool:
             return False
         return True
     if isinstance(mn, str) and isinstance(mx, str):
-        if lo is not None and isinstance(lo, str) and mx < lo:
+        if lo is not None and isinstance(lo, str) and _str_below(mx, lo):
             return False
-        if hi is not None and isinstance(hi, str) and mn > hi:
+        if hi is not None and isinstance(hi, str) and _str_below(hi, mn):
             return False
     return True
 

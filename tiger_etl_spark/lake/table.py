@@ -657,7 +657,6 @@ class LakeTable:
         self,
         spark: SparkSession,
         batch: DataFrame,
-        props_updates: dict | None = None,
         props_updates_fn=None,
         derive=None,
     ) -> MergeStats:
@@ -684,10 +683,12 @@ class LakeTable:
         inside the bucket-aligned stage after the one exchange, so it
         must not shuffle (a broadcast join does not).
 
-        props_updates_fn: optional zero-arg callable evaluated AFTER the
-        write job and BEFORE the commit — lets the caller fold metrics
-        observed during the write (pyspark Observation) into the same
-        atomic commit as the data files.
+        props_updates_fn: optional zero-arg callable returning a props
+        dict, evaluated AFTER the write job and BEFORE the commit — the
+        props land in the same atomic commit as the data files
+        (exactly-once bookkeeping such as the applied-batch ledger or a
+        replica's synced version, and metrics observed during the write
+        through a pyspark Observation).
         """
         lww = self.merge_policy == "lww"
         cols = [*DataType.fromDDL(self._physical_ddl()).names, _BUCKET_COL]
@@ -719,8 +720,7 @@ class LakeTable:
             "operation": "merge-mor",
             "rows_written": sum(f["rows"] for f in new_files),
         }
-        if props_updates_fn is not None:
-            props_updates = {**(props_updates or {}), **props_updates_fn()}
+        props_updates = props_updates_fn() if props_updates_fn else None
         if props_updates:
             # bookkeeping (e.g. applied-batch ids for exactly-once) lands
             # in the SAME atomic commit as the data

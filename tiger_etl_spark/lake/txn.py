@@ -8,9 +8,10 @@ tombstones) needs its own protocol. This is the classic two-phase
 pointer swap with a roll-forward intent log — the same shape an Iceberg
 catalog uses for multi-table commits:
 
-1. **Stage**: each operation runs fully (data files + next manifest
-   written) but the table's ``meta/_current`` pointer is NOT flipped —
-   readers keep the old snapshot.
+1. **Stage**: ``txn.stage(table)`` enlists a table, and each operation
+   on it runs fully (data files + next manifest written) but the
+   table's ``meta/_current`` pointer is NOT flipped — readers keep the
+   old snapshot.
 2. **Commit point**: one intent file listing every (table, version) is
    atomically written to the transaction log dir.
 3. **Publish**: each pointer is flipped; the intent file is removed.
@@ -25,6 +26,12 @@ that swaps pointers sequentially.
 
 Single-writer per table is assumed (as elsewhere in the lake); the
 intent log dir is the coordinator.
+
+This module owns the pointer protocol of a staged commit:
+``begin_staged`` holds a table's pointer back, ``publish_staged`` flips
+it and ``abort_staged`` discards the staged manifests. A one-table
+staged commit with no intent log (``lake.wap.audit_staged``) and
+``LakeTransaction`` are the two users.
 """
 
 from __future__ import annotations
@@ -34,6 +41,23 @@ import os
 import uuid
 
 from tiger_etl_spark.lake.table import LakeTable, _atomic_write
+
+
+def begin_staged(table: LakeTable) -> LakeTable:
+    """Open a staged commit on `table`: its commits write their
+    manifests but withhold the pointer flip until ``publish_staged`` or
+    ``abort_staged`` ends the deferral. Returns `table`."""
+    table._defer_pointer = True
+    return table
+
+
+def publish_staged(table: LakeTable) -> None:
+    """Publish `table`'s staged snapshot: the atomic pointer flip to the
+    handle's version, then the end of the deferral. A crash before the
+    flip leaves the staged manifest inert; the next commit overwrites
+    it."""
+    LakeTable._write_pointer(table.path, table.manifest["version"])
+    table._defer_pointer = False
 
 
 def abort_staged(table: LakeTable) -> int:
@@ -62,27 +86,13 @@ class LakeTransaction:
         self._tables: list[LakeTable] = []
         self._done = False
 
-    # ------------------------------------------------------------ staging
-    def _track(self, table: LakeTable) -> None:
+    def stage(self, table: LakeTable) -> LakeTable:
+        """Enlist `table`: every commit on it until ``commit`` or
+        ``abort`` is staged (manifest written, pointer held back).
+        Returns `table`, as in ``txn.stage(t).merge(spark, batch)``."""
         if table not in self._tables:
-            table._defer_pointer = True
-            self._tables.append(table)
-
-    def merge(self, table: LakeTable, *args, **kwargs):
-        self._track(table)
-        return table.merge(*args, **kwargs)
-
-    def delete_where(self, table: LakeTable, *args, **kwargs):
-        self._track(table)
-        return table.delete_where(*args, **kwargs)
-
-    def truncate(self, table: LakeTable) -> None:
-        self._track(table)
-        table.truncate()
-
-    def update_props(self, table: LakeTable, updates: dict) -> None:
-        self._track(table)
-        table.update_props(updates)
+            self._tables.append(begin_staged(table))
+        return table
 
     # ----------------------------------------------------------- lifecycle
     def commit(self) -> None:
@@ -98,10 +108,9 @@ class LakeTransaction:
             ]
         }
         _atomic_write(intent_path, json.dumps(intent))  # ← COMMIT POINT
-        self._publish(intent)
-        os.remove(intent_path)
         for t in self._tables:
-            t._defer_pointer = False
+            publish_staged(t)
+        os.remove(intent_path)
         self._done = True
 
     def abort(self) -> None:
@@ -124,7 +133,7 @@ class LakeTransaction:
 
     # ----------------------------------------------------------- recovery
     @staticmethod
-    def _publish(intent: dict) -> None:
+    def _roll_forward(intent: dict) -> None:
         for entry in intent["tables"]:
             cur_path = os.path.join(entry["path"], "meta", "_current")
             with open(cur_path) as f:
@@ -147,7 +156,7 @@ class LakeTransaction:
             p = os.path.join(txn_dir, fn)
             with open(p) as f:
                 intent = json.load(f)
-            LakeTransaction._publish(intent)
+            LakeTransaction._roll_forward(intent)
             os.remove(p)
             n += 1
         return n

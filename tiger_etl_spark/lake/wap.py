@@ -2,9 +2,9 @@
 
 The table-level quarantine gate: a change batch is MERGEd onto a STAGED
 snapshot (manifest written, ``meta/_current`` pointer untouched — the
-``LakeTransaction`` staging protocol, lake/txn.py), audited against
-declarative data-quality checks evaluated on the staged state, and only
-then published by the atomic pointer flip. A failing audit aborts: the
+staging protocol of lake/txn.py), audited against declarative
+data-quality checks evaluated on the staged rows, and only then
+published by the atomic pointer flip. A failing audit aborts: the
 staged manifest is deleted and readers never observed anything. This is
 the Iceberg WAP workflow (branch → audit → fast-forward) re-expressed
 over this lake's versioned-manifest + pointer design.
@@ -16,22 +16,22 @@ TABLE STATE before readers can see it, which is the only form that can
 catch whole-batch pathologies (a truncating replay, a null-flood from an
 upstream schema break, a fan-out bug doubling the row count).
 
-Three pieces:
+Two pieces:
 - ``AuditSpec`` — the declarative check set.
-- ``audit_staged`` — the one staged-commit gate of the ingest paths
+- ``audit_staged`` — the one staged-commit gate on one table
   (``run_stream(audit=...)`` per micro-batch, ``replay_quarantine(
-  audit=...)`` per repaired dead-letter batch): stage with the pointer
-  held back, audit only the files the stage added, then publish or
-  abort.
-- ``WapCommit`` — explicit stage → audit → publish | abort on one table
-  with a whole-table audit (the interactive / job-script form).
+  audit=...)`` per repaired dead-letter batch, or any caller's own
+  stage): stage with the pointer held back, audit only the files the
+  stage added, then publish or abort. The pointer protocol itself is
+  lake/txn.py's; a caller that wants a whole-table audit evaluates the
+  spec over ``table.scan`` inside a ``LakeTransaction``.
 
 Scale notes: every declarative check is folded into ONE narrow
-aggregation pass over the staged scan (a single job, partial-aggregated,
-no shuffle beyond the final 1-row reduce); the row-delta check compares
-manifest row counts on both sides and reads no data at all. Audit cost
-is therefore at most one scan of the table regardless of how many
-checks are registered.
+aggregation pass over the staged files (one job of one stage: the
+checks are observed metrics of a no-op write, no shuffle); the
+row-delta check compares manifest row counts on both sides and reads no
+data at all. Audit cost is therefore one scan of the batch's files
+regardless of how many checks are registered.
 """
 
 from __future__ import annotations
@@ -39,11 +39,11 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from tiger_etl_spark.lake.table import LakeTable, MergeStats
-from tiger_etl_spark.lake.txn import LakeTransaction, abort_staged
+from tiger_etl_spark.lake.table import LakeTable
+from tiger_etl_spark.lake.txn import abort_staged, begin_staged, publish_staged
 
 
 @dataclass
@@ -101,9 +101,11 @@ class AuditSpec:
         base_rows: int | None = None,
         staged_rows: int | None = None,
     ) -> AuditResult:
-        """One aggregation job over `staged` (the post-merge scan), plus
-        the manifest-only row-delta comparison when both counts are
-        supplied."""
+        """One job over `staged` (the staged rows to judge), plus the
+        manifest-only row-delta comparison when both counts are
+        supplied. The checks ride the scan as an Observation of a no-op
+        write: one stage, no exchange, where ``agg().first()`` would run
+        a second job for the reduce under adaptive execution."""
         failures, metrics = [], {}
         if self.delta_bound is not None and base_rows is not None:
             base = float(base_rows)
@@ -116,7 +118,11 @@ class AuditSpec:
                 failures.append(name)
         if self.checks:
             aggs = [c.alias(f"_m{i}") for i, (_, c) in enumerate(self.checks)]
-            row = staged.agg(*aggs).first()
+            obs = Observation()
+            staged.observe(obs, *aggs).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            row = obs.get
             for i, (name, _) in enumerate(self.checks):
                 val = row[f"_m{i}"]
                 metrics[name] = float(val) if val is not None else 0.0
@@ -193,7 +199,7 @@ def audit_staged(
         return stage(), None
     base_rows = manifest_rows(table)
     pre_paths = {f["path"] for f in table.manifest["files"]}
-    table._defer_pointer = True
+    begin_staged(table)
     try:
         out = stage()
         new_files = [
@@ -208,92 +214,9 @@ def audit_staged(
     except BaseException:
         abort_staged(table)
         raise
-    if not res.passed:
+    if res.passed:
+        publish_staged(table)
+    else:
         abort_staged(table)
-        return out, res
-    # publish = the atomic pointer flip. A crash before it leaves the
-    # staged manifest inert; the next commit overwrites it.
-    table._defer_pointer = False
-    LakeTable._write_pointer(table.path, table.manifest["version"])
     return out, res
 
-
-class WapCommit:
-    """One staged commit on one table: ``merge`` → ``audit`` →
-    ``publish`` | ``abort``. The staged snapshot is visible ONLY through
-    this handle (``staged_scan``); fresh ``LakeTable.load`` readers keep
-    the published snapshot until ``publish`` flips the pointer.
-
-    Crash behavior is inherited from LakeTransaction: crash before
-    ``publish`` leaves the pointer untouched (staged manifest inert,
-    overwritten by the next commit); ``publish`` writes the intent file
-    first, so a crash mid-publish is rolled forward by
-    ``LakeTransaction.recover``.
-    """
-
-    def __init__(self, table: LakeTable, txn_dir: str):
-        self.table = table
-        self.base_version = table.manifest["version"]
-        self.base_rows = manifest_rows(table)
-        self.txn = LakeTransaction(txn_dir)
-        self.spec = AuditSpec()
-
-    # ------------------------------------------------------------ write
-    def merge(self, spark: SparkSession, batch: DataFrame, **kw) -> MergeStats:
-        return self.txn.merge(self.table, spark, batch, **kw)
-
-    def delete_where(self, spark: SparkSession, predicate, op_seq: int):
-        return self.txn.delete_where(self.table, spark, predicate, op_seq)
-
-    def staged_scan(self, spark: SparkSession) -> DataFrame:
-        """The post-merge table state the audit judges (and what readers
-        WILL see after publish)."""
-        return self.table.scan(spark)
-
-    # ------------------------------------------------------------ audit
-    def check_max_null_frac(self, col: str, max_frac: float) -> "WapCommit":
-        self.spec.check_max_null_frac(col, max_frac)
-        return self
-
-    def check_max_violation_frac(
-        self, name: str, predicate, max_frac: float
-    ) -> "WapCommit":
-        self.spec.check_max_violation_frac(name, predicate, max_frac)
-        return self
-
-    def check_rows_delta_frac(self, max_frac: float) -> "WapCommit":
-        self.spec.check_rows_delta_frac(max_frac)
-        return self
-
-    def audit(self, spark: SparkSession) -> AuditResult:
-        """Evaluate every registered check in ONE aggregation job over
-        the staged scan (plus the manifest-only row-delta check, which
-        reads no data)."""
-        return self.spec.evaluate(
-            spark,
-            self.staged_scan(spark),
-            base_rows=self.base_rows,
-            staged_rows=manifest_rows(self.table),
-        )
-
-    # ---------------------------------------------------------- lifecycle
-    def publish(self) -> int:
-        """Atomic pointer flip (via the transaction's intent-logged
-        commit point). Returns the published version."""
-        self.txn.commit()
-        return self.table.manifest["version"]
-
-    def abort(self) -> int:
-        """Discard the staged snapshot; readers never saw it. Returns
-        the still-published version."""
-        self.txn.abort()
-        return self.table.manifest["version"]
-
-    def run(self, spark: SparkSession) -> AuditResult:
-        """audit → publish-or-abort in one call."""
-        result = self.audit(spark)
-        if result.passed:
-            self.publish()
-        else:
-            self.abort()
-        return result

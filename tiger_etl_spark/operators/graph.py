@@ -179,8 +179,8 @@ class PropertyGraph:
                 "dst_key",
             )
             with LakeTransaction(self.txn_dir) as txn:
-                txn.merge(self.nodes_table, spark, node_batch)
-                txn.merge(self.edges_table, spark, edge_batch)
+                txn.stage(self.nodes_table).merge(spark, node_batch)
+                txn.stage(self.edges_table).merge(spark, edge_batch)
             return n_victims
         finally:
             vkeys.unpersist()
