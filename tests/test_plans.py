@@ -10,7 +10,10 @@ which is why it's pinned by tests.
 
 from __future__ import annotations
 
+import datetime as dt
+import gc
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -190,6 +193,105 @@ def test_read_files_empty_is_zero_partitions_live_schema(spark, mor_table):
     empty = table._read_files(spark, [])
     assert empty.rdd.getNumPartitions() == 0
     assert empty.schema == spark.createDataFrame([], table._physical_ddl()).schema
+
+
+@pytest.fixture()
+def py4j_commands(monkeypatch):
+    """A running count of the py4j commands Python sends to the JVM."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        sent[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    return sent
+
+
+def build_commands(sent, build) -> int:
+    """The py4j commands of the cheapest of three builds of one read
+    plan: a garbage collection during a build adds the release of
+    unrelated JVM objects to its count."""
+    counts = []
+    for _ in range(3):
+        gc.collect()
+        before = sent[0]
+        build()
+        counts.append(sent[0] - before)
+    return min(counts)
+
+
+def test_read_plans_build_in_few_jvm_calls(spark, mor_table, py4j_commands):
+    """Building a lookup or a change feed costs a bounded number of JVM
+    round trips, not several per column and operator: the schema lift
+    is one projection, the feed's projection is SQL text, and an
+    all-dirty scan has no empty leg to build."""
+    table, v0, v1 = mor_table
+    lookup = build_commands(py4j_commands, lambda: table.lookup(spark, "k1"))
+    feed = build_commands(
+        py4j_commands, lambda: table.changes_between(spark, v0, v1)
+    )
+    assert lookup <= 200, lookup
+    assert feed <= 400, feed
+
+
+def jobs_started(spark, group: str, action) -> int:
+    """Spark jobs `action` starts. The status tracker hears of jobs in
+    order, so once it lists a last one-job query of the group it lists
+    every job before it."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(group):
+        assert time.monotonic() < deadline
+        time.sleep(0.05)
+    return len(sc.statusTracker().getJobIdsForGroup(group)) - 1
+
+
+def test_read_plan_build_starts_no_spark_job(spark, tmp_path):
+    """The manifest names every file a read needs, so building a window
+    scan or a change feed over more files than Spark lists on the driver
+    by default (32) still starts no Spark job to list them."""
+    from tiger_etl_spark.lake import LakeTable
+
+    table = LakeTable.create(
+        str(tmp_path / "many"), "url string, warc_ts timestamp, text string",
+        key_col="url", num_buckets=12,
+    )
+    for c in range(4):
+        rows = [("I", 100 * c + i, f"k{i}", i, f"v{c}") for i in range(96)]
+        table.merge(spark, _values_batch(spark, rows))
+    v1 = table.manifest["version"]
+    v0 = v1 - 1
+    assert len(table.at_version(v0).manifest["files"]) > 32
+    lo = dt.datetime(2025, 1, 1, tzinfo=dt.timezone.utc)
+    window = (lo, lo + dt.timedelta(seconds=30))
+    for name, build in (
+        ("window", lambda: table.scan(spark, ts_range=window)),
+        ("feed", lambda: table.changes_between(spark, v0, v1)),
+    ):
+        assert jobs_started(spark, f"{tmp_path.name}-{name}", build) == 0, name
+    assert table.scan(spark, ts_range=window).count() == 31
+    assert table.changes_between(spark, v0, v1).count() == 96
+
+
+def test_keyed_lookup_resolves_without_exchange(spark, mor_table):
+    """A point lookup in a small dirty bucket reads its files as one
+    partition, so the LWW resolve needs no exchange: one task."""
+    table, _, _ = mor_table
+    df = table.lookup(spark, "k1")
+    assert [r["text"] for r in df.collect()] == ["w1"]
+    plan = plan_of(df)
+    assert "isFinalPlan=true" in plan, plan
+    assert "Exchange" not in plan, plan
 
 
 def test_raw_event_merge_single_exchange(spark, tmp_path, write_plans):

@@ -331,6 +331,44 @@ def test_col_range_timestamp_bound_compares_as_time():
     assert plan(None, "cherry") == [g]
 
 
+def test_col_range_on_typed_time_column_compares_in_time_order_alone():
+    """When the manifest's live schema types a stats column as timestamp
+    or date, its bounds compare in time order alone: a lower bound
+    written with a space still prunes a file that ends before it (in
+    string order the file's 'T'-separated max sorts above the bound)."""
+    f = {
+        "path": "b0.parquet",
+        "bucket": 0,
+        "kind": "base",
+        "min": {"seen_at": "2024-01-01T05:00:00+00:00", "day": "2024-01-01"},
+        "max": {"seen_at": "2024-01-01T07:00:00+00:00", "day": "2024-01-02"},
+    }
+    manifest = {
+        "files": [f],
+        "order_cols": ["warc_ts"],
+        "key_col": "url",
+        "num_buckets": 1,
+        "current_schema_id": 2,
+        "schemas": {
+            "2": {"ddl": "url string, warc_ts timestamp, seen_at timestamp, day date"}
+        },
+    }
+
+    def plan(col, lo, hi):
+        return plan_files(manifest, col_ranges={col: (lo, hi)})
+
+    assert plan("seen_at", "2024-01-01 08:00:00", None) == []
+    assert plan("seen_at", None, "2024-01-01 04:00:00") == []
+    assert plan("seen_at", "2024-01-01 06:00:00", None) == [f]
+    assert plan("seen_at", dt.datetime(2024, 1, 1, 8, tzinfo=UTC), None) == []
+    # a date column counts a bound by its date, as Spark's cast does
+    assert plan("day", "2024-01-02 08:00:00", None) == [f]
+    assert plan("day", "2024-01-03", None) == []
+    assert plan("day", None, "2023-12-31 23:00:00") == []
+    # a bound that is no time keeps the file
+    assert plan("seen_at", "not a time", None) == [f]
+
+
 def test_col_range_on_timestamp_stats_col_returns_qualifying_rows(spark, tmp_path):
     t = LakeTable.create(
         str(tmp_path / "t"),

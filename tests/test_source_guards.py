@@ -60,6 +60,12 @@ POINTER_PROTOCOL_HOMES = {
 }
 
 
+# Every read of table data goes through LakeTable._read_files, where the
+# schema lift and the manifest's file list meet Spark: no read path
+# under lake/ reads data files on its own.
+SPARK_READ = re.compile(r"\bspark\.read\b")
+
+
 def _engine_hits(pattern: re.Pattern, skip: str | None = None) -> list[str]:
     return [
         f"{path.relative_to(ROOT)}:{text.count(chr(10), 0, m.start()) + 1}"
@@ -77,6 +83,24 @@ def _script_hits(pattern: re.Pattern) -> list[str]:
         for name in ("bench.py", "__spark_entry__.py")
         if pattern.search((ROOT / name).read_text())
     ]
+
+
+def _enclosing_functions(pattern: re.Pattern, top: str) -> list[tuple[str, str | None]]:
+    """(file, innermost enclosing function) of every match under `top`."""
+    out = []
+    for path in sorted((ROOT / top).rglob("*.py")):
+        text = path.read_text()
+        funcs = [
+            node
+            for node in ast.walk(ast.parse(text))
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for m in pattern.finditer(text):
+            line = text.count("\n", 0, m.start()) + 1
+            enclosing = [f for f in funcs if f.lineno <= line <= f.end_lineno]
+            inner = max(enclosing, key=lambda f: f.lineno, default=None)
+            out.append((str(path.relative_to(ROOT)), inner and inner.name))
+    return out
 
 
 def test_no_python_backed_empty_relation_in_engine_code():
@@ -119,19 +143,7 @@ def test_one_reader_of_the_compaction_layout():
         assert not params & LAYOUT_ARGS, (method.__name__, params)
     assert COMPACT_PROP_READ.search('props.get("compact_zorder_cols")')
     assert COMPACT_PROP_READ.search("props['compact_cluster_ts']")
-    readers = set()
-    for path in sorted((ROOT / "tiger_etl_spark").rglob("*.py")):
-        text = path.read_text()
-        funcs = [
-            node
-            for node in ast.walk(ast.parse(text))
-            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
-        ]
-        for m in COMPACT_PROP_READ.finditer(text):
-            line = text.count("\n", 0, m.start()) + 1
-            enclosing = [f for f in funcs if f.lineno <= line <= f.end_lineno]
-            inner = max(enclosing, key=lambda f: f.lineno, default=None)
-            readers.add((str(path.relative_to(ROOT)), inner and inner.name))
+    readers = set(_enclosing_functions(COMPACT_PROP_READ, "tiger_etl_spark"))
     assert readers == {("tiger_etl_spark/lake/table.py", "_base_layout")}, readers
 
 
@@ -143,3 +155,9 @@ def test_one_staging_protocol():
     assert not _script_hits(STAGED_COMMIT_INTERNALS)
     homes = {hit.rsplit(":", 1)[0] for hit in _engine_hits(STAGED_COMMIT_INTERNALS)}
     assert homes == POINTER_PROTOCOL_HOMES, homes
+
+
+def test_one_reader_of_table_data_files():
+    assert SPARK_READ.search("df = spark.read.schema(ddl).parquet(*paths)")
+    readers = _enclosing_functions(SPARK_READ, "tiger_etl_spark/lake")
+    assert readers == [("tiger_etl_spark/lake/table.py", "_read_files")], readers

@@ -37,6 +37,7 @@ path is manifest pruning, not indexes.
 
 from __future__ import annotations
 
+import re
 from datetime import datetime, timezone
 
 _C1 = 0xCC9E2D51
@@ -109,16 +110,49 @@ def _to_cmp_ts(v):
     raise TypeError(f"cannot interpret {v!r} as a timestamp bound")
 
 
-def _file_ts_overlaps(f: dict, ts_col: str, lo, hi) -> bool:
-    mn = _to_cmp_ts(f.get("min", {}).get(ts_col))
-    mx = _to_cmp_ts(f.get("max", {}).get(ts_col))
+def _file_ts_overlaps(f: dict, ts_col: str, lo, hi, day: bool = False) -> bool:
+    """Closed-interval overlap in time order against a file's recorded
+    bounds on a timestamp or date column (stats are `isoformat()`
+    strings). On a date column (`day`) the bounds count by their date:
+    Spark compares a date with a string bound cast to a date, so a row
+    of day D passes `>= 'D 08:00:00'`. A bound that is no time cannot
+    prove the file irrelevant."""
+    mn = f.get("min", {}).get(ts_col)
+    mx = f.get("max", {}).get(ts_col)
     if mn is None or mx is None:
         return True  # no stats → cannot prove irrelevant
-    if lo is not None and mx < lo:
-        return False
-    if hi is not None and mn > hi:
-        return False
-    return True
+    try:
+        mn, mx, lo, hi = map(_to_cmp_ts, (mn, mx, lo, hi))
+    except (TypeError, ValueError):
+        return True
+    if day:
+        lo, hi = (
+            v and v.replace(hour=0, minute=0, second=0, microsecond=0) for v in (lo, hi)
+        )
+    return not ((lo is not None and mx < lo) or (hi is not None and mn > hi))
+
+
+_TIME_TYPES = {"timestamp", "timestamp_ntz", "timestamp_ltz", "date"}
+
+
+def _time_cols(manifest: dict) -> dict[str, bool]:
+    """{column: is_date} for the columns the manifest's live schema
+    types as timestamp or date; empty when it records no schema."""
+    sid = str(manifest.get("current_schema_id"))
+    ddl = manifest.get("schemas", {}).get(sid, {}).get("ddl", "")
+    out: dict[str, bool] = {}
+    depth = start = 0
+    for i, ch in enumerate(ddl + ","):
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            m = re.match(r"\s*(`[^`]+`|[^\s:]+)\s*:?\s*(\w+)", ddl[start:i])
+            if m and m.group(2).lower() in _TIME_TYPES:
+                out[m.group(1).strip("`")] = m.group(2).lower() == "date"
+            start = i + 1
+    return out
 
 
 def _num(v) -> bool:
@@ -127,10 +161,12 @@ def _num(v) -> bool:
 
 def _str_below(a: str, b: str) -> bool:
     """``a < b`` in string order and, when both parse as ISO timestamps,
-    in time order too. A timestamp column's stats are ``isoformat()``
-    strings ('T' separator, UTC offset), which string order misranks
-    against a bound written '2024-01-01 06:00:00'; requiring both orders
-    keeps the test safe for string columns that only look like times."""
+    in time order too: the safe test for a column whose type the
+    manifest does not record. A timestamp column's stats are
+    ``isoformat()`` strings ('T' separator, UTC offset), which string
+    order misranks against a bound written '2024-01-01 06:00:00';
+    requiring both orders keeps the test safe for string columns that
+    only look like times."""
     if not a < b:
         return False
     try:
@@ -139,12 +175,16 @@ def _str_below(a: str, b: str) -> bool:
         return True
 
 
-def _file_col_overlaps(f: dict, col: str, lo, hi) -> bool:
+def _file_col_overlaps(f: dict, col: str, lo, hi, time_cols: dict) -> bool:
     """Closed-interval overlap test against a file's recorded bounds for
-    an arbitrary stats column. Conservative: prunes only when the bound
-    and the stat are the SAME comparable family (number/number or
-    string/string; ISO timestamp strings must be apart in both string
-    and time order); anything else keeps the file."""
+    an arbitrary stats column. A column the live schema types as
+    timestamp or date (`time_cols`) compares in time order alone.
+    Otherwise conservative: prunes only when the bound and the stat are
+    the SAME comparable family (number/number or string/string; ISO
+    timestamp strings must be apart in both string and time order);
+    anything else keeps the file."""
+    if col in time_cols:
+        return _file_ts_overlaps(f, col, lo, hi, day=time_cols[col])
     mn = f.get("min", {}).get(col)
     mx = f.get("max", {}).get(col)
     if mn is None or mx is None:
@@ -163,9 +203,10 @@ def _file_col_overlaps(f: dict, col: str, lo, hi) -> bool:
     return True
 
 
-def _file_overlaps_all(f: dict, col_ranges: dict) -> bool:
+def _file_overlaps_all(f: dict, col_ranges: dict, time_cols: dict) -> bool:
     return all(
-        _file_col_overlaps(f, c, lo, hi) for c, (lo, hi) in col_ranges.items()
+        _file_col_overlaps(f, c, lo, hi, time_cols)
+        for c, (lo, hi) in col_ranges.items()
     )
 
 
@@ -226,11 +267,13 @@ def plan_files(
         }
 
     bucket_col_keep: set[int] = set()
+    time_cols: dict[str, bool] = {}
     if col_ranges:
+        time_cols = _time_cols(manifest)
         bucket_col_keep = {
             f["bucket"]
             for f in files
-            if f["bucket"] in dirty and _file_overlaps_all(f, col_ranges)
+            if f["bucket"] in dirty and _file_overlaps_all(f, col_ranges, time_cols)
         }
 
     key_buckets: set[int] | None = None
@@ -252,7 +295,7 @@ def plan_files(
             ok = (
                 f["bucket"] in bucket_col_keep
                 if f["bucket"] in dirty
-                else _file_overlaps_all(f, col_ranges)
+                else _file_overlaps_all(f, col_ranges, time_cols)
             )
             if not ok:
                 continue

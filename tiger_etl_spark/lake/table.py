@@ -42,8 +42,11 @@ maps to the atomic snapshot commit.
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
+import re
 import shutil
 import time
 import uuid
@@ -52,7 +55,7 @@ from dataclasses import dataclass, field
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType
+from pyspark.sql.types import DataType, StructType
 
 from tiger_etl_spark.session import empty_frame
 
@@ -86,6 +89,27 @@ def _atomic_write(path: str, data: str) -> None:
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, path)
+
+
+@functools.lru_cache(maxsize=256)
+def _ddl_schema(ddl: str) -> StructType:
+    """`DataType.fromDDL`, once per DDL string: the parse is a JVM round
+    trip, and building one read plan needs the same schemas many times.
+    Every caller shares the result, so none may modify it."""
+    return DataType.fromDDL(ddl)
+
+
+def _sql_name(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+_BYTE_SHIFT = {"": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def _conf_bytes(spark: SparkSession, key: str) -> int:
+    """A byte-size Spark conf ('134217728b', '64m', '1gb') in bytes."""
+    m = re.fullmatch(r"\s*(\d+)\s*([kmgtp]?)b?\s*", spark.conf.get(key).lower())
+    return int(m.group(1)) << _BYTE_SHIFT[m.group(2)]
 
 
 def prop_list(value: str | None) -> list[str]:
@@ -362,21 +386,28 @@ class LakeTable:
                 out.append(self._write_segment(merged))
         return out
 
+    def _schema(self, schema_id: int | None = None) -> StructType:
+        """`_physical_ddl` parsed: the live physical schema, or that of
+        files written under `schema_id`."""
+        return _ddl_schema(self._physical_ddl(schema_id))
+
     def _read_files(self, spark: SparkSession, files: list[dict]) -> DataFrame:
         """Read data files, lifting every file to the LIVE schema (the
         Iceberg schema-id read path): each file was written under the
         schema current at its commit (`schema_id` in the manifest entry;
         absent = this manifest's own schema — pre-evolution tables).
         Files are grouped by schema id, each group is read with ITS
-        physical schema, then lifted: renames recorded by the newer
-        schema entries applied oldest-first, added columns filled with
-        typed NULLs, widened types cast. Without the per-id read a
-        renamed column in an old file would silently read as NULL
-        (parquet matches by name)."""
+        physical schema, then lifted by `_lift` in one projection.
+        Without the per-id read a renamed column in an old file would
+        silently read as NULL (parquet matches by name).
+
+        Every read of table data files goes through here. Their paths
+        come from the manifest, and `get_spark` raises Spark's
+        parallel-listing threshold, so building the read starts no Spark
+        job to list the files again."""
         cur_sid = int(self.manifest["current_schema_id"])
-        live = DataType.fromDDL(self._physical_ddl())
         if not files:
-            return empty_frame(spark, live)
+            return empty_frame(spark, self._schema())
         groups: dict[int, list[dict]] = {}
         for f in files:
             groups.setdefault(int(f.get("schema_id", cur_sid)), []).append(f)
@@ -384,28 +415,34 @@ class LakeTable:
         for sid, fs in sorted(groups.items()):
             paths = [self._abs(f["path"]) for f in fs]
             df = spark.read.schema(self._physical_ddl(sid)).parquet(*paths)
-            for step in range(sid + 1, cur_sid + 1):
-                entry = self.manifest["schemas"].get(str(step), {})
-                for old, new in entry.get("renames", {}).items():
-                    if old in df.columns:
-                        df = df.withColumnRenamed(old, new)
-            have = set(df.columns)
-            parts.append(
-                df.select(
-                    *[
-                        (
-                            F.col(fl.name).cast(fl.dataType)
-                            if fl.name in have
-                            else F.lit(None).cast(fl.dataType)
-                        ).alias(fl.name)
-                        for fl in live.fields
-                    ]
-                )
-            )
+            lift = self._lift(sid)
+            parts.append(df.selectExpr(*lift) if lift else df)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def _lift(self, schema_id: int) -> list[str] | None:
+        """The projection that lifts files of `schema_id` to the live
+        schema, as `CAST(... AS type) AS name` strings: renames recorded
+        by the newer schema entries applied oldest-first, added columns
+        filled with typed NULLs, widened types cast. None when the files
+        already read in the live schema."""
+        live = self._schema()
+        phys = self._schema(schema_id)
+        names = phys.names
+        for step in range(schema_id + 1, int(self.manifest["current_schema_id"]) + 1):
+            entry = self.manifest["schemas"].get(str(step), {})
+            for old, new in entry.get("renames", {}).items():
+                names = [new if n == old else n for n in names]
+        if names == phys.names and phys == live:
+            return None
+        source = dict(zip(names, phys.names))
+        return [
+            f"CAST({_sql_name(source[fl.name]) if fl.name in source else 'NULL'}"
+            f" AS {fl.dataType.simpleString()}) AS {_sql_name(fl.name)}"
+            for fl in live.fields
+        ]
 
     def _resolve(self, df: DataFrame) -> DataFrame:
         if self.merge_policy == "partial":
@@ -427,11 +464,14 @@ class LakeTable:
             for c in df.columns
             if c not in (self.key_col, *ocols, _DELETED_COL, _OP_COL)
         ]
+        # no OTHERWISE: the resolved `_deleted` is never NULL, so the
+        # values are the same, and `_op` stays nullable like every other
+        # column a read returns (a scan with no clean leg has no union
+        # to widen it)
+        deleted = F.col(_DELETED_COL)
         return partial_lww_state(
             df, self.key_col, ocols, _OP_COL, set_cols, deleted_col=_DELETED_COL
-        ).withColumn(
-            _OP_COL, F.when(F.col(_DELETED_COL), F.lit("D")).otherwise(F.lit("I"))
-        )
+        ).withColumn(_OP_COL, F.when(deleted, F.lit("D")).when(~deleted, F.lit("I")))
 
     def _resolve_lww(self, df: DataFrame) -> DataFrame:
         """LWW: keep the max-(order_cols, _op_seq) row per key (SURVEY.md
@@ -448,11 +488,11 @@ class LakeTable:
         the shuffle (pinned in tests/test_plans.py). Ties (exact
         duplicate events) carry equal payloads, so the winner is
         well-defined either way."""
-        cols = [c for c in df.columns if c != self.key_col]
-        order = F.struct(*self.manifest["order_cols"], _SEQ_COL)
+        cols = ", ".join(_sql_name(c) for c in df.columns if c != self.key_col)
+        order = ", ".join(map(_sql_name, [*self.manifest["order_cols"], _SEQ_COL]))
         return (
             df.groupBy(self.key_col)
-            .agg(F.max_by(F.struct(*cols), order).alias("_w"))
+            .agg(F.expr(f"max_by(struct({cols}), struct({order})) AS _w"))
             .select(self.key_col, "_w.*")
         )
 
@@ -465,7 +505,9 @@ class LakeTable:
         their `_bucket`. resolve=False lays raw events out the same way
         (a partial-policy merge writes every event). Reads keep plain
         `_resolve`: a forced B-way exchange would turn a one-bucket
-        lookup into B tasks."""
+        lookup into B tasks. A keyed read whose dirty files fit one split
+        coalesces them to one partition instead, which satisfies the
+        resolve's clustering with no exchange at all (see `scan`)."""
         out = df.repartition(self.num_buckets, F.col(self.key_col))
         if resolve:
             out = self._resolve(out)
@@ -528,6 +570,14 @@ class LakeTable:
         time-window scan only the files that overlap it, and e.g. a
         `quality >= 0.8` export only the files whose recorded bounds
         can qualify.
+
+        The plan is built from the manifest alone: no Spark job runs
+        before the query (see `_read_files`). A snapshot with no clean
+        bucket is the resolved dirty leg alone, in the live column order
+        (no empty clean leg to union). With `keys`, dirty files that fit
+        one split (`spark.sql.files.maxPartitionBytes`) are read as one
+        partition, so their resolve needs no exchange: a point lookup is
+        one job of one task.
         """
         if version is not None and version != self.manifest["version"]:
             return self.at_version(version).scan(
@@ -545,26 +595,32 @@ class LakeTable:
         dirty_buckets = {f["bucket"] for f in files if f["kind"] == "delta"}
         clean = [f for f in files if f["bucket"] not in dirty_buckets]
         dirty = [f for f in files if f["bucket"] in dirty_buckets]
-        df = self._read_files(spark, clean)
         if dirty:
-            df = df.unionByName(self._resolve(self._read_files(spark, dirty)))
+            raw = self._read_files(spark, dirty)
+            if keys is not None and sum(f["bytes"] for f in dirty) <= _conf_bytes(
+                spark, "spark.sql.files.maxPartitionBytes"
+            ):
+                raw = raw.coalesce(1)
+            df = self._resolve(raw)
+            if clean:
+                df = self._read_files(spark, clean).unionByName(df)
+            elif df.columns != self._schema().names:
+                df = df.select(*self._schema().names)
+        else:
+            df = self._read_files(spark, clean)
+        bounds = [(c, lo, hi) for c, (lo, hi) in (col_ranges or {}).items()]
         if ts_range is not None:
-            ts_col = self.manifest["order_cols"][0]
-            lo, hi = ts_range
-            if lo is not None:
-                df = df.where(F.col(ts_col) >= F.lit(lo))
-            if hi is not None:
-                df = df.where(F.col(ts_col) <= F.lit(hi))
+            bounds.append((self.manifest["order_cols"][0], *ts_range))
+        conds = [F.col(c) >= F.lit(lo) for c, lo, _ in bounds if lo is not None]
+        conds += [F.col(c) <= F.lit(hi) for c, _, hi in bounds if hi is not None]
         if keys is not None:
-            df = df.where(F.col(self.key_col).isin(list(keys)))
-        if col_ranges:
-            for c, (clo, chi) in col_ranges.items():
-                if clo is not None:
-                    df = df.where(F.col(c) >= F.lit(clo))
-                if chi is not None:
-                    df = df.where(F.col(c) <= F.lit(chi))
+            conds.append(F.col(self.key_col).isin(list(keys)))
         if not include_tombstones:
-            df = df.where(~F.col(_DELETED_COL))
+            conds.append(~F.col(_DELETED_COL))
+        if conds:
+            # one filter, not one per bound: each `where` is a JVM round
+            # trip and an analysis of the plan so far
+            df = df.where(functools.reduce(operator.and_, conds))
         if not include_internal:
             df = df.drop(*INTERNAL_COLS)
         return df
@@ -573,7 +629,9 @@ class LakeTable:
         """Point lookup: the current row for one key, reading only the
         files of bucket(key) whose key bounds cover it (manifest-pruned
         — the b-tree-index access path of the reference's
-        `get_single_row` endpoints, pg_db.py, on an immutable lake)."""
+        `get_single_row` endpoints, pg_db.py, on an immutable lake).
+        When the bucket is dirty and its files fit one split, the LWW
+        resolve runs in a single task with no exchange (see `scan`)."""
         return self.scan(spark, keys=[key])
 
     def changes_between(
@@ -591,65 +649,61 @@ class LakeTable:
         both sides are bucket-partitioned on that key, so the join
         shuffles each side once by its existing layout.
         """
-        a = self.scan(
-            spark, include_internal=True, include_tombstones=True, version=v_from
+        old, new = (
+            self if v == self.manifest["version"] else self.at_version(v)
+            for v in (v_from, v_to)
         )
-        b = self.scan(
-            spark, include_internal=True, include_tombstones=True, version=v_to
-        )
+        a = old.scan(spark, include_internal=True, include_tombstones=True)
+        b = new.scan(spark, include_internal=True, include_tombstones=True)
+        k = self.key_col
+        fields = [fl for fl in new._schema().fields if fl.name != k]
+        names = [_sql_name(fl.name) for fl in fields]
+        a_have = set(old._schema().names)
+
+        def side(df: DataFrame, struct_name: str, exprs: list[str]) -> DataFrame:
+            cols = ", ".join(f"{e} AS {n}" for e, n in zip(exprs, names))
+            return df.selectExpr(_sql_name(k), f"struct({cols}) AS {struct_name}")
+
         # the feed is emitted in the NEWER snapshot's schema: columns
         # added since v_from read as typed NULLs on the old side (each
         # scan already lifted ITS files to ITS schema; this aligns the
         # two schemas to each other across an evolve_schema boundary)
-        a_have = set(a.columns)
-        for fl in b.schema.fields:
-            if fl.name not in a_have:
-                a = a.withColumn(fl.name, F.lit(None).cast(fl.dataType))
-        a = a.select(*b.columns)
-        k = self.key_col
-        ocols = self.manifest["order_cols"] + [_SEQ_COL]
-        af = a.select(
-            F.col(k), F.struct(*[c for c in a.columns if c != k]).alias("_a")
-        )
-        bf = b.select(
-            F.col(k), F.struct(*[c for c in b.columns if c != k]).alias("_b")
-        )
+        a_exprs = [
+            n if fl.name in a_have else f"CAST(NULL AS {fl.dataType.simpleString()})"
+            for fl, n in zip(fields, names)
+        ]
+        af, bf = side(a, "_a", a_exprs), side(b, "_b", names)
         j = af.join(bf, k, "full_outer")
-        a_ord = F.struct(*[F.col(f"_a.{c}") for c in ocols])
-        b_ord = F.struct(*[F.col(f"_b.{c}") for c in ocols])
+        ocols = [*self.manifest["order_cols"], _SEQ_COL]
+        a_ord = "struct(" + ", ".join(f"_a.{_sql_name(c)}" for c in ocols) + ")"
+        b_ord = "struct(" + ", ".join(f"_b.{_sql_name(c)}" for c in ocols) + ")"
         # an absent key reads as "deleted since forever"
-        a_del = F.when(F.col("_a").isNull(), F.lit(True)).otherwise(
-            F.col(f"_a.{_DELETED_COL}")
-        )
-        b_del = F.when(F.col("_b").isNull(), F.lit(True)).otherwise(
-            F.col(f"_b.{_DELETED_COL}")
-        )
-        newer = F.col("_b").isNotNull() & (
-            F.col("_a").isNull() | (b_ord > a_ord)
-        )
+        a_del = f"(CASE WHEN _a IS NULL THEN true ELSE _a.{_DELETED_COL} END)"
+        b_del = f"(CASE WHEN _b IS NULL THEN true ELSE _b.{_DELETED_COL} END)"
+        newer = f"(_b IS NOT NULL AND (_a IS NULL OR {b_ord} > {a_ord}))"
         # a key ABSENT from the newer snapshot (truncate(), or a
         # tombstone GC'd after its delete) still deletes a live v_from
         # row — without this arm, truncate is invisible to the feed and
         # downstream replicas keep the rows forever
-        gone = F.col("_b").isNull() & ~a_del
+        gone = f"(_b IS NULL AND NOT {a_del})"
         op = (
-            F.when(~a_del & b_del & newer, "D")
-            .when(gone, "D")
-            .when(a_del & ~b_del & newer, "I")
-            .when(~a_del & ~b_del & newer, "U")
+            f"CASE WHEN NOT {a_del} AND {b_del} AND {newer} THEN 'D'"
+            f" WHEN {gone} THEN 'D'"
+            f" WHEN {a_del} AND NOT {b_del} AND {newer} THEN 'I'"
+            f" WHEN NOT {a_del} AND NOT {b_del} AND {newer} THEN 'U' END"
         )
         payload = [
             # for the vanished-key D the b side is all NULL: carry the
             # deleted row's own columns (consumers get its event time,
             # so the tombstone can win LWW downstream)
-            F.when(gone, F.col(f"_a.{c}"))
-            .otherwise(F.col(f"_b.{c}"))
-            .alias(c)
-            for c in b.columns
-            if c != k and c not in INTERNAL_COLS
+            f"CASE WHEN {gone} THEN _a.{n} ELSE _b.{n} END AS {n}"
+            for fl, n in zip(fields, names)
+            if fl.name not in INTERNAL_COLS
         ]
-        return j.where(op.isNotNull()).select(
-            op.alias("_change_op"), F.col(k), *payload
+        # two JVM calls over SQL text: built from Column objects, the
+        # projection cost one JVM round trip per operator
+        return j.where(f"({op}) IS NOT NULL").selectExpr(
+            f"{op} AS _change_op", _sql_name(k), *payload
         )
 
     # -------------------------------------------------------------- merge
@@ -691,7 +745,7 @@ class LakeTable:
         through a pyspark Observation).
         """
         lww = self.merge_policy == "lww"
-        cols = [*DataType.fromDDL(self._physical_ddl()).names, _BUCKET_COL]
+        cols = [*self._schema().names, _BUCKET_COL]
 
         def table_cols(df: DataFrame) -> DataFrame:
             have = set(df.columns)
