@@ -332,10 +332,11 @@ def test_col_range_timestamp_bound_compares_as_time():
 
 
 def test_col_range_on_typed_time_column_compares_in_time_order_alone():
-    """When the manifest's live schema types a stats column as timestamp
-    or date, its bounds compare in time order alone: a lower bound
-    written with a space still prunes a file that ends before it (in
-    string order the file's 'T'-separated max sorts above the bound)."""
+    """A stats column typed timestamp or date (`time_cols`, which
+    `LakeTable.plan_files` takes from the table's schema) compares in
+    time order alone: a lower bound written with a space still prunes a
+    file that ends before it (in string order the file's 'T'-separated
+    max sorts above the bound)."""
     f = {
         "path": "b0.parquet",
         "bucket": 0,
@@ -348,25 +349,75 @@ def test_col_range_on_typed_time_column_compares_in_time_order_alone():
         "order_cols": ["warc_ts"],
         "key_col": "url",
         "num_buckets": 1,
-        "current_schema_id": 2,
-        "schemas": {
-            "2": {"ddl": "url string, warc_ts timestamp, seen_at timestamp, day date"}
-        },
     }
 
     def plan(col, lo, hi):
-        return plan_files(manifest, col_ranges={col: (lo, hi)})
+        return plan_files(
+            manifest,
+            col_ranges={col: (lo, hi)},
+            time_cols={"seen_at": False, "day": True},
+        )
 
     assert plan("seen_at", "2024-01-01 08:00:00", None) == []
     assert plan("seen_at", None, "2024-01-01 04:00:00") == []
     assert plan("seen_at", "2024-01-01 06:00:00", None) == [f]
     assert plan("seen_at", dt.datetime(2024, 1, 1, 8, tzinfo=UTC), None) == []
-    # a date column counts a bound by its date, as Spark's cast does
+    # an offset moves a timestamp bound: 02:00-05:00 is 07:00 UTC
+    assert plan("seen_at", "2024-01-01T02:00:00-05:00", None) == [f]
+    assert plan("seen_at", "2024-01-01T03:00:00-05:00", None) == []
+    # a date column counts a string bound by its date as written, time
+    # and offset ignored, as Spark's cast to date does
     assert plan("day", "2024-01-02 08:00:00", None) == [f]
+    assert plan("day", "2024-01-02T23:00:00-05:00", None) == [f]
+    assert plan("day", None, "2024-01-01T01:00:00+05:00") == [f]
     assert plan("day", "2024-01-03", None) == []
     assert plan("day", None, "2023-12-31 23:00:00") == []
     # a bound that is no time keeps the file
     assert plan("seen_at", "not a time", None) == [f]
+    assert plan("day", "not a date", None) == [f]
+
+
+def test_table_plan_types_time_stats_cols_from_its_schema(spark, tmp_path):
+    """`LakeTable.plan_files` compares a timestamp or date stats column
+    in time order (a space-written lower bound prunes), and a date
+    column's offset bound keeps the rows Spark's cast to date keeps."""
+    t = LakeTable.create(
+        str(tmp_path / "t"),
+        "url string, warc_ts timestamp, seen_at timestamp, day date",
+        key_col="url",
+        num_buckets=1,
+        props={"stats_cols": "seen_at,day"},
+    )
+    t0 = dt.datetime(2024, 1, 1, 5, tzinfo=UTC)
+    t.merge(
+        spark,
+        spark.createDataFrame(
+            [
+                (
+                    "I",
+                    i + 1,
+                    f"u{i}",
+                    t0,
+                    t0 + dt.timedelta(hours=i),
+                    dt.date(2024, 1, 1 + i),
+                )
+                for i in range(3)
+            ],
+            "op string, op_seq long, url string, warc_ts timestamp, "
+            "seen_at timestamp, day date",
+        ),
+    )
+    t.compact(spark)
+    assert t.plan_files(col_ranges={"seen_at": ("2024-01-01 08:00:00", None)}) == []
+    for lo, hi in [
+        ("2024-01-02T23:00:00-05:00", None),
+        (None, "2024-01-02T01:00:00+05:00"),
+    ]:
+        rng = {"day": (lo, hi)}
+        assert t.plan_files(col_ranges=rng) == t.manifest["files"]
+        got = sorted(r["url"] for r in t.scan(spark, col_ranges=rng).collect())
+        assert got == (["u1", "u2"] if lo else ["u0", "u1"])
+    assert t.plan_files(col_ranges={"day": ("2024-01-04", None)}) == []
 
 
 def test_col_range_on_timestamp_stats_col_returns_qualifying_rows(spark, tmp_path):

@@ -37,7 +37,6 @@ path is manifest pruning, not indexes.
 
 from __future__ import annotations
 
-import re
 from datetime import datetime, timezone
 
 _C1 = 0xCC9E2D51
@@ -113,46 +112,31 @@ def _to_cmp_ts(v):
 def _file_ts_overlaps(f: dict, ts_col: str, lo, hi, day: bool = False) -> bool:
     """Closed-interval overlap in time order against a file's recorded
     bounds on a timestamp or date column (stats are `isoformat()`
-    strings). On a date column (`day`) the bounds count by their date:
-    Spark compares a date with a string bound cast to a date, so a row
-    of day D passes `>= 'D 08:00:00'`. A bound that is no time cannot
-    prove the file irrelevant."""
+    strings). On a date column (`day`) bounds and stats count by their
+    date, as Spark compares a date with a bound: a string bound is cast
+    to a date by its leading yyyy-mm-dd as written (time and offset
+    ignored), so a row of day D passes `>= 'D 08:00:00'`; a datetime
+    bound is taken by its UTC date, which keeps every file Spark's
+    timestamp compare can match. A bound that is no time cannot prove
+    the file irrelevant."""
     mn = f.get("min", {}).get(ts_col)
     mx = f.get("max", {}).get(ts_col)
     if mn is None or mx is None:
         return True  # no stats → cannot prove irrelevant
     try:
-        mn, mx, lo, hi = map(_to_cmp_ts, (mn, mx, lo, hi))
+        mn, mx, lo, hi = map(_day_bound if day else _to_cmp_ts, (mn, mx, lo, hi))
     except (TypeError, ValueError):
         return True
-    if day:
-        lo, hi = (
-            v and v.replace(hour=0, minute=0, second=0, microsecond=0) for v in (lo, hi)
-        )
     return not ((lo is not None and mx < lo) or (hi is not None and mn > hi))
 
 
-_TIME_TYPES = {"timestamp", "timestamp_ntz", "timestamp_ltz", "date"}
-
-
-def _time_cols(manifest: dict) -> dict[str, bool]:
-    """{column: is_date} for the columns the manifest's live schema
-    types as timestamp or date; empty when it records no schema."""
-    sid = str(manifest.get("current_schema_id"))
-    ddl = manifest.get("schemas", {}).get(sid, {}).get("ddl", "")
-    out: dict[str, bool] = {}
-    depth = start = 0
-    for i, ch in enumerate(ddl + ","):
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            m = re.match(r"\s*(`[^`]+`|[^\s:]+)\s*:?\s*(\w+)", ddl[start:i])
-            if m and m.group(2).lower() in _TIME_TYPES:
-                out[m.group(1).strip("`")] = m.group(2).lower() == "date"
-            start = i + 1
-    return out
+def _day_bound(v):
+    """A bound or stat of a date column as the midnight of the date
+    Spark compares it by (see `_file_ts_overlaps`)."""
+    if isinstance(v, str):
+        return datetime.fromisoformat(v[:10])
+    v = _to_cmp_ts(v)
+    return v and v.replace(hour=0, minute=0, second=0, microsecond=0)
 
 
 def _num(v) -> bool:
@@ -161,8 +145,8 @@ def _num(v) -> bool:
 
 def _str_below(a: str, b: str) -> bool:
     """``a < b`` in string order and, when both parse as ISO timestamps,
-    in time order too: the safe test for a column whose type the
-    manifest does not record. A timestamp column's stats are
+    in time order too: the safe test for a column not known to be a
+    timestamp or date. A timestamp column's stats are
     ``isoformat()`` strings ('T' separator, UTC offset), which string
     order misranks against a bound written '2024-01-01 06:00:00';
     requiring both orders keeps the test safe for string columns that
@@ -177,7 +161,7 @@ def _str_below(a: str, b: str) -> bool:
 
 def _file_col_overlaps(f: dict, col: str, lo, hi, time_cols: dict) -> bool:
     """Closed-interval overlap test against a file's recorded bounds for
-    an arbitrary stats column. A column the live schema types as
+    an arbitrary stats column. A column the table's schema types as
     timestamp or date (`time_cols`) compares in time order alone.
     Otherwise conservative: prunes only when the bound and the stat are
     the SAME comparable family (number/number or string/string; ISO
@@ -229,6 +213,7 @@ def plan_files(
     keys: list[str] | None = None,
     col_ranges: dict | None = None,
     buckets: set | None = None,
+    time_cols: dict[str, bool] | None = None,
 ) -> list[dict]:
     """The minimal file subset a scan with these filters must read
     (see module docstring for the safety argument). Pure manifest math —
@@ -246,7 +231,11 @@ def plan_files(
     `buckets`: explicit bucket-id subset (incremental-view refresh reads
     only the buckets a commit touched). Trivially safe: every version of
     a key lives in bucket(key), so whole-bucket selection preserves LWW
-    resolution exactly."""
+    resolution exactly.
+
+    `time_cols`: {column: is_date} for the columns the table's schema
+    types as timestamp or date; their `col_ranges` bounds compare in
+    time order alone (`LakeTable.plan_files` passes them)."""
     files = manifest["files"]
     if buckets is not None:
         files = [f for f in files if f["bucket"] in buckets]
@@ -267,9 +256,8 @@ def plan_files(
         }
 
     bucket_col_keep: set[int] = set()
-    time_cols: dict[str, bool] = {}
+    time_cols = time_cols or {}
     if col_ranges:
-        time_cols = _time_cols(manifest)
         bucket_col_keep = {
             f["bucket"]
             for f in files

@@ -55,7 +55,7 @@ from dataclasses import dataclass, field
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, StructType
+from pyspark.sql.types import DataType, DateType, StructType, TimestampType
 
 from tiger_etl_spark.session import empty_frame
 
@@ -533,16 +533,23 @@ class LakeTable:
         the file subset a scan with these filters must read, from the
         per-file (key, event-time) bounds recorded at commit —
         `col_ranges` additionally prunes on any column named in the
-        `stats_cols` prop. See lake/pruning.py for the dirty-bucket
-        safety argument."""
+        `stats_cols` prop, in time order on the columns the live schema
+        types as timestamp or date. See lake/pruning.py for the
+        dirty-bucket safety argument."""
         from tiger_etl_spark.lake.pruning import plan_files
 
+        time_cols = {
+            f.name: isinstance(f.dataType, DateType)
+            for f in (self._schema().fields if col_ranges else ())
+            if isinstance(f.dataType, (TimestampType, DateType))
+        }
         return plan_files(
             self.manifest,
             ts_range=ts_range,
             keys=keys,
             col_ranges=col_ranges,
             buckets=buckets,
+            time_cols=time_cols,
         )
 
     def scan(
