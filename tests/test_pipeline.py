@@ -565,3 +565,75 @@ def test_ingest_urlgate_enrichment(spark, tmp_path, change_dir):
     }
     assert stored == recomputed
     assert all(v[0] is not None for v in stored.values())
+
+
+def test_validation_split_dead_letters_and_lineage_pinned(spark, tmp_path):
+    """One hand-built batch through `apply_changes`: a row per check, a
+    row failing two checks (reasons comma-joined in check order), a NULL
+    op, a v1 row (`body`, no `lang`) and a row late behind the prior
+    batch's watermark. Pins the dead-letter reasons, the mapped v1 row,
+    the lineage counters, and that a fixer-less replay keeps the
+    reasons."""
+    import datetime as dt
+
+    from tiger_etl_spark.cdc.pipeline import replay_quarantine
+    from tiger_etl_spark.functions.text import extract_text_py
+
+    ts = dt.datetime(2025, 3, 1, tzinfo=dt.timezone.utc)
+    table = create_pages_table(str(tmp_path / "pin"), num_buckets=2)
+    seed = [("I", 1, "http://p/seed", ts, None, b"<p>seed</p>", "en", 11, 2, "f0")]
+    apply_changes(spark, table, spark.createDataFrame(seed, EVENTS_READ_SCHEMA), 0)
+
+    late_ts = ts - dt.timedelta(hours=48)
+    # (op, op_seq, url, warc_ts, body, html, lang, content_len, schema_id, batch_file)
+    rows = [
+        ("I", 2, "", ts, None, b"<p>a</p>", "en", 8, 2, "f1"),
+        ("I", 0, "http://p/b", ts, None, b"<p>b</p>", "en", 8, 2, "f2"),
+        ("X", 3, "http://p/c", ts, None, b"<p>c</p>", "en", 8, 2, "f2"),
+        ("I", 4, "http://p/d", None, None, b"<p>d</p>", "en", 8, 2, "f2"),
+        ("I", -1, "", ts, None, b"<p>e</p>", "en", 8, 2, "f2"),
+        (None, 5, "http://p/f", ts, None, b"<p>f</p>", "en", 8, 2, "f3"),
+        ("U", 6, "http://p/v1", ts, b"<p>old body</p>", None, None, 15, 1, "f1"),
+        ("I", 7, "http://p/late", late_ts, None, b"<p>late</p>", "de", 11, 2, "f4"),
+    ]
+    rec = apply_changes(
+        spark, table, spark.createDataFrame(rows, EVENTS_READ_SCHEMA), 1
+    )
+
+    want_reasons = {
+        2: "empty_url",
+        0: "nonpositive_op_seq",
+        3: "bad_op",
+        4: "null_warc_ts",
+        -1: "empty_url,nonpositive_op_seq",
+        5: "bad_op",
+    }
+
+    def dead_letters():
+        return {
+            r["op_seq"]: r["_invalid_reasons"]
+            for r in read_quarantine(spark, table).collect()
+        }
+
+    assert dead_letters() == want_reasons
+    assert rec.rows_in == len(rows)
+    assert rec.rows_quarantined == len(want_reasons)
+    assert rec.rows_late == 1
+    assert rec.bytes_in == sum(
+        len(html if html is not None else body) + len(url)
+        for _, _, url, _, body, html, *_ in rows
+    )
+    assert (rec.offset_start, rec.offset_end) == ("f1", "f4")
+
+    got = {r["url"]: r for r in table.scan(spark).collect()}
+    assert set(got) == {"http://p/seed", "http://p/v1", "http://p/late"}
+    v1 = got["http://p/v1"]
+    assert bytes(v1["html"]) == b"<p>old body</p>"
+    assert v1["lang"] is None and v1["content_len"] == 15
+    assert v1["text"] == extract_text_py(b"<p>old body</p>")
+    assert got["http://p/late"]["lang"] == "de"  # late rows still apply
+
+    res = replay_quarantine(spark, table)
+    assert res["rows_applied"] == 0
+    assert res["rows_still_invalid"] == len(want_reasons)
+    assert dead_letters() == want_reasons

@@ -66,6 +66,22 @@ POINTER_PROTOCOL_HOMES = {
 SPARK_READ = re.compile(r"\bspark\.read\b")
 
 
+# One validation pass: cdc/validate.py alone spells the checks, the
+# dead-letter reason string (a string, never an array to join later)
+# and the validity predicate, and `split_valid` is the one function that
+# puts the reasons on rows.
+RETIRED_VALIDATION = re.compile(
+    r"\bsize\(\s*[\"']_invalid_reasons|array_join\(\s*[\"']_invalid_reasons"
+    r"|\bwith_validation\b|\b_checks\(\)"
+)
+REASON_SPELLING = re.compile(
+    r"[\"'](?:empty_url|nonpositive_op_seq|bad_op|null_warc_ts)[\"']"
+    r"|_invalid_reasons\s*=\s*''"
+)
+ATTACH_REASONS = re.compile(r"\bINVALID_REASONS\b")
+VALIDATE_PY = "tiger_etl_spark/cdc/validate.py"
+
+
 def _engine_hits(pattern: re.Pattern, skip: str | None = None) -> list[str]:
     return [
         f"{path.relative_to(ROOT)}:{text.count(chr(10), 0, m.start()) + 1}"
@@ -161,3 +177,14 @@ def test_one_reader_of_table_data_files():
     assert SPARK_READ.search("df = spark.read.schema(ddl).parquet(*paths)")
     readers = _enclosing_functions(SPARK_READ, "tiger_etl_spark/lake")
     assert readers == [("tiger_etl_spark/lake/table.py", "_read_files")], readers
+
+
+def test_one_validation_pass():
+    assert RETIRED_VALIDATION.search('F.size("_invalid_reasons") == 0')
+    assert RETIRED_VALIDATION.search('F.array_join("_invalid_reasons", ",")')
+    assert not _engine_hits(RETIRED_VALIDATION), _engine_hits(RETIRED_VALIDATION)
+    assert REASON_SPELLING.search("IS_VALID = \"_invalid_reasons = ''\"")
+    homes = {hit.rsplit(":", 1)[0] for hit in _engine_hits(REASON_SPELLING)}
+    assert homes == {VALIDATE_PY}, homes
+    uses = set(_enclosing_functions(ATTACH_REASONS, "tiger_etl_spark"))
+    assert uses == {(VALIDATE_PY, None), (VALIDATE_PY, "split_valid")}, uses

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from tiger_etl_spark.cdc.schema_evolution import map_to_live_schema
 from tiger_etl_spark.cdc.schemas import EVENTS_READ_SCHEMA, PAGES_SCHEMA
-from tiger_etl_spark.cdc.validate import with_validation
+from tiger_etl_spark.cdc.validate import IS_VALID, split_valid
 from tiger_etl_spark.functions.text import extract_text_udf
 from tiger_etl_spark.lake import LakeTable
 from tiger_etl_spark.lake.wap import audit_staged
@@ -293,24 +293,12 @@ def _revalidate(spark: SparkSession, path: str, fixer) -> tuple:
     """The replay preamble: read the dead-lettered wire rows under
     `path`, apply the optional `fixer(df) -> df` repair, re-validate.
     Returns (now-valid rows in the live schema, still-invalid rows in
-    dead-letter layout, n_ok, n_bad); the counts are one job."""
+    dead-letter layout, n_ok, n_bad)."""
     df = spark.read.schema(EVENTS_READ_SCHEMA).parquet(path)
     if fixer is not None:
         df = fixer(df)
-    checked = with_validation(df)
-    is_valid = F.size("_invalid_reasons") == 0
-    counts = checked.select(
-        F.sum(is_valid.cast("long")).alias("ok"),
-        F.sum((~is_valid).cast("long")).alias("bad"),
-    ).first()
-    return (
-        map_to_live_schema(checked.where(is_valid).drop("_invalid_reasons")),
-        checked.where(~is_valid).withColumn(
-            "_invalid_reasons", F.array_join("_invalid_reasons", ",")
-        ),
-        counts["ok"] or 0,
-        counts["bad"] or 0,
-    )
+    valid, still = split_valid(df)
+    return map_to_live_schema(valid), still, valid.count(), still.count()
 
 
 # Applied-batch bookkeeping is BOUNDED: Structured Streaming delivers
@@ -372,49 +360,45 @@ def apply_changes(
         )
 
     t0 = time.time()
-    # ONE Spark job per micro-batch: every lineage counter rides the
-    # write job as an Observation (CollectMetrics on the scan side of the
-    # shuffle) instead of its own aggregation pass — per-batch driver
-    # jobs are the fixed cost that bounds streaming throughput and
-    # scaling efficiency.
-    checked = with_validation(events)
-    is_valid = F.size("_invalid_reasons") == 0
-
     # late-data accounting per streaming semantics: an event is late if
     # it arrives behind the watermark established by PRIOR batches
     # (high_watermark − horizon). Late rows are still applied — the LWW
     # guard makes stale ones no-ops — but counted to lineage.
     prev_wm = table.props.get("high_watermark")
+    late = F.lit(False)
     if prev_wm is not None:
-        late_pred = F.col("warc_ts") < (
-            F.lit(prev_wm).cast("timestamp")
-            - F.expr(f"INTERVAL {watermark_hours} HOURS")
+        late = F.col("warc_ts") < F.lit(prev_wm).cast("timestamp") - F.expr(
+            f"INTERVAL {int(watermark_hours)} HOURS"
         )
-    else:
-        late_pred = F.lit(False)
-
-    def metric_cols() -> list:
-        return [
-            F.count(F.lit(1)).alias("rows_in"),
-            F.sum(
-                F.coalesce(F.length("html"), F.length("body"), F.lit(0))
-                + F.coalesce(F.length("url"), F.lit(0))
-            ).alias("bytes_in"),
-            F.min("batch_file").alias("offset_start"),
-            F.max("batch_file").alias("offset_end"),
-            # watermark advances on VALID rows only: one quarantined event
-            # with a bogus far-future timestamp would otherwise poison the
-            # never-regressing high_watermark and mark every later event
-            # late (and mislead tombstone-horizon choices) forever
-            F.max(F.when(is_valid, F.col("warc_ts"))).alias("max_ts"),
-            F.sum((~is_valid).cast("long")).alias("n_quarantined"),
-            F.sum((is_valid & late_pred).cast("long")).alias("n_late"),
-        ]
-
+    metrics = [
+        F.expr("count(1) AS rows_in"),
+        F.expr(
+            "sum(coalesce(length(html), length(body), 0)"
+            " + coalesce(length(url), 0)) AS bytes_in"
+        ),
+        F.expr("min(batch_file) AS offset_start"),
+        F.expr("max(batch_file) AS offset_end"),
+        # watermark advances on VALID rows only: one quarantined event
+        # with a bogus far-future timestamp would otherwise poison the
+        # never-regressing high_watermark and mark every later event
+        # late (and mislead tombstone-horizon choices) forever
+        F.expr(f"max(IF({IS_VALID}, warc_ts, NULL)) AS max_ts"),
+        F.expr(f"count_if(NOT ({IS_VALID})) AS n_quarantined"),
+        F.count_if(F.expr(IS_VALID) & late).alias("n_late"),
+    ]
+    # ONE Spark job per micro-batch: every lineage counter rides the
+    # write job as an Observation (CollectMetrics on the checked frame,
+    # on the scan side of the shuffle) instead of its own aggregation
+    # pass — per-batch driver jobs are the fixed cost that bounds
+    # streaming throughput and scaling efficiency.
     obs = Observation(f"lineage_b{batch_id}")
-    unobserved = checked  # fallback plan without the CollectMetrics node
-    checked = checked.observe(obs, *metric_cols())
-    valid = checked.where(is_valid).drop("_invalid_reasons")
+    unobserved: list[DataFrame] = []  # the checked frame, for the fallback
+
+    def observe(checked: DataFrame) -> DataFrame:
+        unobserved.append(checked)
+        return checked.observe(obs, *metrics)
+
+    valid, quarantined = split_valid(events, observe)
     mapped = map_to_live_schema(valid)
 
     record = LineageRecord(
@@ -432,9 +416,7 @@ def apply_changes(
 
     def write_quarantine() -> None:
         try:
-            with_validation(events).where(~is_valid).withColumn(
-                "_invalid_reasons", F.array_join("_invalid_reasons", ",")
-            ).write.mode("overwrite").parquet(qdir)
+            quarantined.write.mode("overwrite").parquet(qdir)
         except Exception as e:  # surfaced at join time
             q_err.append(e)
 
@@ -460,7 +442,7 @@ def apply_changes(
             # directly; for a genuinely empty batch the recompute is an
             # empty scan, so the extra pass is paid only in this rare
             # degenerate case.
-            m = unobserved.agg(*metric_cols()).first().asDict()
+            m = unobserved[0].agg(*metrics).first().asDict()
         record.offset_start = m["offset_start"] or ""
         record.offset_end = m["offset_end"] or ""
         record.rows_in = m["rows_in"]

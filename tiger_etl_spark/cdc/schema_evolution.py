@@ -9,12 +9,13 @@ event to the live table schema *before* MERGE: renames resolved
 (``content_len`` int→long, already widened by the superset read schema).
 
 The registry is data, not code, so new schema versions are one dict entry.
+Each lift is SQL text, composed from the registry once at import into
+one projection of the live columns (`LIVE_PROJECTION`).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from tiger_etl_spark.cdc.schemas import NORMALIZED_EVENT_COLUMNS
 
@@ -31,20 +32,27 @@ SCHEMA_REGISTRY: dict[int, dict] = {
 LIVE_SCHEMA_ID = 2
 
 
-def map_to_live_schema(df: DataFrame) -> DataFrame:
-    """Vectorized, branch-per-schema-id via CASE expressions — one pass,
-    no per-version shuffles or splits."""
-    out = df
+def _lift(col: str) -> str:
+    """SQL text of live column `col`: per older schema id, a CASE on
+    `schema_id` per rename and absent column, then the casts."""
+    expr = col
     for sid, rules in SCHEMA_REGISTRY.items():
         if sid == LIVE_SCHEMA_ID:
             continue
-        is_v = F.col("schema_id") == sid
-        for old, new in rules["renames"].items():
-            out = out.withColumn(new, F.when(is_v, F.col(old)).otherwise(F.col(new)))
-        for col in rules["absent"]:
-            out = out.withColumn(
-                col, F.when(is_v, F.lit(None)).otherwise(F.col(col))
-            )
-        for col, dtype in rules["casts"].items():
-            out = out.withColumn(col, F.col(col).cast(dtype))
-    return out.select(*[c for c in NORMALIZED_EVENT_COLUMNS if c in out.columns])
+        old = {new: old for old, new in rules["renames"].items()}.get(col)
+        if old:
+            expr = f"CASE WHEN schema_id = {sid} THEN {old} ELSE {expr} END"
+        if col in rules["absent"]:
+            expr = f"CASE WHEN schema_id = {sid} THEN NULL ELSE {expr} END"
+        if col in rules["casts"]:
+            expr = f"CAST({expr} AS {rules['casts'][col]})"
+    return f"{expr} AS {col}"
+
+
+LIVE_PROJECTION = [_lift(c) for c in NORMALIZED_EVENT_COLUMNS]
+
+
+def map_to_live_schema(df: DataFrame) -> DataFrame:
+    """Vectorized, branch-per-schema-id via CASE expressions — one
+    projection, no per-version shuffles or splits."""
+    return df.selectExpr(*LIVE_PROJECTION)

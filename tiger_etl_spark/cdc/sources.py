@@ -172,22 +172,27 @@ def _decode_warc(df: DataFrame) -> DataFrame:
     )
 
 
+def _read_events(reader, path: str, file_format: str) -> DataFrame:
+    """`path` in EVENTS_READ_SCHEMA shape, read by `reader` — a batch
+    `DataFrameReader` or a streaming `DataStreamReader`; both spell
+    every format's read the same way."""
+    if file_format == "parquet":
+        return reader.schema(EVENTS_READ_SCHEMA).parquet(path)
+    if file_format == "jsonl":
+        return _decode_jsonl(reader.schema(EVENTS_JSONL_SCHEMA).json(path))
+    if file_format == "warc":
+        return _decode_warc(reader.option("lineSep", "\n\n").text(path))
+    if file_format == "debezium":
+        return _decode_debezium(reader.schema(EVENTS_DEBEZIUM_SCHEMA).json(path))
+    raise ValueError(f"unsupported change-file format: {file_format}")
+
+
 def read_change_batch(
     spark: SparkSession, path: str, file_format: str = "parquet"
 ) -> DataFrame:
     """One bounded batch of change events from a file (or glob) in
     EVENTS_READ_SCHEMA shape."""
-    if file_format == "parquet":
-        return spark.read.schema(EVENTS_READ_SCHEMA).parquet(path)
-    if file_format == "jsonl":
-        return _decode_jsonl(spark.read.schema(EVENTS_JSONL_SCHEMA).json(path))
-    if file_format == "warc":
-        return _decode_warc(spark.read.option("lineSep", "\n\n").text(path))
-    if file_format == "debezium":
-        return _decode_debezium(
-            spark.read.schema(EVENTS_DEBEZIUM_SCHEMA).json(path)
-        )
-    raise ValueError(f"unsupported change-file format: {file_format}")
+    return _read_events(spark.read, path, file_format)
 
 
 def read_change_stream(
@@ -203,15 +208,4 @@ def read_change_stream(
         spark.readStream.option("maxFilesPerTrigger", max_files_per_trigger)
         .option("latestFirst", "false")
     )
-    if file_format == "parquet":
-        return reader.schema(EVENTS_READ_SCHEMA).parquet(change_dir)
-    if file_format == "jsonl":
-        src = reader.schema(EVENTS_JSONL_SCHEMA).json(change_dir)
-        return _decode_jsonl(src)
-    if file_format == "warc":
-        raw = reader.option("lineSep", "\n\n").text(change_dir)
-        return _decode_warc(raw)
-    if file_format == "debezium":
-        src = reader.schema(EVENTS_DEBEZIUM_SCHEMA).json(change_dir)
-        return _decode_debezium(src)
-    raise ValueError(f"unsupported change-file format: {file_format}")
+    return _read_events(reader, change_dir, file_format)

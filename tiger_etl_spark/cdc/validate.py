@@ -4,8 +4,12 @@ Reference analog: Pydantic wire-schema validation
 (``system/system/database_functions/sessions_management/validations.py:49-430``
 — positive-int ids :52-57, charset :88-102, format checks :104-114),
 which raises per row. Spark can't raise per-row, so invalid rows are
-*routed*: boolean check columns → a reason array → quarantine table
-(SURVEY.md §1.3, §4 custom-work #5). Rules per FIXTURES.md §6.
+*routed*: each check is SQL text, and the checks a row fails become its
+dead-letter string `_invalid_reasons` (the failed checks' names,
+comma-joined in check order; '' for a valid row) → quarantine table
+(SURVEY.md §1.3, §4 custom-work #5). Rules per FIXTURES.md §6. This
+module is the one place that spells the checks, the reason string and
+the validity predicate.
 """
 
 from __future__ import annotations
@@ -15,31 +19,31 @@ from pyspark.sql import functions as F
 
 VALID_OPS = ("I", "U", "D")
 
-def _checks() -> list[tuple[str, F.Column]]:
-    """(reason, predicate-for-violation) — all JVM-side expressions.
-    Built lazily: Column construction needs an active SparkContext."""
-    return [
-        ("empty_url", F.col("url").isNull() | (F.length("url") == 0)),
-        ("nonpositive_op_seq", F.col("op_seq").isNull() | (F.col("op_seq") <= 0)),
-        ("bad_op", F.col("op").isNull() | ~F.col("op").isin(*VALID_OPS)),
-        ("null_warc_ts", F.col("warc_ts").isNull()),
-    ]
+# (reason, SQL predicate true when a row violates the rule)
+CHECKS = (
+    ("empty_url", "url IS NULL OR length(url) = 0"),
+    ("nonpositive_op_seq", "op_seq IS NULL OR op_seq <= 0"),
+    ("bad_op", f"op IS NULL OR op NOT IN {VALID_OPS!r}"),
+    ("null_warc_ts", "warc_ts IS NULL"),
+)
+
+INVALID_REASONS = "concat_ws(',', {})".format(
+    ", ".join(f"CASE WHEN {pred} THEN '{name}' END" for name, pred in CHECKS)
+)
+
+IS_VALID = "_invalid_reasons = ''"
 
 
-def with_validation(df: DataFrame) -> DataFrame:
-    reasons = F.array_compact(
-        F.array(*[F.when(pred, F.lit(name)) for name, pred in _checks()])
+def split_valid(df: DataFrame, observe=None) -> tuple[DataFrame, DataFrame]:
+    """→ (valid rows, dead-letter rows with `_invalid_reasons`): two
+    complementary filters over one checked frame (an `_invalid_reasons`
+    column `df` already has is replaced). `observe(checked)`, when
+    given, returns the frame the valid leg is cut from — apply_changes
+    puts its lineage Observation there, so the metrics ride the write
+    job alone and the dead-letter leg reads the unobserved frame."""
+    checked = df.withColumn("_invalid_reasons", F.expr(INVALID_REASONS))
+    kept = observe(checked) if observe else checked
+    return (
+        kept.where(IS_VALID).drop("_invalid_reasons"),
+        checked.where(f"NOT ({IS_VALID})"),
     )
-    return df.withColumn("_invalid_reasons", reasons)
-
-
-def split_valid(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """→ (valid rows, quarantine rows with `_invalid_reasons`).
-
-    One pass of check expressions; the two outputs are complementary
-    filters over the same scan (Catalyst reuses the exchange under AQE).
-    """
-    checked = with_validation(df)
-    valid = checked.where(F.size("_invalid_reasons") == 0).drop("_invalid_reasons")
-    quarantined = checked.where(F.size("_invalid_reasons") > 0)
-    return valid, quarantined

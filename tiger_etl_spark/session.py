@@ -11,7 +11,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -19,17 +18,20 @@ def empty_frame(spark: SparkSession, schema: StructType) -> DataFrame:
     """A zero-row DataFrame of `schema` that the optimizer plans as an
     empty local relation: no partitions, no tasks, no Python worker.
     (``createDataFrame`` over an empty list is a Python RDD that starts
-    one worker task per core.) Top-level fields come out nullable, as
-    every DDL-parsed field is."""
+    one worker task per core.) One projection of typed NULLs, so the
+    build costs a few JVM calls whatever the field count; `to` puts the
+    field metadata back. Every field of `schema` must be nullable, as
+    every DDL-parsed field is: `to` refuses a non-nullable one."""
     return (
         spark.range(1)
-        .select(
+        .selectExpr(
             *[
-                F.lit(None).cast(f.dataType).alias(f.name, metadata=f.metadata)
+                f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
                 for f in schema.fields
             ]
         )
-        .where(F.lit(False))
+        .where("false")
+        .to(schema)
     )
 
 
